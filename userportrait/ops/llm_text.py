@@ -18,8 +18,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load, text_partitions
+from ..catalog import load, path_bytes, width
 from ..registry import op
+
+# Per-task input of the CPU-heavy per-row text stages (tokenize, explode,
+# fold over documents, and frames row-proportional to them), in PARQUET
+# bytes of the documents table: 64 KiB is ~0.25-0.5 MB of raw text after
+# compression, roughly 0.5-2 s of interpreted work per task. Sizing the
+# fan-out from volume keeps a toy corpus from paying one task round-trip
+# per core (q_bm25 at 8 cores ran in 0.39x of its 32-core time when the
+# width was the fleet width outright), while corpus-scale inputs still
+# reach the full fleet width.
+TEXT_TASK_BYTES = 65536
 
 
 def _tokens(doc_df: DataFrame) -> DataFrame:
@@ -320,7 +330,8 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # repartition: trigram explode is generated single-core off a one-split
     # scan at test scale (see minhash_sig_wide note)
-    d = load(spark, sf_dir).documents.repartition(text_partitions(spark, sf_dir), "doc_id")
+    nt = width(spark, path_bytes(f"{sf_dir}/documents.parquet"), TEXT_TASK_BYTES)
+    d = load(spark, sf_dir).documents.repartition(nt, "doc_id")
     tri = d.select(
         "doc_id",
         "lang",
@@ -372,7 +383,8 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup; one narrow map stage, no shuffle at all."""
     # repartition: the per-char fold is interpreted (CodegenFallback) and the
     # scan is one split at test scale — spread it across cores
-    d = load(spark, sf_dir).documents.repartition(text_partitions(spark, sf_dir), "doc_id")
+    nt = width(spark, path_bytes(f"{sf_dir}/documents.parquet"), TEXT_TASK_BYTES)
+    d = load(spark, sf_dir).documents.repartition(nt, "doc_id")
     chars = F.expr("transform(sequence(1, length(text)), i -> cast(ascii(substring(text, i, 1)) as bigint))")
     rolling = F.aggregate(chars, F.lit(0).cast("bigint"), lambda a, c: (a * 31 + c) % 1000000007)
     shingle_md5s = F.expr(
@@ -465,8 +477,9 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc fans out to thousands of grams), so no hard broadcast hint: AQE
     broadcasts it at its measured size, and the corpus side streams its
     n-grams through that join in one narrow pass either way."""
+    nt = width(spark, path_bytes(f"{sf_dir}/documents.parquet"), TEXT_TASK_BYTES)
     d = load(spark, sf_dir).documents
-    grams = d.repartition(text_partitions(spark, sf_dir), "doc_id").select(
+    grams = d.repartition(nt, "doc_id").select(
         "doc_id",
         F.explode(
             F.expr(
@@ -516,9 +529,10 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     and unigram-context counts are map-side-combined aggregates; scoring
     is two hash joins back onto the bigram stream. log2 ulp drift between
     engines is absorbed by round-4 on the per-doc mean."""
+    nt = width(spark, path_bytes(f"{sf_dir}/documents.parquet"), TEXT_TASK_BYTES)
     d = load(spark, sf_dir).documents
     bg = (
-        d.repartition(text_partitions(spark, sf_dir), "doc_id")
+        d.repartition(nt, "doc_id")
         .select("doc_id", F.split("text", " ").alias("toks"))
         .where(F.size("toks") >= 2)
         .select(
@@ -580,7 +594,7 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_bm25_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-3 keywords under Okapi BM25 (k1=1.2, b=0.75,
     Lucene-style ln(1 + (N-df+0.5)/(df+0.5)) idf) — the retrieval-grade
-    keyword extractor (r8 addition). Differs from text_tfidf's ln(N/df)
+    keyword extractor. Differs from text_tfidf's ln(N/df)
     top-1 in both scorer (tf saturation + document-length normalization —
     long word-soup docs stop dominating on raw tf) and product shape
     (ranked per-doc keyword triples, the corpus-search / doc-metadata
@@ -599,15 +613,15 @@ def text_bm25_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage, and a single-split documents scan (the one-row-group fixture
     # files, or any small-file corner of a real layout) serializes the
     # whole corpus tokenization into one task — in BOTH branches that
-    # derive tf (r14 measurement: ~1 s single-task stages). Same
+    # derive tf (measured: ~1 s single-task stages). Same
     # convention as text_entropy / text_lang_id / text_contamination.
-    d = load(spark, sf_dir).documents.repartition(text_partitions(spark, sf_dir), "doc_id")
+    nt = width(spark, path_bytes(f"{sf_dir}/documents.parquet"), TEXT_TASK_BYTES)
+    d = load(spark, sf_dir).documents.repartition(nt, "doc_id")
     tf = _tokens(d).groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    # Both global scalars from ONE documents pass (r14, guide §7.2
-    # "duplicated subtrees"): the r13 `tot` re-derived the whole
-    # tokenize → explode → groupBy tf table just to sum it (profile: a
-    # second ~0.3 s 32-task tokenize stage per run at sf0.1; a second
-    # full-corpus tokenization at scale). Σ tf == Σ per-doc non-empty
+    # Both global scalars from ONE documents pass: deriving `tot` from the
+    # tf table would re-run the whole tokenize → explode → groupBy just to
+    # sum it (a second ~0.3 s 32-task tokenize stage per run at sf0.1; a
+    # second full-corpus tokenization at scale). Σ tf == Σ per-doc non-empty
     # token counts, and the per-doc count is a map-side array expression
     # on the same scan that counts n — integer-exact, null text counts 0
     # tokens exactly as explode drops it.
@@ -630,14 +644,14 @@ def text_bm25_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The two window exchanges (token, then doc_id) are ENSURE_REQUIREMENTS
     # exchanges over the compact (doc, token, tf) table — small in BYTES, so
     # AQE coalesces each to one partition and the full-table sorts under the
-    # windows run serially (r14: two ~0.2 s single-task stages at sf0.1).
+    # windows run serially (measured: two ~0.2 s single-task stages at sf0.1).
     # User-specified widths are exempt; the windows reuse these exchanges
     # (same key), so no shuffle is added — the doc_id one also carries the
     # final rank window.
     scored = (
-        tf.repartition(text_partitions(spark, sf_dir), "token")
+        tf.repartition(nt, "token")
         .withColumn("df", F.count("*").over(w_tok))
-        .repartition(text_partitions(spark, sf_dir), "doc_id")
+        .repartition(nt, "doc_id")
         .withColumn("dl", F.sum("tf").over(w_doc))
         .crossJoin(F.broadcast(n))
         .withColumn("score", F.round(idf * tfc, 4))

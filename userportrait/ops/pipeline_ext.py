@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load, pin
+from ..catalog import load, pin, width
 from ..registry import op
 from .llm_dedup import N_SHARED_MIN, N_SHARED_SQL, _CAND_CTE_DUCK, _N_SHARED_DUCK, minhash_candidates
 
@@ -1029,21 +1029,21 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     # The wedge stage materializes Σ C(deg_mid, 2) rows — 148M at sf0.1
     # (avg co-purchase degree ~120), growing linearly with corpus copies.
     # 32 shuffle partitions put ~46M wedge rows per task at 10× and the
-    # aggregate runs out of execution memory (measured: the r11 scale10
+    # aggregate runs out of execution memory (measured: the scale-10
     # ladder OOM'd); partition the midpoint join wide enough that a task's
     # wedge slice (and the pipelined partial-agg hash state it feeds) stays
     # inside a task's share of execution memory. wedge_partitions sizes
     # this from the measured wedge volume (Σ C(deg, 2), one scalar over
-    # the pinned edge set); spark.userportrait.wedge.partitions overrides.
+    # the pinned edge set).
     adj = pairs.select(F.col("u").alias("n"), F.col("v").alias("nbr")).unionAll(
         pairs.select(F.col("v").alias("n"), F.col("u").alias("nbr"))
     )
     # deg feeds three consumers (the width scalar, du, dv) — pin one eval
     deg = pin(adj.groupBy("n").agg(F.count("*").cast("bigint").alias("d")))
-    width = wedge_partitions(deg)
-    adjw = adj.repartition(width, "nbr")
+    nparts = wedge_partitions(deg)
+    adjw = adj.repartition(nparts, "nbr")
     wa, wb = adjw.alias("wa"), adjw.alias("wb")
-    wedge = _wedge_common(wa, wb, width)
+    wedge = _wedge_common(wa, wb, nparts)
     cand = wedge.join(pairs, ["u", "v"], "left_anti")
     du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
@@ -1069,39 +1069,23 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-WEDGE_ROWS_PER_TASK = 2_000_000  # r11 ladder: 1.48B wedges / 1024 tasks ≈ 1.45M/task ran inside a 0.75g/thread JVM share
+WEDGE_ROWS_PER_TASK = 2_000_000  # scale ladder: 1.48B wedges / 1024 tasks ≈ 1.45M/task ran inside a 0.75g/thread JVM share
 
 
 def wedge_partitions(deg: "DataFrame", cap: int | None = None) -> int:
     """Partition width for the wedge join + count stages, sized by wedge
-    VOLUME rather than the session default (the r11 lesson, twice: the
-    sorter starved at 32 partitions on a 1.48B-wedge graph, then the
-    final agg OOM'd at 32 partitions on the 21.5B-wedge skewed replica).
-    ``spark.userportrait.wedge.partitions`` overrides outright when it is
-    a positive integer (the deployment knob; the ladder scripts pin it) —
-    anything else (non-numeric, zero, negative) is rejected with a
-    warning and falls through to the estimate rather than raising at plan
-    time or producing an invalid repartition; otherwise estimate
-    Σ C(min(deg, cap), 2) from the degree frame — one scalar aggregate
-    over an already-pinned edge set — and size tasks to
-    WEDGE_ROWS_PER_TASK wedge rows. The floor is the session shuffle
-    width only when the estimate can actually use it: a small graph on a
-    deployment with a large session shuffle width floors at
-    defaultParallelism (keep every core busy) instead of inheriting the
-    full fact-table width for a few million wedges."""
-    from ..catalog import positive_int_conf
-
-    spark = deg.sparkSession
-    explicit = positive_int_conf(spark, "spark.userportrait.wedge.partitions")
-    if explicit is not None:
-        return explicit
+    VOLUME rather than the fleet width alone: at 32 partitions the sorter
+    starved on a 1.48B-wedge graph, and the final agg OOM'd on a
+    21.5B-wedge skewed replica. Estimates Σ C(min(deg, cap), 2) from the
+    degree frame — one scalar aggregate over an already-pinned edge set —
+    and sizes tasks to WEDGE_ROWS_PER_TASK wedge rows, capped at 65536.
+    The floor is ``catalog.width`` (keep every core busy): a small graph
+    on a session with a large shuffle width does not inherit the full
+    fact-table width for a few million wedges."""
     d = F.least(F.col("d"), F.lit(cap)) if cap else F.col("d")
     est = (d * (d - F.lit(1)) / F.lit(2)).cast("double")
     wedges = int(deg.agg(F.sum(est)).first()[0] or 0)  # one scalar: the wedge-volume estimate
-    base = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    need = wedges // WEDGE_ROWS_PER_TASK + 1
-    cores = spark.sparkContext.defaultParallelism
-    return min(65536, max(need, min(base, max(cores, need))))
+    return max(width(deg.sparkSession), min(65536, wedges // WEDGE_ROWS_PER_TASK + 1))
 
 
 def _wedge_common(wa: "DataFrame", wb: "DataFrame", width: int) -> "DataFrame":

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load, pin
+from ..catalog import load, pin, width
 from ..registry import OPS, op
 
 # ---------------------------------------------------------------------------
@@ -900,7 +900,7 @@ def _truncated_knn(spark: SparkSession, sf_dir: str, dim: int) -> DataFrame:
         load(spark, sf_dir)
         .embeddings.where(q_nibble < _Q_NIBBLE)
         .select("vec_id", F.slice("embedding", 1, dim).alias("embedding"))
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "vec_id")
+        .repartition(width(spark), "vec_id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     partials: list[DataFrame] = []

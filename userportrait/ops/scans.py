@@ -775,19 +775,14 @@ def _scd2_vacuum(spark: SparkSession, path: str, watermark: str) -> None:
         boundary = spark.read.parquet(path).where(F.col("vt_year") == wm_year)
         survivors = pin(boundary.where(F.col("valid_to") >= wm))  # breaks lineage from `path` so the overwrite below is legal
         if survivors.limit(1).count() > 0:
-            key = "spark.sql.sources.partitionOverwriteMode"
-            prev = spark.conf.get(key, None)
-            spark.conf.set(key, "dynamic")
-            try:
-                (
-                    survivors.repartition("vt_year")
-                    .sortWithinPartitions("c_custkey", "version")
-                    .write.mode("overwrite")
-                    .partitionBy("vt_year")
-                    .parquet(path)
-                )
-            finally:
-                spark.conf.set(key, prev) if prev is not None else spark.conf.unset(key)
+            (
+                survivors.repartition("vt_year")
+                .sortWithinPartitions("c_custkey", "version")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("vt_year")
+                .parquet(path)
+            )
         else:
             _sh.rmtree(os.path.join(path, f"vt_year={wm_year}"), ignore_errors=True)
 

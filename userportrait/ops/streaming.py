@@ -39,7 +39,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import SCHEMAS
+from ..catalog import SCHEMAS, path_bytes, width
 from ..registry import op
 from .llm_similarity import _IVF_APPEND_ORACLE, _IVF_KMEANS_PART_ORACLE
 from .scans import _SCD2_HIST_CTE
@@ -173,56 +173,37 @@ def _stream_events(spark: SparkSession, stage_dir: str, delay_s: int) -> DataFra
     )
 
 
-def _replay_width(spark: SparkSession, src_dir: str | None) -> int:
-    """State-store/shuffle width for a finite staged replay:
-    ``min(defaultParallelism, ceil(staged_bytes / 256 KiB))``, floor 1;
-    explicit ``spark.userportrait.stream.statePartitions`` pins it exactly;
-    an unstatable source falls back to the fleet width.
-
-    Why (r15, VERDICT r14 #4 + guide §2.2 "fewer, larger partitions"): a
-    stateful microbatch loads and commits ONE state store per shuffle
-    partition per stateful operator — at the default width every
-    1000-row test microbatch paid 32 state-store opens + delta-file
-    fsyncs per operator (profiled on stream_tumbling: addBatch
-    0.8-0.95 s of each ~1 s batch, all fixed cost, rows irrelevant). The
-    width a streaming query runs with is whatever
-    ``spark.sql.shuffle.partitions`` says at FIRST batch — baked into
-    the checkpoint thereafter — so deriving it from staged input volume
-    is the streaming twin of catalog.text_partitions: tiny replays get
-    tiny state fan-out, corpus-scale replays saturate the fleet."""
-    from ..catalog import positive_int_conf
-
-    explicit = positive_int_conf(spark, "spark.userportrait.stream.statePartitions")
-    if explicit is not None:
-        return explicit
-    cap = spark.sparkContext.defaultParallelism
-    if src_dir is None:
-        return cap
-    try:
-        total = sum(
-            e.stat().st_size for e in os.scandir(src_dir) if e.is_file()
-        )
-    except OSError:
-        return cap
-    if total <= 0:
-        return cap
-    return max(1, min(cap, -(-total // 262144)))
+# Staged bytes per state-store partition of a finite replay (see _replay_conf).
+REPLAY_TASK_BYTES = 262144
 
 
 class _replay_conf:
     """Context manager: pin spark.sql.shuffle.partitions to the replay
     width for the duration of one streaming run, restoring the caller's
-    value after. Recovery semantics are unaffected — a restarted query
-    reads its width from the checkpoint, not from this conf."""
+    value after. The width is ``catalog.width`` of the staged bytes at
+    REPLAY_TASK_BYTES per partition; no ``src_dir`` (or an unstatable one)
+    gives the fleet width.
+
+    Why: a stateful microbatch loads and commits ONE state store per
+    shuffle partition per stateful operator — at the fleet width every
+    1000-row test microbatch paid 32 state-store opens + delta-file
+    fsyncs per operator (profiled on stream_tumbling: addBatch 0.8-0.95 s
+    of each ~1 s batch, all fixed cost, rows irrelevant). The width a
+    streaming query runs with is whatever ``spark.sql.shuffle.partitions``
+    says at FIRST batch — baked into the checkpoint thereafter — so tiny
+    replays get tiny state fan-out and corpus-scale replays saturate the
+    fleet. Recovery semantics are unaffected — a restarted query reads its
+    width from the checkpoint, not from this conf."""
 
     def __init__(self, spark: SparkSession, src_dir: str | None):
         self.spark = spark
         self.src_dir = src_dir
 
     def __enter__(self):
+        nbytes = path_bytes(self.src_dir) if self.src_dir else None
         self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
         self.spark.conf.set(
-            "spark.sql.shuffle.partitions", str(_replay_width(self.spark, self.src_dir))
+            "spark.sql.shuffle.partitions", str(width(self.spark, nbytes, REPLAY_TASK_BYTES))
         )
         return self
 
@@ -237,7 +218,7 @@ def _run_to_table(
     """Run the streaming query to completion into a memory sink; return the
     final table. AvailableNow + the staged sentinel => deterministic output.
     ``src_dir`` (the staged stream dir) sizes the state fan-out — see
-    _replay_width; None keeps the session width."""
+    _replay_conf; None gives the fleet width."""
     global _query_seq
     _query_seq += 1
     qname = f"up_{name}_{os.getpid()}_{_query_seq}"
@@ -1883,19 +1864,14 @@ def ivf_fold_batches(
     )
     merged = pin(base_touched.unionByName(batches))
 
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        (
-            merged.repartition("cell")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set(key, prev) if prev is not None else spark.conf.unset(key)
+    (
+        merged.repartition("cell")
+        .sortWithinPartitions("vec_id")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell")
+        .parquet(path)
+    )
 
     retired = batches_root + "_retired"
     shutil.rmtree(retired, ignore_errors=True)
@@ -1906,10 +1882,10 @@ def ivf_fold_batches(
 def ivf_fold_fragmented_cells(
     spark: SparkSession, path: str, member_cols: tuple[str, ...] = ("vec_id", "u", "lang")
 ) -> int:
-    """The OTHER small-file fold the compact verb owes (VERDICT r13 next
-    #5): batch appends (sink_ivf_append_kmeans, sink_ivf_append) write
-    ``mode("append")`` INSIDE existing cell directories — one new file per
-    append per touched cell, a fragmentation source ivf_fold_batches never
+    """The OTHER small-file fold the compact verb owes: batch appends
+    (sink_ivf_append_kmeans, sink_ivf_append) write ``mode("append")``
+    INSIDE existing cell directories — one new file per append per
+    touched cell, a fragmentation source ivf_fold_batches never
     sees because it folds per-batch OVERWRITE dirs, not in-place files.
     This pass lists the cell directories (bounded: ≤ quantizer cell count
     — metadata, never data volume), picks the FRAGMENTED ones (>1 data
@@ -1931,19 +1907,14 @@ def ivf_fold_fragmented_cells(
     merged = pin(
         spark.read.parquet(path).where(F.col("cell").isin(frag)).select(*cols)
     )
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        (
-            merged.repartition("cell")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set(key, prev) if prev is not None else spark.conf.unset(key)
+    (
+        merged.repartition("cell")
+        .sortWithinPartitions("vec_id")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell")
+        .parquet(path)
+    )
     return len(frag)
 
 

@@ -103,9 +103,13 @@ GRADE_FIRST: tuple[str, ...] = (
     "dedup_near_minhash",
     "dedup_jaccard_verify_capped",
     "doc_clean_pipeline",
-    # ... and the 20 streaming ops whose replay runner now derives the
-    # state fan-out from staged input volume (results identical — state
-    # partitioning never changes values — but the run path changed):
+    # ... and the 20 streaming ops whose run path changed with the replay
+    # runner (results identical — state partitioning never changes
+    # values). 16 of them pass their staged dir and derive the state
+    # fan-out from its volume. stream_dedup_ingest and its bloom twin
+    # keep the fleet width on purpose (a CPU-bound md5 kernel), and
+    # stream_quality_gate and stream_topic_router are stateless and pass
+    # no staged dir, so those four run at the fleet width:
     "stream_tumbling",
     "stream_late_data",
     "stream_sliding",

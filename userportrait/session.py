@@ -95,21 +95,21 @@ def _default_driver_memory() -> str:
     return f"{max(2, min(24, total_gb // 5))}g"
 
 
-def get_spark(app_name: str = "userportrait", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "userportrait") -> SparkSession:
     """Build (or reuse) a local session with engine conventions applied.
 
-    ``shuffle_partitions`` defaults to the local core count: at sf<=0.1 the
-    data is small enough that AQE coalesces down anyway; on a real cluster
-    this would be sized to ~2-3x total cores (SURVEY §4).
+    ``spark.sql.shuffle.partitions`` is the local core count, i.e. equal to
+    ``defaultParallelism``: at sf<=0.1 the data is small enough that AQE
+    coalesces down anyway; on a real cluster this would be sized to ~2-3x
+    total cores (SURVEY §4). Ops that pick a width themselves go through
+    ``catalog.width``.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         # local[32] means 32 CONCURRENT task memory consumers in one JVM:
         # at 8g (execution pool ~4.6g) a wide shuffle-sort stage starves the
         # per-task minimum and UnsafeExternalSorter dies growing its pointer
