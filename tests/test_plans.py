@@ -359,10 +359,8 @@ def test_no_unaudited_driver_side_pulls():
             "scalar: corpus count for the incremental-dedup split point",
         ("llm_similarity.py", ').collect()[0]["c"]'):
             "scalar: vec_id cutoff for the incremental IVF append split point",
-        ("llm_similarity.py", 'total, lo, hi = emb.agg(F.count("*"), F.min("vec_id"), F.max("vec_id")).first()'):
-            "scalar: index size + id range for quantile chunking",
-        ("llm_similarity.py", 'total, lo, hi = codes.agg(F.count("*"), F.min("vec_id"), F.max("vec_id")).first()'):
-            "scalar: PQ code-table size + id range for quantile chunking",
+        ("llm_similarity.py", 'total, lo, hi = df.agg(F.count("*"), F.min("vec_id"), F.max("vec_id")).first()'):
+            "scalar: row count + id range for quantile chunking (_range_chunks: embedding index, PQ code table)",
         ("llm_similarity.py", ".toPandas()"):
             "bounded: one vec_id-range index chunk (<= chunk width rows)",
         ("pipeline_ext.py", 'cur_sum = labels.agg(F.sum("lab")).collect()[0][0]'):
@@ -767,6 +765,60 @@ def test_width_and_session_confs_have_one_owner():
     assert not stray_reads, f"shuffle width read outside catalog.width: {sorted(stray_reads)}"
     stray_sets = sets - set(conf_setters)
     assert not stray_sets, f"session conf mutated outside the allowlist: {sorted(stray_sets)}"
+
+
+def test_env_reads_and_tile_bound_have_one_owner():
+    """Static audit of environment knobs and the kNN tile bound:
+    - ``os.environ`` / ``getenv`` is read under ``userportrait/`` only at
+      the allowlisted sites — sizing constants are module constants that
+      tests monkeypatch, not environment knobs;
+    - ``KNN_TILE_ELEMS`` is read by exactly one function, the blocked
+      score-and-top-k kernel ``_tiled_topk``, so every kNN path shares
+      one per-task memory bound.
+    Sites are (path under userportrait/, enclosing function — or the
+    assigned name for a module-level constant); only the syntax tree is
+    inspected, so docstrings and comments may name either."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).parent.parent / "userportrait"
+    env_readers = {
+        ("session.py", "get_spark"): "local core count and driver memory of the test session",
+        ("ops/llm_similarity.py", "IVF_KMEANS_K"): "cell count; scripts/ivf_delete_ladder.py sets it",
+    }
+    env_files = {"testing/check.py": "the check CLI's default fixture directory"}
+    env_reads, tile_reads = set(), set()
+
+    def visit(node, scope, path):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            elif not scope and isinstance(child, (ast.Assign, ast.AnnAssign)):
+                targets = child.targets if isinstance(child, ast.Assign) else [child.target]
+                inner = ",".join(t.id for t in targets if isinstance(t, ast.Name))
+            site = (path, inner)
+            if isinstance(child, ast.Attribute) and child.attr in ("environ", "getenv"):
+                env_reads.add(site)
+            if isinstance(child, ast.Name) and child.id == "getenv":
+                env_reads.add(site)
+            if isinstance(child, ast.ImportFrom) and any(a.name in ("environ", "getenv") for a in child.names):
+                env_reads.add(site)
+            if isinstance(child, ast.Name) and child.id == "KNN_TILE_ELEMS" and isinstance(child.ctx, ast.Load):
+                tile_reads.add(site)
+            if isinstance(child, ast.Attribute) and child.attr == "KNN_TILE_ELEMS":
+                tile_reads.add(site)
+            if isinstance(child, ast.ImportFrom) and any(a.name == "KNN_TILE_ELEMS" for a in child.names):
+                tile_reads.add(site)
+            visit(child, inner, path)
+
+    for py in sorted(root.rglob("*.py")):
+        visit(ast.parse(py.read_text()), "", py.relative_to(root).as_posix())
+    stray_env = {s for s in env_reads - set(env_readers) if s[0] not in env_files}
+    assert not stray_env, f"environment read outside the allowlist: {sorted(stray_env)}"
+    assert tile_reads == {("ops/llm_similarity.py", "_tiled_topk")}, (
+        f"KNN_TILE_ELEMS read outside _tiled_topk: {sorted(tile_reads)}"
+    )
 
 
 SCRATCH_ZORDER = __import__('pathlib').Path(__file__).parent.parent / '_scratch' / 'lineitem_zorder'

@@ -13,6 +13,13 @@ compute is still O(n²), which is why the 100 TB ANN paths are
 ``sim_knn_lsh`` / ``sim_knn_ivf`` (band signatures → bucket join → exact
 rescore, the candidate machinery built for ``dedup_near_minhash``).
 
+One score-and-top-k operator serves the whole kNN family: ``_tiled_topk``
+tiles the query rows, scores each tile with the caller's function (the
+f64 matmul, or a PQ/ADC code gather), masks self matches and keeps the
+exact (score desc, neighbor_id asc) top-k. ``_blocked_result`` drives it
+over broadcast index chunks and ``_cell_kernel`` over IVF cells; both
+merge per-part rows with ``_topk_per_query``.
+
 Determinism: all math in float64; similarities rounded to 4dp Spark-side
 (F.round, same policy as fn_math); ties broken by neighbor id ascending in
 both engines. The index matrix is sorted by vec_id so numpy's stable
@@ -62,33 +69,30 @@ _ORACLE_SIMS_CTE = """
 #   - CAP is the per-broadcast memory bound (500k rows × dim 64 f64 ≈
 #     256 MB per broadcast — a deploy-safe default that torrent-broadcasts
 #     cleanly; a 1e9-vector corpus then runs 2000 bounded chunks — more
-#     jobs, never more memory. Raise via env on clusters with headroom);
-#   - below CAP the whole index is ONE chunk. The r13 form aimed for ~8
-#     chunks (a TARGET_CHUNKS divisor) regardless of size, which bought
-#     nothing — every chunk under CAP already satisfies the memory bound,
-#     and each extra chunk costs a quantile cut, a collect job, a
-#     broadcast, a full query-side pass and a checkpoint barrier (r14
-#     measurement: the 10× replica's 20k-vector/10 MB index ran FIVE
-#     chunk rounds, q_vector_knn 11.5 s → 4.6 s as one chunk);
-#   - MIN guards the forced-low test configurations from degenerating
-#     into per-row jobs (in the default config it is inert: min(CAP, n)
-#     is either n — one chunk — or CAP ≫ MIN).
-# tests/test_invariants.py forces MIN=CAP low to stress many chunks, so the
-# multi-chunk merge path stays exercised regardless of these defaults.
-INDEX_CHUNK_MIN = int(os.environ.get("UP_KNN_CHUNK_MIN", "4096"))
-INDEX_CHUNK_CAP = int(os.environ.get("UP_KNN_CHUNK_CAP", "500000"))
-# Per-task transient bound: the kernel's sims matrix is (query rows ×
-# chunk rows) f64 — batch × 500k-chunk would be ~40 GB/task if computed
-# whole (observed: python workers OOM-killed at the 100× replica). Query
-# rows are independent for both emit kernels (per-row top-k / per-row
-# threshold), so the matmul runs in row tiles of <= TILE_ELEMS sims
-# elements (~128 MB at the default) — EXACT, no merge step needed.
-KNN_TILE_ELEMS = int(os.environ.get("UP_KNN_TILE_ELEMS", "16000000"))
+#     jobs, never more memory);
+#   - below CAP the whole index is ONE chunk: every chunk under CAP already
+#     satisfies the memory bound, and each extra chunk costs a quantile
+#     cut, a collect job, a broadcast, a full query-side pass and a
+#     checkpoint barrier (a 20k-vector/10 MB index ran q_vector_knn in
+#     11.5 s as five chunks, 4.6 s as one);
+#   - MIN guards forced-low configurations from degenerating into per-row
+#     jobs (at the defaults it is inert: min(CAP, n) is either n — one
+#     chunk — or CAP ≫ MIN).
+# tests/test_invariants.py monkeypatches MIN=CAP low to stress many
+# chunks, so the multi-chunk merge path stays exercised.
+INDEX_CHUNK_MIN = 4096
+INDEX_CHUNK_CAP = 500_000
+# Per-task transient bound: a score tile is (query rows × index columns) —
+# batch × 500k-chunk would be ~40 GB/task if computed whole (python workers
+# were OOM-killed at the 100× replica). Query rows are independent, so
+# _tiled_topk scores row tiles of <= TILE_ELEMS elements (~128 MB f64) —
+# EXACT, no merge step needed.
+KNN_TILE_ELEMS = 16_000_000
 
 
-def _index_chunks(spark: SparkSession, sf_dir: str):
-    """Yield the normalized float64 index as bounded (ids, mat) chunks,
-    each sorted by vec_id.
+def _range_chunks(df: DataFrame):
+    """Yield ``df`` (a ``vec_id``-keyed frame) in bounded vec_id ranges,
+    each a vec_id-sorted pandas frame; empty ranges are skipped.
 
     Chunk boundaries are approximate QUANTILES of vec_id, so chunk COUNT
     scales with row count (ceil(rows / chunk_rows)) and never with id-space
@@ -98,13 +102,8 @@ def _index_chunks(spark: SparkSession, sf_dir: str):
     is a vec_id range predicate that pushes into the parquet scan (each
     chunk reads only its stripe — no whole-table ``toPandas`` ever
     happens); rows per chunk ≈ target ± the quantile error (bounded at 5%
-    of a chunk). Driver + broadcast memory is O(chunk × dim) at any
-    instant; this removes the last index-fits-in-one-broadcast assumption
-    in the §2.K family (VERDICT r5 "What's wrong" #1)."""
-    import numpy as np
-
-    emb = load(spark, sf_dir).embeddings.select("vec_id", "embedding")
-    total, lo, hi = emb.agg(F.count("*"), F.min("vec_id"), F.max("vec_id")).first()
+    of a chunk). Driver + broadcast memory is O(chunk) at any instant."""
+    total, lo, hi = df.agg(F.count("*"), F.min("vec_id"), F.max("vec_id")).first()
     if lo is None:
         return
     target = max(INDEX_CHUNK_MIN, min(INDEX_CHUNK_CAP, total))
@@ -113,14 +112,14 @@ def _index_chunks(spark: SparkSession, sf_dir: str):
         cuts: list[int] = []
     else:
         # rank error <= 5% of one chunk up to ~500 chunks; past that the
-        # 1e-4 floor (which caps approxQuantile's GK-sketch cost) takes
+        # 1e-4 floor (which caps the GK quantile sketch's cost) takes
         # over and the per-chunk size error grows toward eps*total rows —
         # at the 2000-chunk/1e9-vector extreme that is ~20% of a chunk, so
         # the effective per-broadcast bound is CAP*1.2, not CAP. Size CAP
         # with that headroom (the 256 MB default leaves it) or lower the
         # floor on clusters where a costlier quantile pass is acceptable.
         eps = max(1e-4, 0.05 / n_chunks)
-        qs = emb.stat.approxQuantile(
+        qs = df.stat.approxQuantile(
             "vec_id", [i / n_chunks for i in range(1, n_chunks)], eps
         )
         # dedupe + keep strictly increasing interior boundaries
@@ -128,12 +127,20 @@ def _index_chunks(spark: SparkSession, sf_dir: str):
     bounds = [lo, *cuts, hi + 1]
     for start, end in zip(bounds, bounds[1:]):
         pdf = (
-            emb.where((F.col("vec_id") >= start) & (F.col("vec_id") < end))
+            df.where((F.col("vec_id") >= start) & (F.col("vec_id") < end))
             .toPandas()
             .sort_values("vec_id", ignore_index=True)
         )
-        if len(pdf) == 0:
-            continue
+        if len(pdf):
+            yield pdf
+
+
+def _index_chunks(spark: SparkSession, sf_dir: str):
+    """Yield the normalized float64 embedding index as bounded
+    (ids, mat) chunks, each sorted by vec_id (``_range_chunks``)."""
+    import numpy as np
+
+    for pdf in _range_chunks(load(spark, sf_dir).embeddings.select("vec_id", "embedding")):
         ids = pdf["vec_id"].to_numpy(np.int64)
         mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
         mat /= np.linalg.norm(mat, axis=1, keepdims=True)
@@ -145,15 +152,15 @@ def _topk_cols_exact(np, sims, k, cand_width=64):
     LOWER column index — exactly ``np.argsort(-sims, axis=1,
     kind="stable")[:, :k]`` — computed via an O(width) argpartition over
     a bounded candidate set instead of the full-width O(w log w) stable
-    sort (r14, guide §1.2 per-task work: the full sort plus its ``-sims``
-    negation copy were ~3.1 s of each 10×-replica kNN task where the
-    partition path is ~0.7 s). The partition keeps the LARGEST ``c``
-    columns directly on ``sims`` (no negated copy); sorting the candidate
-    indices ascending before the small stable sort reproduces the
-    lower-column tie-break. Exactness guard: a row whose candidate-set
-    minimum ties its k-th value may have further ties beyond the
-    candidate horizon and falls back to the full stable sort — so the
-    result is bit-identical on every input, duplicates included."""
+    sort (the full sort plus its ``-sims`` negation copy were ~3.1 s of
+    each 10×-replica kNN task where the partition path is ~0.7 s). The
+    partition keeps the LARGEST ``c`` columns directly on ``sims`` (no
+    negated copy); sorting the candidate indices ascending before the
+    small stable sort reproduces the lower-column tie-break. Exactness
+    guard: a row whose candidate-set minimum ties its k-th value may have
+    further ties beyond the candidate horizon and falls back to the full
+    stable sort — so the result is bit-identical on every input,
+    duplicates included."""
     n, w = sims.shape
     k = min(k, w)
     c = min(max(cand_width, k), w)
@@ -173,100 +180,169 @@ def _topk_cols_exact(np, sims, k, cand_width=64):
 
 def _mask_self_inplace(np, qids, aids, sims):
     """Set sims[r, j] = -inf where qids[r] == aids[j], in place. aids is
-    ascending (chunks are vec_id-sorted), so the self column is ONE
-    searchsorted lookup per row — the r13 form materialized an
-    O(rows × chunk) boolean outer-equality and an equally sized
-    ``np.where`` copy per tile (~0.55 s of each 10×-replica task)."""
+    ascending, so the self column is ONE searchsorted lookup per row —
+    no O(rows × columns) boolean outer-equality or ``np.where`` copy."""
     pos = np.searchsorted(aids, qids)
     inb = pos < len(aids)
     hit = np.nonzero(inb & (aids[np.minimum(pos, len(aids) - 1)] == qids))[0]
     sims[hit, pos[hit]] = -np.inf
 
 
-def _query_batches(bc, fn):
-    """mapInPandas kernel: per Arrow batch, normalize queries, one blocked
-    matmul against the broadcast index, then delegate row emission to fn.
-    Callers repartition the query side first — a single-file scan is one
-    partition, which would serialize the whole matmul into one worker."""
-    import numpy as np
-    import pandas as pd
+def _tiled_topk(k, score="sim", emit=None):
+    """THE blocked score-and-top-k kernel of the kNN family. Built
+    driver-side — the closure ships the resolved tile size, so a
+    monkeypatched KNN_TILE_ELEMS reaches the Python workers — it returns
+    ``run(np, pd, qids, aids, score_tile)``:
 
-    # driver-side so tests can pin it; the closure ships the resolved int
-    rows_per_tile = max(1, KNN_TILE_ELEMS // max(1, len(bc.value[0])))
+    - query rows are walked in tiles of <= KNN_TILE_ELEMS score elements;
+      ``score_tile(lo, hi)`` returns the (hi-lo) × len(aids) scores of
+      query rows lo:hi — the caller's f64 matmul or ADC gather;
+    - per tile, each query's own column is masked (``aids`` must be
+      ascending), the exact (score desc, column asc) top-k is taken —
+      over ascending ``aids`` that is the (score desc, neighbor_id asc)
+      rank of every merge window — and the finite rows are emitted as
+      (vec_id, neighbor_id, <score> double).
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        aids, amat = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qids = pdf["vec_id"].to_numpy(np.int64)
-            qmat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
-            for lo in range(0, len(qids), rows_per_tile):
-                sims = qmat[lo : lo + rows_per_tile] @ amat.T  # (tile × chunk)
-                yield fn(np, pd, qids[lo : lo + rows_per_tile], aids, sims)
+    Query rows are independent, so tiling is exact. ``emit(np, pd, qids,
+    aids, scores)`` replaces the mask + top-k step for a caller with
+    another row rule over the same tiles (sim_threshold_pairs)."""
+    tile_elems = KNN_TILE_ELEMS
 
-    return gen
+    def topk(np, pd, qids, aids, sims):
+        _mask_self_inplace(np, qids, aids, sims)
+        top = _topk_cols_exact(np, sims, k)
+        sel = np.take_along_axis(sims, top, axis=1)
+        keep = np.isfinite(sel).ravel()
+        return pd.DataFrame(
+            {
+                "vec_id": np.repeat(qids, top.shape[1])[keep],
+                "neighbor_id": aids[top].ravel()[keep],
+                score: sel.ravel()[keep].astype(np.float64),
+            }
+        )
+
+    rule = emit or topk
+
+    def run(np, pd, qids, aids, score_tile):
+        step = max(1, tile_elems // max(1, len(aids)))
+        parts = [
+            rule(np, pd, qids[lo : lo + step], aids, score_tile(lo, lo + step))
+            for lo in range(0, len(qids), step)
+        ]
+        return pd.concat(parts, ignore_index=True)
+
+    return run
 
 
-def _blocked_result(spark: SparkSession, sf_dir: str, emit, schema: str) -> DataFrame:
-    """Run the blocked broadcast-index kernel with O(one chunk) memory at
-    any INSTANT, not just per broadcast: chunks are processed SEQUENTIALLY —
-    broadcast one chunk, materialize its bounded partial (``pin`` →
-    local/reliable checkpoint), then ``destroy()`` the broadcast before
-    fetching the next. Only the small materialized partials (≤ k rows per
-    query, or the above-threshold pairs) survive to the final union, so
-    neither driver temp files nor executor broadcast storage ever hold more
-    than one chunk — at the 2000-chunk scale of a 1e9-vector corpus the
-    eager form (every chunk broadcast alive through one union job) would
-    have re-materialized the entire index.
+def _topk_per_query(df: DataFrame, k: int, score: str = "sim") -> DataFrame:
+    """The exact per-query merge: keep each vec_id's k best rows by
+    (score desc, neighbor_id asc) — the order _tiled_topk ranks by, so
+    merging per-part top-k rows (chunks, cells) is exact."""
+    w = Window.partitionBy("vec_id").orderBy(F.col(score).desc(), F.col("neighbor_id").asc())
+    return df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
 
-    The query side is shuffled ONCE and persisted across chunks (one task
-    wave per chunk, width = ``catalog.width`` — the fleet width; re-shuffling
-    per chunk would move the query side once per chunk), then unpersisted
-    before returning — the pinned partials no longer reference it."""
+
+def _dense_scores(np, pdf, amat):
+    """Score function of the exact path: the batch's raw ``embedding``
+    rows normalized, each tile one f64 matmul against the unit index."""
+    qmat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
+    return lambda lo, hi: qmat[lo:hi] @ amat.T
+
+
+def _blocked_result(
+    spark: SparkSession, queries: DataFrame, chunks, prep, k, score: str = "sim", emit=None
+) -> DataFrame:
+    """Blocked broadcast-index search: each (aids, index) chunk of
+    ``chunks`` (aids ascending) is broadcast, and every Arrow batch of
+    ``queries`` (vec_id plus whatever ``prep`` reads) is scored against it
+    by _tiled_topk — ``prep(np, pdf, index)`` returns the batch's
+    score_tile. Returns (vec_id, neighbor_id, <score>): each query's exact
+    top-k, or with ``emit`` the union of its rows.
+
+    Memory is O(one chunk) at any INSTANT, not just per broadcast: chunks
+    are processed SEQUENTIALLY — broadcast one chunk, materialize its
+    bounded partial (``pin`` → local/reliable checkpoint), then
+    ``destroy()`` the broadcast before fetching the next. Only the small
+    materialized partials survive to the final union, so neither driver
+    temp files nor executor broadcast storage ever hold more than one
+    chunk. The query side is shuffled ONCE to the fleet width
+    (``catalog.width``) and persisted across chunks, then unpersisted
+    before returning — the pinned partials no longer reference it. The
+    per-chunk top-k rows merge under _topk_per_query (per-chunk top-k
+    dominates, so the merge is exact).
+
+    SINGLE chunk: nothing needs freeing early, so the partial is not
+    checkpointed, the query side not persisted, and the merge window is
+    skipped — the chunk's per-query top-k IS the global top-k. The
+    broadcast stays alive with the returned plan and is reaped by the
+    ContextCleaner."""
     from itertools import chain
 
     from pyspark.storagelevel import StorageLevel
 
-    chunks = _index_chunks(spark, sf_dir)
+    run = _tiled_topk(k, score, emit)
+    schema = f"vec_id bigint, neighbor_id bigint, {score} double"
+
+    def kernel(bc):
+        def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+            import numpy as np
+            import pandas as pd
+
+            aids, index = bc.value
+            for pdf in batches:
+                if len(pdf):
+                    qids = pdf["vec_id"].to_numpy(np.int64)
+                    yield run(np, pd, qids, aids, prep(np, pdf, index))
+
+        return gen
+
+    chunks = iter(chunks)
     first = next(chunks, None)
-    if first is None:  # empty embeddings table -> empty result, same schema
+    if first is None:  # empty index -> empty result, same schema
         return spark.createDataFrame([], schema)
     second = next(chunks, None)
-    nq = width(spark)
-    base = load(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    q = queries.repartition(width(spark), "vec_id")
     if second is None:
-        # SINGLE-chunk fast path: the pin/destroy discipline exists
-        # so chunk N's broadcast can be freed before chunk N+1 loads —
-        # with one chunk there is nothing to free early, so the partial
-        # needs no checkpoint materialization (one localCheckpoint job +
-        # block write + re-read per run at sf0.1, ~0.5 s) and the query
-        # side needs no cross-chunk persist. The broadcast stays alive
-        # with the returned plan and is reaped by the ContextCleaner.
-        # Multi-chunk corpora (any real deployment) keep the sequential
-        # O(one chunk) discipline below.
-        bc = spark.sparkContext.broadcast(first)
-        out = base.repartition(nq, "vec_id").mapInPandas(_query_batches(bc, emit), schema)
-        # flag for per-query-top-k consumers: ONE chunk means each query's
-        # per-chunk winners ARE the global winners, so the cross-chunk
-        # merge window (an exchange + sort over the result) is an identity
-        # they can skip (an orderBy used only to re-rank rows already
-        # exactly ranked).
-        out._up_single_chunk = True
-        return out
-    q = base.repartition(nq, "vec_id").persist(StorageLevel.MEMORY_AND_DISK)
+        return q.mapInPandas(kernel(spark.sparkContext.broadcast(first)), schema)
+    q = q.persist(StorageLevel.MEMORY_AND_DISK)
     partials: list[DataFrame] = []
     try:
         for chunk in chain([first, second], chunks):
             bc = spark.sparkContext.broadcast(chunk)
             try:
-                partials.append(pin(q.mapInPandas(_query_batches(bc, emit), schema)))
+                partials.append(pin(q.mapInPandas(kernel(bc), schema)))
             finally:
                 bc.destroy()
     finally:
         q.unpersist()
-    return reduce(DataFrame.unionAll, partials)
+    union = reduce(DataFrame.unionAll, partials)
+    return union if emit is not None else _topk_per_query(union, k, score)
+
+
+def _cell_kernel(prep, k, score: str = "sim"):
+    """Per-cell cogroup form of _tiled_topk: ``kernel(key, probes_pdf,
+    members_pdf)`` over probing queries (vec_id, …) and cell members
+    (mvec_id, …). Members are id-sorted ONCE per cell so column order is
+    id order (the self-mask and the top-k tie-break rely on it; mvec_ids
+    are unique within a cell), then ``prep(np, probes_pdf, members_pdf)``
+    returns the cell's score_tile. Hot cells stay tiled."""
+    run = _tiled_topk(k, score)
+
+    def kernel(key, probes_pdf, members_pdf):
+        import numpy as np
+        import pandas as pd
+
+        if len(probes_pdf) == 0 or len(members_pdf) == 0:
+            return pd.DataFrame({"vec_id": [], "neighbor_id": [], score: []}).astype(
+                {"vec_id": "int64", "neighbor_id": "int64", score: "float64"}
+            )
+        members_pdf = members_pdf.sort_values("mvec_id", kind="stable", ignore_index=True)
+        qids = probes_pdf["vec_id"].to_numpy(np.int64)
+        mids = members_pdf["mvec_id"].to_numpy(np.int64)
+        return run(np, pd, qids, mids, prep(np, probes_pdf, members_pdf))
+
+    return kernel
 
 
 @op(
@@ -289,44 +365,19 @@ def sim_cosine_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     The index streams through in bounded vec_id-range chunks
     (``_index_chunks``): each chunk is broadcast, every query partition
     takes its per-chunk top-5, and a final window re-ranks the union to the
-    global exact top-5. Per-chunk top-5 dominates, so the merge is exact.
-    Memory is O(chunk) everywhere — compute stays the unavoidable O(n²) of
-    exact kNN, which is why sim_knn_lsh / sim_knn_ivf are the 100 TB paths.
+    global exact top-5 (``_blocked_result``). Per-chunk top-5 dominates,
+    so the merge is exact. Memory is O(chunk) everywhere — compute stays
+    the unavoidable O(n²) of exact kNN, which is why sim_knn_lsh /
+    sim_knn_ivf are the 100 TB paths.
 
-    Determinism across chunk sizes: sims are deterministic f64 dot products,
-    so equal values are bitwise-equal in any chunking; the final ordering
-    (sim desc, neighbor_id asc) is therefore chunk-invariant, matching the
-    single-matrix stable-argsort tie-break exactly
-    (tests/test_invariants.py::test_knn_chunked_matches_single_chunk)."""
-
-    def emit(np, pd, qids, aids, sims):
-        _mask_self_inplace(np, qids, aids, sims)
-        # == stable argsort on -sim over the id-ascending index (tie: id asc)
-        top = _topk_cols_exact(np, sims, K_NEIGHBORS)
-        rows = np.arange(len(qids))[:, None]
-        keep = np.isfinite(sims[rows, top])  # drop self rows (chunk may be tiny)
-        return pd.DataFrame(
-            {
-                "vec_id": np.repeat(qids, top.shape[1])[keep.ravel()],
-                "neighbor_id": aids[top].ravel()[keep.ravel()],
-                "sim": sims[rows, top].ravel()[keep.ravel()],
-            }
-        )
-
-    union = _blocked_result(spark, sf_dir, emit, "vec_id bigint, neighbor_id bigint, sim double")
-    if getattr(union, "_up_single_chunk", False):
-        # one chunk: emit's per-query top-5 is already the exact global
-        # top-5 — the merge window would re-rank identical rows through an
-        # exchange + sort for nothing
-        return union.select("vec_id", "neighbor_id", F.round("sim", 4).alias("sim"))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        union.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= K_NEIGHBORS)
-        .select("vec_id", "neighbor_id", F.round("sim", 4).alias("sim"))
-    )
+    Determinism across chunk and tile sizes: sims are deterministic f64
+    dot products, so equal values are bitwise-equal in any chunking; the
+    final ordering (sim desc, neighbor_id asc) is therefore
+    chunk-invariant, matching the single-matrix stable-argsort tie-break
+    exactly (tests/test_invariants.py::test_knn_chunked_matches_single_chunk)."""
+    queries = load(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    top = _blocked_result(spark, queries, _index_chunks(spark, sf_dir), _dense_scores, K_NEIGHBORS)
+    return top.select("vec_id", "neighbor_id", F.round("sim", 4).alias("sim"))
 
 
 @op(
@@ -339,19 +390,24 @@ def sim_cosine_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_threshold_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All vector pairs with cosine >= 0.45 (a < b). Same blocked-chunk
-    kernel as sim_cosine_knn; per-chunk above-threshold emission needs no
-    re-rank — pairs partition cleanly across index chunks, so the union of
-    chunk outputs IS the global answer."""
+    kernel and tiles as sim_cosine_knn with a threshold row rule in place
+    of the top-k; per-chunk above-threshold emission needs no re-rank —
+    pairs partition cleanly across index chunks, so the union of chunk
+    outputs IS the global answer."""
 
     def emit(np, pd, qids, aids, sims):
-        keep = (qids[:, None] < aids[None, :]) & (sims >= SIM_THRESHOLD)
-        qi, ai = np.nonzero(keep)
-        return pd.DataFrame(
-            {"vec_a": qids[qi], "vec_b": aids[ai], "sim": sims[qi, ai]}
-        )
+        qi, ai = np.nonzero((qids[:, None] < aids[None, :]) & (sims >= SIM_THRESHOLD))
+        return pd.DataFrame({"vec_id": qids[qi], "neighbor_id": aids[ai], "sim": sims[qi, ai]})
 
-    out = _blocked_result(spark, sf_dir, emit, "vec_a bigint, vec_b bigint, sim double")
-    return out.select("vec_a", "vec_b", F.round("sim", 4).alias("sim"))
+    queries = load(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    pairs = _blocked_result(
+        spark, queries, _index_chunks(spark, sf_dir), _dense_scores, None, emit=emit
+    )
+    return pairs.select(
+        F.col("vec_id").alias("vec_a"),
+        F.col("neighbor_id").alias("vec_b"),
+        F.round("sim", 4).alias("sim"),
+    )
 
 
 @op(
@@ -618,18 +674,13 @@ def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora); the query side stays uncapped so every vector keeps full
     candidate coverage. Recall tunes with (tables, bits, cap) — a real
     deployment grows bits ~log2(n/target_bucket) with the corpus."""
-    from pyspark.sql import Window
-
     # repartition: posexplode + interpreted folds off a one-split scan at
     # test scale would otherwise run single-core
     e = load(spark, sf_dir).embeddings.repartition(width(spark), "vec_id")
     cand = _lsh_candidates(spark, e, LSH_TABLES, LSH_BITS, LSH_BUCKET_CAP, dominators_only=False)
     scored = _exact_rescore(e, cand)
-    w_rank = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w_rank))
-        .where(F.col("rn") <= 5)
-        .select("vec_id", "neighbor_id", F.round("sim", 4).alias("sim"))
+    return _topk_per_query(scored, K_NEIGHBORS).select(
+        "vec_id", "neighbor_id", F.round("sim", 4).alias("sim")
     )
 
 
@@ -733,9 +784,7 @@ def _ivf_probe_rescore(e: DataFrame, cent: DataFrame) -> DataFrame:
     construction, so the vector-to-centroid scoring is a broadcast cross
     join; the candidate join is a hash join on the cell id. Scoring is
     the ONE shared kernel (_cell_scores) — assign-at-build and
-    score-at-serve cannot silently diverge (r11 VERDICT queue #2)."""
-    from pyspark.sql import Window
-
+    score-at-serve cannot silently diverge."""
     agg_sum = lambda arr: F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
     vn = _norm_vectors(e)
     ranked = _cell_scores(e, cent)
@@ -761,11 +810,8 @@ def _ivf_probe_rescore(e: DataFrame, cent: DataFrame) -> DataFrame:
             ).alias("sim"),
         )
     )
-    w_rank = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w_rank))
-        .where(F.col("rn") <= 5)
-        .select("vec_id", "neighbor_id", F.round("sim", 4).alias("sim"))
+    return _topk_per_query(scored, K_NEIGHBORS).select(
+        "vec_id", "neighbor_id", F.round("sim", 4).alias("sim")
     )
 
 @op("sim_knn_ivf", oracle=_ORACLE_IVF)
@@ -887,13 +933,6 @@ def _unit_embeddings(e: DataFrame) -> DataFrame:
     return e.select("vec_id", "embedding").mapInPandas(gen, "vec_id long, u array<double>")
 
 
-# Coarse-quantizer training sample bound: ~256 rows per centroid (the FAISS
-# guideline for IVF coarse training). 0 → derive 256·k at call time. At the
-# ladder's k=448 that is ~115k rows × 512 B ≈ 59 MB collected — bounded by
-# k (√n), never by the corpus.
-IVF_TRAIN_CAP = int(os.environ.get("UP_IVF_TRAIN_CAP", "0"))
-
-
 class _CentroidModel(NamedTuple):
     """A freshly trained coarse quantizer: the (cell, c, cnrm) frame for
     persisting/joining, plus the driver-side row copy (k ≈ √n rows of model
@@ -919,27 +958,29 @@ def _kmeans_cells(spark: SparkSession, unit: DataFrame, raw: DataFrame | None = 
     family (sink/scan_ivf_probe_kmeans, append/compact/delete/retrain,
     ivfpq).
 
-    Why driver-side (guide §1.2 step 1, §5): the previous MLlib k-means||
-    fit launched ~25 driver-blocking Spark jobs (init passes + 20 Lloyd's
-    sweeps, each a 32-task stage over a ~1000-row sample) — r14
-    measurement: ~2.5 s of q_ivf's 4.8 s at sf0.1, pure scheduling
-    overhead. Training on a bounded sample is model METADATA work, like
+    Why driver-side: an MLlib k-means|| fit launches ~25 driver-blocking
+    Spark jobs (init passes + 20 Lloyd's sweeps, each a 32-task stage
+    over a ~1000-row sample) — measured at ~2.5 s of q_ivf's 4.8 s at
+    sf0.1, pure scheduling overhead. Training on a bounded sample is model METADATA work, like
     the PQ codebooks: one job to collect ≤256·k rows, then numpy Lloyd's
     (matmul assignment step) in milliseconds. The corpus-sized work —
     assignment — still runs distributed, exactly once."""
     import numpy as np
 
-    cap = IVF_TRAIN_CAP or 256 * IVF_KMEANS_K
+    # Training sample bound: ~256 rows per centroid (the FAISS guideline for
+    # IVF coarse training). At the ladder's k=448 that is ~115k rows × 512 B
+    # ≈ 59 MB collected — bounded by k (√n), never by the corpus.
+    cap = 256 * IVF_KMEANS_K
     # When the caller holds the RAW embeddings frame, sample THAT and
     # normalize the ≤cap rows driver-side (identical IEEE sequence to the
     # _unit_embeddings kernel: float32→float64 upcast, v/sqrt(cumsum(v²)
     # last) — so the trained centers are bit-unchanged). Sampling the unit
     # frame forces the TakeOrdered job to run the Arrow normalize kernel
     # over the ENTIRE corpus just to keep cap rows — a full corpus-wide
-    # Python pass per training (r14 profile: a 0.28 s 1-task Python stage
-    # per q_ivf run at sf0.1) that the raw path replaces with a JVM-only
-    # scan + TakeOrdered (guide §4: don't cross the Python boundary for
-    # work an expression-free scan can do).
+    # Python pass per training (a 0.28 s 1-task Python stage per q_ivf
+    # run at sf0.1) that the raw path replaces with a JVM-only scan +
+    # TakeOrdered (don't cross the Python boundary for work an
+    # expression-free scan can do).
     if raw is not None:
         sample = (
             raw.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -991,83 +1032,34 @@ def _kmeans_cells(spark: SparkSession, unit: DataFrame, raw: DataFrame | None = 
     return _CentroidModel(df, rows)
 
 
-def _cell_matmul_rescore(key, probes_pdf, members_pdf):
-    """Per-cell cogroup kernel: (probing queries × cell members) cosine
-    sims as ONE vectorized matmul (unit vectors — the dot IS the cosine),
-    emitting only per-query top-5 rows. Query rows are tiled to
-    ≤ KNN_TILE_ELEMS sims elements so a hot cell cannot blow a task's
-    memory. Shared by sim_knn_ivf_kmeans and scan_ivf_probe_kmeans."""
-    import numpy as np
-    import pandas as pd
-
-    if len(probes_pdf) == 0 or len(members_pdf) == 0:
-        return pd.DataFrame({"vec_id": [], "neighbor_id": [], "sim": []}).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "sim": "float64"}
-        )
-    qids = probes_pdf["vec_id"].to_numpy(np.int64)
-    mids = members_pdf["mvec_id"].to_numpy(np.int64)
+def _cell_matmul(np, probes_pdf, members_pdf):
+    """Score function of the exact per-cell rescore: (probing queries ×
+    cell members) cosine sims as one f64 matmul per tile (unit vectors —
+    the dot IS the cosine). Shared by sim_knn_ivf_kmeans and the
+    kmeans-index serving path."""
     Q = np.array(probes_pdf["u"].tolist(), dtype=np.float64)
     M = np.array(members_pdf["mu"].tolist(), dtype=np.float64)
-    # sort members by id ONCE per cell so column order == id order: the
-    # (sim desc, neighbor asc) rank is then the bounded exact top-k
-    # (_topk_cols_exact) instead of a full-member-width lexsort per row,
-    # and the self-mask is one searchsorted lookup per row instead of an
-    # O(rows × members) boolean outer-equality (r14, guide §1.2 per-task
-    # work — identical output, mids are unique within a cell).
-    morder = np.argsort(mids, kind="stable")
-    mids = mids[morder]
-    M = M[morder]
-    rows_per_tile = max(1, KNN_TILE_ELEMS // max(1, len(mids)))
-    out = []
-    for lo in range(0, len(qids), rows_per_tile):
-        sims = Q[lo : lo + rows_per_tile] @ M.T
-        _mask_self_inplace(np, qids[lo : lo + rows_per_tile], mids, sims)
-        k = min(5, sims.shape[1])
-        order = _topk_cols_exact(np, sims, k)
-        tq = qids[lo : lo + rows_per_tile]
-        sel = np.take_along_axis(sims, order, axis=1)
-        keep = np.isfinite(sel)
-        out.append(
-            pd.DataFrame(
-                {
-                    "vec_id": np.repeat(tq, k)[keep.ravel()],
-                    "neighbor_id": mids[order].ravel()[keep.ravel()],
-                    "sim": sel.ravel()[keep.ravel()],
-                }
-            )
-        )
-    return pd.concat(out, ignore_index=True)
-
-
-def _ranked_cell_rescore(key, pdf):
-    """Single-input per-cell kernel over _probe_cells_ranked rows: the
-    members of a cell are exactly its rank-1 rows and its probing queries
-    are all its rows (rank-1 rows probe their own cell too), so one
-    grouped frame carries both rescore sides — delegates to
-    _cell_matmul_rescore unchanged."""
-    import pandas as pd
-
-    own = pdf[pdf["rn"] == 1]
-    members_pdf = pd.DataFrame({"mvec_id": own["vec_id"], "mu": own["u"]})
-    return _cell_matmul_rescore(key, pdf, members_pdf)
+    return lambda lo, hi: Q[lo:hi] @ M.T
 
 
 def _selfgroup_topk(ranked: DataFrame) -> DataFrame:
     """Self-kNN rescore when probes and members come from the SAME ranked
     assignment frame (sim_knn_ivf_kmeans): ONE groupBy("cell") apply
     instead of a two-sided cogroup whose sides each re-evaluated the whole
-    scan → normalize → assign subtree (r14 profile: two ~0.7 s duplicate
-    stages per run at sf0.1; at corpus scale, two full corpus passes where
-    one suffices — guide §7.2 "duplicated subtrees"). Merge window
-    identical to _cogroup_topk."""
-    per_cell = ranked.groupBy("cell").applyInPandas(
-        _ranked_cell_rescore, "vec_id long, neighbor_id long, sim double"
-    )
-    w_rank = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        per_cell.withColumn("rn", F.row_number().over(w_rank))
-        .where(F.col("rn") <= 5)
-        .select("vec_id", "neighbor_id", F.round("sim", 4).alias("sim"))
+    scan → normalize → assign subtree (two full corpus passes where one
+    suffices). The members of a cell are exactly its rank-1 rows and its
+    probing queries are all its rows (rank-1 rows probe their own cell
+    too), so one grouped frame carries both sides. Merge as in
+    _cogroup_topk."""
+    cell_topk = _cell_kernel(_cell_matmul, K_NEIGHBORS)
+
+    def per_cell(key, pdf):
+        own = pdf[pdf["rn"] == 1].rename(columns={"vec_id": "mvec_id", "u": "mu"})
+        return cell_topk(key, pdf, own)
+
+    top = ranked.groupBy("cell").applyInPandas(per_cell, "vec_id long, neighbor_id long, sim double")
+    return _topk_per_query(top, K_NEIGHBORS).select(
+        "vec_id", "neighbor_id", F.round("sim", 4).alias("sim")
     )
 
 
@@ -1075,22 +1067,21 @@ def _cogroup_topk(probes: DataFrame, members: DataFrame) -> DataFrame:
     """Cell-cogrouped matmul rescore + the exact ≤ nprobe·5-per-query merge
     window (per-cell top-5 dominates, so the merge is exact — the
     sim_cosine_knn chunk-merge argument)."""
-    per_cell = (
+    top = (
         probes.groupBy("cell")
         .cogroup(members.groupBy("mcell"))
-        .applyInPandas(_cell_matmul_rescore, "vec_id long, neighbor_id long, sim double")
+        .applyInPandas(
+            _cell_kernel(_cell_matmul, K_NEIGHBORS), "vec_id long, neighbor_id long, sim double"
+        )
     )
-    w_rank = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        per_cell.withColumn("rn", F.row_number().over(w_rank))
-        .where(F.col("rn") <= 5)
-        .select("vec_id", "neighbor_id", F.round("sim", 4).alias("sim"))
+    return _topk_per_query(top, K_NEIGHBORS).select(
+        "vec_id", "neighbor_id", F.round("sim", 4).alias("sim")
     )
 
 
 @op("sim_knn_ivf_kmeans", oracle=None)
 def sim_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF kNN with TRAINED coarse cells (VERDICT r7 item 6): the
+    """IVF kNN with TRAINED coarse cells: the
     quantizer is a seeded KMeans (k-means||) fit on the L2-NORMALIZED
     embeddings — Euclidean-nearest on unit vectors is cosine-nearest, so
     the trained cells partition the sphere the way the cosine search
@@ -1109,8 +1100,8 @@ def sim_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     one vectorized matmul emitting only per-query top-5 rows; a final
     ≤ nprobe·5-rows-per-query window merges cells (per-cell top-5
     dominates, so the merge is exact — the sim_cosine_knn chunk-merge
-    argument). Query rows are tiled to ≤ KNN_TILE_ELEMS sims elements so
-    a hot cell cannot blow a task's memory. The exact-oracled sibling
+    argument). The per-cell kernel is _tiled_topk, so a hot cell's query
+    rows stay tiled and cannot blow a task's memory. The exact-oracled sibling
     keeps the fold rescore: its DuckDB oracle reproduces fold summation
     order; the ROWS-only op is free to sum in matmul order.
 
@@ -1139,9 +1130,9 @@ def sim_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir).embeddings
     cent = _kmeans_cells(spark, _unit_embeddings(e), raw=e)
 
-    # assign + probes in ONE map-side kernel pass (r14, guide §2.4/§4.2):
-    # _probe_cells_ranked replaces the r13 crossJoin + interpreted fold +
-    # n·k-row vec_id window; normalize=True fuses _unit_embeddings into
+    # assign + probes in ONE map-side kernel pass: _probe_cells_ranked
+    # replaces a crossJoin + interpreted fold + n·k-row vec_id window;
+    # normalize=True fuses _unit_embeddings into
     # the same kernel (one Python hop); members are the rank-1 rows of
     # the same frame, so the rescore is a single groupBy("cell") apply
     # (_selfgroup_topk) — one corpus pass end to end.
@@ -1253,16 +1244,12 @@ def sim_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_cosine_knn — but a chunk of CODES is 8 bytes/row, so the same
     500k-row chunk cap that holds 256 MB of raw index holds 4 MB here,
     and a 1e9-vector corpus scans as ~8 GB of codes total where the exact
-    path streams 512 GB. Per-task transients stay tiled (KNN_TILE_ELEMS).
+    path streams 512 GB. Per-task transients stay tiled (_tiled_topk).
 
     Oracle = ROWS (SURVEY §2.0 rule 5): the trained quantizer is ML, not
     SQL. Determinism inside Spark: data-order Lloyd init + fixed sweeps,
     id-asc tie-breaks everywhere; recall@5 vs the exact kNN is gated in
     tests/test_invariants.py."""
-    import numpy as np
-
-    from pyspark.storagelevel import StorageLevel
-
     e = load(spark, sf_dir).embeddings
     agg_sum = lambda arr: F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -1276,131 +1263,67 @@ def sim_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_adc_search(spark, e, unit, codes, books)
 
 
+def _pq_code_chunks(codes: DataFrame):
+    """The code table as bounded (ids, pcodes) chunks (``_range_chunks``),
+    pair-packed driver-side: pcodes[:, p] = code_{2p}*16 + code_{2p+1},
+    the flat index into _adc_pair_scores' 256-entry pair-sum tables."""
+    import numpy as np
+
+    for pdf in _range_chunks(codes):
+        packed = pdf["code"].to_numpy(np.int64)
+        pcodes = np.stack(
+            [
+                ((packed >> (8 * p)) & 0xF) * 16 + ((packed >> (8 * p + 4)) & 0xF)
+                for p in range(PQ_M // 2)
+            ],
+            axis=1,
+        ).astype(np.uint8)
+        yield pdf["vec_id"].to_numpy(np.int64), pcodes
+
+
+def _adc_pair_scores(books):
+    """Score function of the chunked ADC scan over pair-packed codes: the
+    batch's query-to-centroid tables Tq[b, s, k] = <q_sub, centroid> are
+    pair-summed into Tp[b, p, c0*16+c1], so each tile gathers from 4
+    PAIR-SUM tables of 256 entries instead of 8 tables of 16 (half the
+    fancy-index traffic — the dominant cost: a profile put 425 of 696 s
+    in this gather before packing). float32: the ADC scan is the
+    approximate stage (the exact f64 rescore follows), and f32 halves the
+    gather bandwidth. Codebooks travel in the task closure (1024
+    doubles)."""
+
+    def prep(np, pdf, pcodes):
+        Q = np.array(pdf["u"].tolist(), dtype=np.float64)
+        Tq = np.einsum("bsd,skd->bsk", Q.reshape(len(Q), PQ_M, PQ_SUBDIM), books).astype(
+            np.float32
+        )
+        Tp = (Tq[:, 0::2, :, None] + Tq[:, 1::2, None, :]).reshape(len(Q), PQ_M // 2, PQ_K * PQ_K)
+
+        def score_tile(lo, hi):
+            T = Tp[lo:hi]
+            sims = np.zeros((len(T), len(pcodes)), dtype=np.float32)
+            for p in range(PQ_M // 2):
+                sims += T[:, p, :][:, pcodes[:, p]]
+            return sims
+
+        return score_tile
+
+    return prep
+
+
 def _pq_adc_search(spark: SparkSession, e: DataFrame, unit: DataFrame, codes: DataFrame, books) -> DataFrame:
     """The ADC scan + exact-rescore half of the PQ path, factored so the
     persisted-index probe (scan_pq_probe) runs the same search over codes
-    READ FROM STORAGE: sequential bounded-chunk broadcasts of the code
-    table (8 B/row — a 500k-row chunk is 4 MB), pair-summed lookup
-    tables, global top-PQ_CAND merge, exact cosine rescore of candidates
-    only. ``unit`` is the QUERY workload (any subset of vectors)."""
-    import numpy as np
-
-    from pyspark.storagelevel import StorageLevel
-
-    # bounded chunks of the code table (quantile boundaries — the
-    # _index_chunks argument: chunk count tracks row count, never id-space
-    # width; each fetch is a pushed-down vec_id range over the codes frame)
-    total, lo, hi = codes.agg(F.count("*"), F.min("vec_id"), F.max("vec_id")).first()
-    target = max(INDEX_CHUNK_MIN, min(INDEX_CHUNK_CAP, total))
-    n_chunks = max(1, -(-total // target))
-    if n_chunks == 1:
-        cuts: list[int] = []
-    else:
-        eps = max(1e-4, 0.05 / n_chunks)
-        qs = codes.stat.approxQuantile("vec_id", [i / n_chunks for i in range(1, n_chunks)], eps)
-        cuts = sorted({int(q) for q in qs if lo < int(q) <= hi})
-    bounds = [lo, *cuts, hi + 1]
-
-    def adc_kernel(bc):
-        import pandas as pd
-
-        def gen(batches):
-            # pcodes: (chunk, PQ_M//2) uint8 — adjacent 4-bit codes packed
-            # into one byte driver-side, so the scan gathers from 4
-            # PAIR-SUM tables of 256 entries instead of 8 tables of 16
-            # (half the fancy-index traffic — the dominant cost: a profile
-            # put 425 of 696 s in this loop before packing)
-            aids, pcodes = bc.value
-            rows_per_tile = max(1, KNN_TILE_ELEMS // max(1, len(aids)))
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                qids = pdf["vec_id"].to_numpy(np.int64)
-                Q = np.array(pdf["u"].tolist(), dtype=np.float64)
-                # Tq[b, s, k] = <q_sub, centroid>, pair-summed into
-                # Tp[b, p, c0*16+c1]; float32 — the ADC scan is the
-                # approximate stage (the exact f64 rescore follows), and
-                # f32 halves the gather bandwidth
-                Tq = np.einsum(
-                    "bsd,skd->bsk", Q.reshape(len(Q), PQ_M, PQ_SUBDIM), books
-                ).astype(np.float32)
-                Tp = (Tq[:, 0::2, :, None] + Tq[:, 1::2, None, :]).reshape(
-                    len(Q), PQ_M // 2, PQ_K * PQ_K
-                )
-                out = []
-                for t0 in range(0, len(qids), rows_per_tile):
-                    T = Tp[t0 : t0 + rows_per_tile]
-                    sims = np.zeros((len(T), len(aids)), dtype=np.float32)
-                    for p in range(PQ_M // 2):
-                        sims += T[:, p, :][:, pcodes[:, p]]
-                    sims[qids[t0 : t0 + rows_per_tile, None] == aids[None, :]] = -np.inf
-                    k = min(PQ_CAND, sims.shape[1])
-                    # per-chunk candidates need no intra-chunk order — the
-                    # global top-PQ_CAND window sorts the union by
-                    # (asim desc, id asc); argpartition (deterministic on
-                    # identical input) avoids lexsorting tile×chunk rows
-                    top = np.argpartition(-sims, k - 1, axis=1)[:, :k]
-                    sel = np.take_along_axis(sims, top, axis=1)
-                    keep = np.isfinite(sel)
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "vec_id": np.repeat(qids[t0 : t0 + rows_per_tile], k)[keep.ravel()],
-                                "neighbor_id": aids[top].ravel()[keep.ravel()],
-                                "asim": sel.ravel()[keep.ravel()].astype(np.float64),
-                            }
-                        )
-                    )
-                yield pd.concat(out, ignore_index=True)
-
-        return gen
-
-    q = unit.repartition(width(spark), "vec_id").persist(StorageLevel.MEMORY_AND_DISK)
-    partials: list[DataFrame] = []
-    try:
-        for start, end in zip(bounds, bounds[1:]):
-            pdf = (
-                codes.where((F.col("vec_id") >= start) & (F.col("vec_id") < end))
-                .toPandas()
-                .sort_values("vec_id", ignore_index=True)
-            )
-            if len(pdf) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy(np.int64)
-            packed = pdf["code"].to_numpy(np.int64)
-            # pair-packed: pcodes[:, p] = code_{2p}*16 + code_{2p+1}, the
-            # flat index into the kernel's 256-entry pair-sum tables
-            pcodes = np.stack(
-                [
-                    ((packed >> (8 * p)) & 0xF) * 16 + ((packed >> (8 * p + 4)) & 0xF)
-                    for p in range(PQ_M // 2)
-                ],
-                axis=1,
-            ).astype(np.uint8)
-            bc = spark.sparkContext.broadcast((ids, pcodes))
-            try:
-                partials.append(
-                    pin(q.mapInPandas(adc_kernel(bc), "vec_id long, neighbor_id long, asim double"))
-                )
-            finally:
-                bc.destroy()
-    finally:
-        q.unpersist()
-    if not partials:
-        return spark.createDataFrame([], "vec_id long, neighbor_id long, sim double")
-    allc = reduce(DataFrame.unionAll, partials)
-    w_cand = Window.partitionBy("vec_id").orderBy(F.col("asim").desc(), F.col("neighbor_id").asc())
-    cand = (
-        allc.withColumn("rn", F.row_number().over(w_cand))
-        .where(F.col("rn") <= PQ_CAND)
-        .select("vec_id", "neighbor_id")
-    )
-    w_rank = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        _exact_rescore(e, cand)
-        .withColumn("rn", F.row_number().over(w_rank))
-        .where(F.col("rn") <= K_NEIGHBORS)
-        .select("vec_id", "neighbor_id", F.round("sim", 4).alias("sim"))
+    READ FROM STORAGE: the code table streams through _blocked_result in
+    bounded chunks (8 B/row — a 500k-row chunk is 4 MB), each query keeps
+    its global top-PQ_CAND by ADC score, and only those candidates pay
+    the exact cosine rescore. ``unit`` is the QUERY workload (any subset
+    of vectors)."""
+    cand = _blocked_result(
+        spark, unit, _pq_code_chunks(codes), _adc_pair_scores(books), PQ_CAND, "asim"
+    ).select("vec_id", "neighbor_id")
+    return _topk_per_query(_exact_rescore(e, cand), K_NEIGHBORS).select(
+        "vec_id", "neighbor_id", F.round("sim", 4).alias("sim")
     )
 
 
@@ -1465,7 +1388,7 @@ def _mmr_oracle() -> str:
 
 @op("sim_rerank_mmr", oracle=_mmr_oracle())
 def sim_rerank_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximal-marginal-relevance re-ranking (r8 addition): each query's
+    """Maximal-marginal-relevance re-ranking: each query's
     exact top-{MMR_POOL} cosine pool is greedily re-ranked to {MMR_K}
     results balancing relevance against redundancy — score = λ·sim(q,d) −
     (1−λ)·max sim(d, selected), λ=0.7 — the standard diversification pass
@@ -1489,32 +1412,10 @@ def sim_rerank_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the re-rank consumes (vec_id, neighbor_id, sim) triples, not vectors).
     """
     e = load(spark, sf_dir).embeddings
-
-    def emit(np, pd, qids, aids, sims):
-        _mask_self_inplace(np, qids, aids, sims)
-        top = _topk_cols_exact(np, sims, MMR_POOL)
-        rows = np.arange(len(qids))[:, None]
-        keep = np.isfinite(sims[rows, top])
-        return pd.DataFrame(
-            {
-                "vec_id": np.repeat(qids, top.shape[1])[keep.ravel()],
-                "neighbor_id": aids[top].ravel()[keep.ravel()],
-                "sim": sims[rows, top].ravel()[keep.ravel()],
-            }
-        )
-
-    union = _blocked_result(spark, sf_dir, emit, "vec_id bigint, neighbor_id bigint, sim double")
-    if getattr(union, "_up_single_chunk", False):
-        # one chunk: per-query top-MMR_POOL is already global (the
-        # sim_cosine_knn argument) — skip the merge window's exchange+sort
-        cand = pin(union.select("vec_id", "neighbor_id", F.round("sim", 4).alias("rsim")))
-    else:
-        w10 = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-        cand = pin(
-            union.withColumn("rn", F.row_number().over(w10))
-            .where(F.col("rn") <= MMR_POOL)
-            .select("vec_id", "neighbor_id", F.round("sim", 4).alias("rsim"))
-        )
+    pool = _blocked_result(
+        spark, e.select("vec_id", "embedding"), _index_chunks(spark, sf_dir), _dense_scores, MMR_POOL
+    )
+    cand = pin(pool.select("vec_id", "neighbor_id", F.round("sim", 4).alias("rsim")))
     a, b = cand.alias("a"), cand.alias("b")
     dpairs = a.join(
         b,
@@ -1809,11 +1710,8 @@ def _ivf_serve_probe(e: DataFrame, cent: DataFrame, back: DataFrame) -> DataFram
             / (F.col("nrm") * F.col("nnrm"))
         ).alias("sim"),
     )
-    w_rank = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w_rank))
-        .where(F.col("rn") <= 5)
-        .select("vec_id", "neighbor_id", F.round("sim", 4).alias("sim"))
+    return _topk_per_query(scored, K_NEIGHBORS).select(
+        "vec_id", "neighbor_id", F.round("sim", 4).alias("sim")
     )
 
 
@@ -1963,7 +1861,7 @@ def _write_ivf_kmeans_index(
 @op("scan_ivf_probe_kmeans", oracle=None)
 def scan_ivf_probe_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN serving from the persisted KMEANS-quantized index — the
-    deployment form of scan_ivf_probe (VERDICT r9 "What's wrong" #2):
+    deployment form of scan_ivf_probe:
     the label-quantizer probe is the oracle-EXACT contract of the read
     path but its FIXED cell count makes cell width linear in corpus size;
     this op grades the form a 100 TB deployment actually runs — an
@@ -1979,7 +1877,7 @@ def scan_ivf_probe_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     READS ONLY PROBED PARTITIONS (PartitionFilters, proved by
     tests/test_plans.py::test_ivf_kmeans_probe_prunes_partitions) — and
     the within-cell rescore is the per-cell cogroup matmul kernel
-    (_cell_matmul_rescore), not the pair-join fold that ships 64-double
+    (_cogroup_topk), not the pair-join fold that ships 64-double
     arrays into every candidate row.
 
     Oracle = ROWS (SURVEY §2.0 rule 5): the trained quantizer isn't
@@ -2233,79 +2131,51 @@ def sim_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivfpq_search(e, probes, members, books)
 
 
-def _adc_cell_kernel(books):
-    """Per-probed-cell cogroup ADC kernel factory: members arrive as 8 B
-    packed codes, each query gathers its PQ_M precomputed table lookups
-    per member code (no decompression), keeps its per-cell top-PQ_CAND.
-    Codebooks travel in the task closure (1024 doubles). Query rows tile
-    to ≤ KNN_TILE_ELEMS sims elements so a hot cell cannot blow a task's
-    memory. Shared by sim_knn_ivf_pq (in-memory) and scan_ivfpq_probe
-    (persisted composed index) so the composed search cannot drift."""
-    import numpy as np
+def _adc_cell_scores(books):
+    """Score function of the per-probed-cell ADC kernel: members arrive as
+    8 B packed codes, and each tile gathers every query's PQ_M
+    precomputed f64 table lookups per member code (no decompression).
+    Codebooks travel in the task closure (1024 doubles). Shared by
+    sim_knn_ivf_pq (in-memory) and scan_ivfpq_probe (persisted composed
+    index) through _ivfpq_search, so the composed search cannot drift."""
 
-    def adc_cell(key, probes_pdf, members_pdf):
-        import pandas as pd
-
-        if len(probes_pdf) == 0 or len(members_pdf) == 0:
-            return pd.DataFrame({"vec_id": [], "neighbor_id": [], "asim": []}).astype(
-                {"vec_id": "int64", "neighbor_id": "int64", "asim": "float64"}
-            )
-        qids = probes_pdf["vec_id"].to_numpy(np.int64)
-        mids = members_pdf["mvec_id"].to_numpy(np.int64)
+    def prep(np, probes_pdf, members_pdf):
         packed = members_pdf["code"].to_numpy(np.int64)
-        mcodes = np.stack(
-            [((packed >> (4 * m)) & 0xF) for m in range(PQ_M)], axis=1
-        ).astype(np.uint8)
+        mcodes = np.stack([((packed >> (4 * m)) & 0xF) for m in range(PQ_M)], axis=1).astype(
+            np.uint8
+        )
         Q = np.array(probes_pdf["u"].tolist(), dtype=np.float64)
         Tq = np.einsum("bsd,skd->bsk", Q.reshape(len(Q), PQ_M, PQ_SUBDIM), books)
-        rows_per_tile = max(1, KNN_TILE_ELEMS // max(1, len(mids)))
-        out = []
-        for lo in range(0, len(qids), rows_per_tile):
-            T = Tq[lo : lo + rows_per_tile]
-            sims = np.zeros((len(T), len(mids)))
+
+        def score_tile(lo, hi):
+            T = Tq[lo:hi]
+            sims = np.zeros((len(T), len(mcodes)))
             for m in range(PQ_M):
                 sims += T[:, m, :][:, mcodes[:, m]]
-            sims[qids[lo : lo + rows_per_tile, None] == mids[None, :]] = -np.inf
-            k = min(PQ_CAND, sims.shape[1])
-            top = np.argpartition(-sims, k - 1, axis=1)[:, :k]
-            sel = np.take_along_axis(sims, top, axis=1)
-            keep = np.isfinite(sel)
-            out.append(
-                pd.DataFrame(
-                    {
-                        "vec_id": np.repeat(qids[lo : lo + rows_per_tile], k)[keep.ravel()],
-                        "neighbor_id": mids[top].ravel()[keep.ravel()],
-                        "asim": sel.ravel()[keep.ravel()],
-                    }
-                )
-            )
-        return pd.concat(out, ignore_index=True)
+            return sims
 
-    return adc_cell
+        return score_tile
+
+    return prep
 
 
 def _ivfpq_search(e: DataFrame, probes: DataFrame, members: DataFrame, books) -> DataFrame:
     """The composed IVF+PQ search finishing: cell-cogrouped ADC candidate
-    stage (_adc_cell_kernel), global top-PQ_CAND merge window, EXACT
-    cosine rescore of candidates only (the sim_knn_lsh/ivf/pq rescore
-    discipline, shared _exact_rescore fold), final top-5."""
+    stage (per-cell top-PQ_CAND via _cell_kernel), global top-PQ_CAND
+    merge window, EXACT cosine rescore of candidates only (the
+    sim_knn_lsh/ivf/pq rescore discipline, shared _exact_rescore fold),
+    final top-5."""
     per_cell = (
         probes.groupBy("cell")
         .cogroup(members.groupBy("mcell"))
-        .applyInPandas(_adc_cell_kernel(books), "vec_id long, neighbor_id long, asim double")
+        .applyInPandas(
+            _cell_kernel(_adc_cell_scores(books), PQ_CAND, "asim"),
+            "vec_id long, neighbor_id long, asim double",
+        )
     )
-    w_cand = Window.partitionBy("vec_id").orderBy(F.col("asim").desc(), F.col("neighbor_id").asc())
-    cand = (
-        per_cell.withColumn("rn", F.row_number().over(w_cand))
-        .where(F.col("rn") <= PQ_CAND)
-        .select("vec_id", "neighbor_id")
-    )
-    w_rank = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        _exact_rescore(e, cand)
-        .withColumn("rn", F.row_number().over(w_rank))
-        .where(F.col("rn") <= 5)
-        .select("vec_id", "neighbor_id", F.round("sim", 4).alias("sim"))
+    cand = _topk_per_query(per_cell, PQ_CAND, "asim").select("vec_id", "neighbor_id")
+    return _topk_per_query(_exact_rescore(e, cand), K_NEIGHBORS).select(
+        "vec_id", "neighbor_id", F.round("sim", 4).alias("sim")
     )
 
 

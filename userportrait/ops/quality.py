@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load, pin, width
+from ..catalog import load, pin
 from ..registry import OPS, op
 
 # ---------------------------------------------------------------------------
@@ -846,51 +846,20 @@ def _dim_ablation_oracle() -> str:
 
 def _truncated_knn(spark: SparkSession, sf_dir: str, dim: int) -> DataFrame:
     """Exact top-5 cosine kNN over the FIRST ``dim`` embedding dimensions —
-    the §2.K blocked broadcast-index kernel (sequential bounded chunks,
-    per-chunk top-5, window re-rank) with the index and query sides
-    truncated-then-renormalized. Chunks come from llm_similarity's
-    ``_index_chunks`` (full-dim, already row-normalized); slicing then
-    renormalizing the slice is exact because normalization is
-    scale-invariant."""
-    from functools import reduce
+    the §2.K blocked broadcast-index search (``_blocked_result``) with the
+    index and query sides truncated-then-renormalized. Chunks come from
+    llm_similarity's ``_index_chunks`` (full-dim, already row-normalized);
+    slicing then renormalizing the slice is exact because normalization
+    is scale-invariant."""
+    import numpy as np
 
-    from pyspark.storagelevel import StorageLevel
+    from .llm_similarity import K_NEIGHBORS, _blocked_result, _dense_scores, _index_chunks
 
-    from .llm_similarity import K_NEIGHBORS, KNN_TILE_ELEMS, _index_chunks
-
-    schema = "vec_id bigint, neighbor_id bigint, sim double"
-
-    def kernel(bc):
-        import numpy as np
-        import pandas as pd
-
-        rows_per_tile = max(1, KNN_TILE_ELEMS // max(1, len(bc.value[0])))
-
-        def gen(batches):
-            aids, amat = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                qids = pdf["vec_id"].to_numpy(np.int64)
-                qmat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
-                for lo in range(0, len(qids), rows_per_tile):
-                    tq = qids[lo : lo + rows_per_tile]
-                    sims = qmat[lo : lo + rows_per_tile] @ amat.T
-                    self_mask = tq[:, None] == aids[None, :]
-                    sims = np.where(self_mask, -np.inf, sims)
-                    top = np.argsort(-sims, axis=1, kind="stable")[:, :K_NEIGHBORS]
-                    rows = np.arange(len(tq))[:, None]
-                    keep = np.isfinite(sims[rows, top])
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": np.repeat(tq, top.shape[1])[keep.ravel()],
-                            "neighbor_id": aids[top].ravel()[keep.ravel()],
-                            "sim": sims[rows, top].ravel()[keep.ravel()],
-                        }
-                    )
-
-        return gen
+    def sliced(chunks):
+        for ids, mat in chunks:
+            sub = mat[:, :dim].copy()
+            sub /= np.linalg.norm(sub, axis=1, keepdims=True)
+            yield ids, sub
 
     q_nibble = (
         F.instr(F.lit("0123456789abcdef"), F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1))
@@ -900,32 +869,9 @@ def _truncated_knn(spark: SparkSession, sf_dir: str, dim: int) -> DataFrame:
         load(spark, sf_dir)
         .embeddings.where(q_nibble < _Q_NIBBLE)
         .select("vec_id", F.slice("embedding", 1, dim).alias("embedding"))
-        .repartition(width(spark), "vec_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    partials: list[DataFrame] = []
-    try:
-        for ids, mat in _index_chunks(spark, sf_dir):
-            import numpy as np
-
-            sub = mat[:, :dim].copy()
-            sub /= np.linalg.norm(sub, axis=1, keepdims=True)
-            bc = spark.sparkContext.broadcast((ids, sub))
-            try:
-                partials.append(pin(q.mapInPandas(kernel(bc), schema)))
-            finally:
-                bc.destroy()
-    finally:
-        q.unpersist()
-    if not partials:
-        return spark.createDataFrame([], schema)
-    union = reduce(DataFrame.unionAll, partials)
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        union.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= K_NEIGHBORS)
-        .select("vec_id", "neighbor_id")
-    )
+    top = _blocked_result(spark, q, sliced(_index_chunks(spark, sf_dir)), _dense_scores, K_NEIGHBORS)
+    return top.select("vec_id", "neighbor_id")
 
 
 @op("embed_dim_ablation", oracle=_dim_ablation_oracle())

@@ -1082,13 +1082,13 @@ def _band_verify_joins(bands: DataFrame, idx: DataFrame) -> DataFrame:
     )
 
 
-# Bloom prefilter sizing for dedup-on-ingest: UP_INGEST_BLOOM_BITS bits
-# (must be a multiple of 64), 3 hash probes per key. The default is sized
+# Bloom prefilter sizing for dedup-on-ingest: INGEST_BLOOM_BITS bits
+# (must be a multiple of 64), 3 hash probes per key. The value is sized
 # for the sf fixtures (≤ ~20k distinct band keys → fp ≈ 0.3%); a deploy
 # sizes bits ≈ 14·n_keys for ~1% fp at 3 hashes (the standard m/n curve)
 # — 100 TB ingest against a 10B-key index is an 18 GB bitmap SHARDED by
 # key range; here one literal word array suffices and ships once per plan.
-INGEST_BLOOM_BITS = int(os.environ.get("UP_INGEST_BLOOM_BITS", str(1 << 18)))
+INGEST_BLOOM_BITS = 1 << 18
 INGEST_BLOOM_HASHES = 3
 
 
