@@ -14,28 +14,22 @@ from userportrait.testing.check import compare_op
 
 from .conftest import SF_DIR
 
-# Tier split: the driver's own 50-op grading window (the first 50
-# queries() entries — exactly what CORRECTNESS_r{N} will grade) runs in the
-# default tier, and so do the ops that reach llm_similarity's shared blocked
-# score-and-top-k kernel (_tiled_topk) by a path no window op takes — exact
-# chunks, threshold emit, truncated dimensions, chunked ADC, the persisted
-# PQ and IVF-PQ probes — so a change to that kernel is oracle-checked
-# without the slow tier. sim_rerank_mmr stays slow: its pool is
-# sim_cosine_knn's exact-chunk call at k=10, and its unrolled DuckDB
-# oracle alone takes ~55 s at sf0.001. The rest of the
-# registry is the slow tier (UP_SLOW_TESTS=1). The assertion set over the
-# full registry is unchanged.
-_SHARED_KNN_KERNEL = {
-    "sim_cosine_knn",
-    "sim_threshold_pairs",
-    "embed_dim_ablation",
-    "sim_knn_pq",
-    "scan_pq_probe",
-    "scan_ivfpq_probe",
+# Tier split: the 50-op grading window (the first 50 queries() entries;
+# see registry.GRADE_FIRST) runs in the default tier, and so do the seven oldest-evidence greens
+# named below: they sit just outside the window and keep their
+# default-tier cases. The rest of the registry is the slow tier
+# (UP_SLOW_TESTS=1). The assertion set over the full registry is unchanged.
+_DEFAULT_TIER = set(list(load_all_ops())[:50]) | {
+    "events_rolling_distinct_users",
+    "agg_hll_rolling_distinct",
+    "doc_split_drift",
+    "dq_profile_columns",
+    "events_forecast_holt",
+    "doc_importance_resample",
+    "events_cuped_adjust",
 }
-_WINDOW = set(list(load_all_ops())[:50]) | _SHARED_KNN_KERNEL
 ALL_OPS = [
-    n if n in _WINDOW else pytest.param(n, marks=pytest.mark.slow)
+    n if n in _DEFAULT_TIER else pytest.param(n, marks=pytest.mark.slow)
     for n in sorted(load_all_ops())
 ]
 

@@ -3731,14 +3731,15 @@ def test_shingle_cache_per_task_and_overflow(monkeypatch):
 
 
 def test_topk_cols_exact_matches_full_stable_argsort():
-    """r14 optimization guard: the bounded-candidate argpartition top-k
-    must reproduce np.argsort(-sims, kind='stable')[:, :k] bit for bit on
-    adversarial inputs — heavy duplicate ties (the replica workload),
-    all-equal rows (ties past the candidate horizon -> fallback), widths
-    below the candidate window, and -inf self-masked cells."""
+    """The bounded-candidate argpartition top-k must reproduce
+    np.argsort(-sims, kind='stable')[:, :k] bit for bit on adversarial
+    inputs — heavy duplicate ties (the replica workload), all-equal rows
+    (ties past the candidate horizon -> fallback), widths below the
+    candidate window, and -inf self-masked cells — at the kNN k's and at
+    the ADC candidate count PQ_CAND."""
     import numpy as np
 
-    from userportrait.ops.llm_similarity import _topk_cols_exact
+    from userportrait.ops.llm_similarity import PQ_CAND, _topk_cols_exact
 
     rng = np.random.default_rng(7)
     cases = []
@@ -3753,10 +3754,39 @@ def test_topk_cols_exact_matches_full_stable_argsort():
     inf_case[np.arange(25), rng.integers(0, 400, 25)] = -np.inf
     cases.append(inf_case)
     for sims in cases:
-        for k in (1, 5, 10):
+        for k in (1, 5, 10, PQ_CAND):
             want = np.argsort(-sims, axis=1, kind="stable")[:, :k]
             got = _topk_cols_exact(np, sims.copy(), k)
             assert (got == want).all(), (sims.shape, k)
+
+
+def test_topk_cols_exact_untied_rows_skip_full_sort():
+    """On untied rows the exact top-k is the partition path alone: at
+    k = PQ_CAND (the ADC candidate count) over a chunk far wider than k,
+    no row may fall back to the full-width stable sort. The fallback is
+    seen as an argsort over the whole width, counted through a numpy
+    proxy."""
+    import numpy as np
+
+    from userportrait.ops.llm_similarity import PQ_CAND, _topk_cols_exact
+
+    class _ArgsortWidths:
+        def __init__(self):
+            self.widths = []
+
+        def __getattr__(self, name):
+            return getattr(np, name)
+
+        def argsort(self, a, *args, **kwargs):
+            self.widths.append(a.shape[-1])
+            return np.argsort(a, *args, **kwargs)
+
+    sims = np.random.default_rng(11).standard_normal((32, 20_000)).astype(np.float32)
+    for k in (5, PQ_CAND):
+        spy = _ArgsortWidths()
+        got = _topk_cols_exact(spy, sims.copy(), k)
+        assert (got == np.argsort(-sims, axis=1, kind="stable")[:, :k]).all(), k
+        assert spy.widths and max(spy.widths) < sims.shape[1], (k, spy.widths)
 
 
 def test_centroid_model_explicit_no_collect(spark, sf_dir):

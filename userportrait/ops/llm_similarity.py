@@ -160,10 +160,13 @@ def _topk_cols_exact(np, sims, k, cand_width=64):
     guard: a row whose candidate-set minimum ties its k-th value may have
     further ties beyond the candidate horizon and falls back to the full
     stable sort — so the result is bit-identical on every input,
-    duplicates included."""
+    duplicates included. The horizon is at least 2k wide, so on untied
+    rows the candidate minimum lies strictly below the k-th value and the
+    fallback runs only on a real tie at the cut (a horizon of exactly k
+    would make every row fall back)."""
     n, w = sims.shape
     k = min(k, w)
-    c = min(max(cand_width, k), w)
+    c = min(max(cand_width, 2 * k), w)
     if c >= w:
         return np.argsort(-sims, axis=1, kind="stable")[:, :k]
     part = np.argpartition(sims, w - c, axis=1)[:, w - c :]
@@ -1340,14 +1343,17 @@ MMR_LAMBDA = 0.7
 def _mmr_oracle() -> str:
     """Unrolled greedy MMR in plain SQL: sel_k builds on sel_{k-1} via a
     penalty join + windowed argmax — the same k-1 fixed steps the Spark
-    plan runs, so the selection is identical by construction."""
+    plan runs, so the selection is identical by construction. The pool
+    (c10) and its pair sims (pairs) are MATERIALIZED: every step reads
+    them, and inlined each read recomputes the all-pairs sims (56 s at
+    sf0.001 inlined, 2 s materialized, same rows)."""
     sql = _ORACLE_SIMS_CTE + f"""
     , cand AS (
       SELECT vec_id, neighbor_id, round(sim, 4) AS rsim,
              row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, neighbor_id ASC) AS rn
       FROM sims
-    ), c10 AS (SELECT vec_id, neighbor_id, rsim FROM cand WHERE rn <= {MMR_POOL}),
-    pairs AS (
+    ), c10 AS MATERIALIZED (SELECT vec_id, neighbor_id, rsim FROM cand WHERE rn <= {MMR_POOL}),
+    pairs AS MATERIALIZED (
       SELECT a.vec_id AS q, a.neighbor_id AS x, b.neighbor_id AS y, round(s.sim, 4) AS psim
       FROM c10 a JOIN c10 b ON a.vec_id = b.vec_id AND a.neighbor_id <> b.neighbor_id
       JOIN sims s ON s.vec_id = a.neighbor_id AND s.neighbor_id = b.neighbor_id

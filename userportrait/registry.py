@@ -59,10 +59,7 @@ _LOADED = False
 # ``queries()`` entries, and tier-1's differential (tests/test_differential.py)
 # runs the same 50; the rest of the registry follows in module order and is
 # differentialed in the slow tier. GRADE_FIRST fixes the window's members,
-# each group below for the reason given at its head. The kNN ops that
-# share llm_similarity's blocked score-and-top-k kernel join tier-1's
-# differential beside the window (tests/test_differential.py) rather than
-# displacing a member, so no window op drops to the slow tier.
+# each group below for the reason given at its head.
 GRADE_FIRST: tuple[str, ...] = (
     # ROWS-only ops: sketch aggregates and the trained-quantizer ANN ops,
     # whose outputs come from a sketch or a trained model rather than an
@@ -113,6 +110,20 @@ GRADE_FIRST: tuple[str, ...] = (
     "stream_foreachbatch_sink",
     "stream_complete_counts",
     "stream_update_upsert",
+    # the kNN ops on llm_similarity's blocked score-and-top-k kernel
+    # (_tiled_topk), one per path into it: exact chunks, the threshold
+    # emit, the MMR pool, truncated dimensions and the chunked ADC scan
+    # (through _blocked_result), and the persisted PQ and IVF-PQ probes;
+    # the trained-quantizer ops above also cover the per-cell form
+    # (_cell_kernel). A change to that kernel is then graded in the
+    # window, not in the slow tier only:
+    "sim_cosine_knn",
+    "sim_threshold_pairs",
+    "sim_rerank_mmr",
+    "embed_dim_ablation",
+    "sim_knn_pq",
+    "scan_pq_probe",
+    "scan_ivfpq_probe",
     # filler: the oldest-evidence greens:
     "join_interval",
     "agg_groupby_basic",
@@ -123,13 +134,6 @@ GRADE_FIRST: tuple[str, ...] = (
     "events_ab_ttest",
     "agg_cms_topk",
     "fn_higher_order",
-    "events_rolling_distinct_users",
-    "agg_hll_rolling_distinct",
-    "doc_split_drift",
-    "dq_profile_columns",
-    "events_forecast_holt",
-    "doc_importance_resample",
-    "events_cuped_adjust",
 )
 
 
