@@ -15,7 +15,7 @@ from userportrait.testing.check import compare_op
 from .conftest import SF_DIR
 
 # Tier split: the 50-op grading window (the first 50 queries() entries;
-# see registry.GRADE_FIRST) runs in the default tier, and so do the seven oldest-evidence greens
+# see registry.GRADE_FIRST) runs in the default tier, and so do the twelve oldest-evidence greens
 # named below: they sit just outside the window and keep their
 # default-tier cases. The rest of the registry is the slow tier
 # (UP_SLOW_TESTS=1). The assertion set over the full registry is unchanged.
@@ -27,6 +27,11 @@ _DEFAULT_TIER = set(list(load_all_ops())[:50]) | {
     "events_forecast_holt",
     "doc_importance_resample",
     "events_cuped_adjust",
+    "events_attribution",
+    "tag_decay_score",
+    "events_ab_ttest",
+    "agg_cms_topk",
+    "fn_higher_order",
 }
 ALL_OPS = [
     n if n in _DEFAULT_TIER else pytest.param(n, marks=pytest.mark.slow)

@@ -367,7 +367,6 @@ def test_pinned_ops_green_with_reliable_checkpoint(spark, duck, tmp_path):
             "events_dau_stickiness",  # curation: pinned (day,user) distinct
             "tag_basket_affinity",  # curation: pinned 3-table join subtree
             "dedup_cc_clusters",  # pipeline_ext: per-round label pinning
-            "win_rank_distributed",  # windows: pinned range exchange
             "events_growth_accounting",  # curation: pinned (user, week) seq
             "tag_funnel_windowed",  # curation: pinned per-user stage firsts (r7)
             "dedup_near_minhash",  # llm_dedup: pinned signature table (r7)

@@ -4,6 +4,8 @@ regression even when values match (VERDICT r1 standing rules)."""
 
 from __future__ import annotations
 
+import pytest
+
 from userportrait.registry import load_all_ops
 
 from .conftest import SF_DIR
@@ -148,50 +150,21 @@ def test_dpp_join_injects_dynamic_pruning(spark):
     assert "dynamicpruning" in _plan(spark, "scan_dpp_join")
 
 
-def test_distributed_rank_avoids_single_partition_on_data(spark):
-    """win_rank_distributed's point: the DATA path ranks via range
-    repartition + local sort, pinned by an eager localCheckpoint (ADVICE r4:
-    both the counts branch and the mapInPandas branch must read the SAME
-    materialized partitioning, not two re-evaluations of a nondeterministic
-    range exchange). The final plan therefore reads the checkpointed RDD;
-    any SinglePartition exchange may only feed the 32-row offsets frame
-    (window over partition counts), never the data path."""
-    plan = _plan(spark, "win_rank_distributed")
-    assert "ExistingRDD" in plan, plan[:500]  # checkpoint pinned the exchange
-    # The offsets subtree (32-row partition-count aggregate, under the
-    # BroadcastExchange build side) is allowed SinglePartition; the probe
-    # side — checkpointed scan -> MapInPandas — is not.
-    probe_side = plan.split("BroadcastExchange", 1)[0]
-    assert "MapInPandas" in probe_side
-    assert "Exchange SinglePartition" not in probe_side
-
-
-def test_pack_sequences_avoids_single_partition_on_data(spark):
-    """doc_pack_sequences' global token offset must run the distributed
-    decomposition (VERDICT r10 #1): pinned range partitions + a
-    mapInPandas running token cumsum + broadcast ≤32-row prefix offsets.
-    The document rows must NEVER cross a SinglePartition exchange — only
-    the partition-count metadata window may (under the BroadcastExchange
-    build side)."""
-    plan = _plan(spark, "doc_pack_sequences")
-    assert "ExistingRDD" in plan, plan[:500]  # checkpoint pinned the range exchange
-    probe_side = plan.split("BroadcastExchange", 1)[0]
-    assert "MapInPandas" in probe_side
-    assert "Exchange SinglePartition" not in probe_side
-    # and no full-width window over the document rows anywhere
-    assert plan.count("Exchange SinglePartition") <= 1
-
-
-def test_rfm_rfe_scored_paths_have_no_single_partition_exchange(spark):
-    """tag_rfm / tag_rfe quintile scoring must run the distributed exact-
-    ntile decomposition (userportrait/ranking.py) — a global ntile window
-    would plan Exchange SinglePartition and funnel every customer row
-    through one task at 100 TB."""
-    for name in ("tag_rfm", "tag_rfe"):
-        plan = _plan(spark, name)
-        assert "Exchange SinglePartition" not in plan, f"{name}: {plan[:800]}"
-        # scoring runs as per-bucket windows, hash-partitioned on bucket id
-        assert "hashpartitioning(_b_" in plan, f"{name}: {plan[:800]}"
+@pytest.mark.parametrize(
+    "name",
+    ["tag_rfm", "tag_rfe", "win_rank_distributed", "sort_multikey_nulls", "doc_pack_sequences"],
+)
+def test_exact_prefix_plans_are_bucketed_without_single_partition(spark, name):
+    """The global ranks and running sums of these ops run through
+    ranking.exact_prefix: per-bucket windows hash-partitioned on the
+    literal bucket id. A global window would plan Exchange SinglePartition
+    and funnel every row through one task at 100 TB, and the offsets come
+    back as literals, so no SinglePartition may appear at all; nor may a
+    Python-worker counter."""
+    plan = _plan(spark, name)
+    assert "Exchange SinglePartition" not in plan, f"{name}: {plan[:800]}"
+    assert "hashpartitioning(_b_" in plan, f"{name}: {plan[:800]}"
+    assert "MapInPandas" not in plan, f"{name}: {plan[:800]}"
 
 
 def test_clean_pipeline_neardup_drop_is_anti_join(spark):
@@ -346,10 +319,11 @@ def test_funnel_windowed_pushes_stage_filters_to_scan(spark):
 
 
 def test_no_unaudited_driver_side_pulls():
-    """Mechanizes the 'no driver-side data pulls' audit (VERDICT r5 task 7):
-    every .collect()/.toPandas()/.first() in operator source must be a known
+    """Mechanizes the 'no driver-side data pulls' audit: every
+    .collect()/.toPandas()/.first() in operator source must be a known
     scalar/bounded site. A new pull fails here until consciously allowlisted
-    with a justification."""
+    with a justification, and an allowlisted line that matches no source
+    line fails too, so the list cannot outlive the code it audits."""
     import pathlib
 
     root = pathlib.Path(__file__).parent.parent / "userportrait"
@@ -369,8 +343,8 @@ def test_no_unaudited_driver_side_pulls():
             "scalar: Σ C(deg,2) wedge-volume estimate sizing the wedge-stage partition width",
         ("scans.py", 'cutoff = int(e.agg(F.expr("percentile(event_id, 0.8)")).collect()[0][0])'):
             "scalar: incremental-agg batch split point",
-        ("ranking.py", "combos = work.groupBy(*b_cols).count().collect()"):
-            "bounded: <= 32^3-row bucket-count metadata frame",
+        ("ranking.py", "combos = counted.collect()"):
+            "bounded: <= npart^len(orderings)-row bucket-count metadata frame (32^3 for tag_rfm)",
         ("llm_similarity.py", "parts = pf.collect()"):
             "bounded: <= #partitions PCA moment rows (d + d^2 doubles each)",
         ("llm_similarity.py", 'fully = [r.cell for r in touched.join(survivors.select("cell").distinct(), "cell", "left_anti").collect()]  # <= cell-count rows (quantizer metadata)'):
@@ -419,6 +393,8 @@ def test_no_unaudited_driver_side_pulls():
                 found.add((py.name, ls))
     unaudited = found - set(allowed)
     assert not unaudited, f"unaudited driver-side pulls: {sorted(unaudited)}"
+    stale = set(allowed) - found
+    assert not stale, f"allowlisted pulls that match no source line: {sorted(stale)}"
 
 
 def test_no_collect_limit_in_any_op_plan(spark):
@@ -485,13 +461,13 @@ def test_coverage_ledger_in_sync():
 
 
 def test_single_partition_exchanges_are_scalar_or_metadata_only(spark):
-    """Mechanizes the r7 SinglePartition audit: a no-partition window or
+    """Mechanizes the SinglePartition audit: a no-partition window or
     global aggregate plans as Exchange SinglePartition — every row through
-    one task, the classic 100 TB cliff (it hid a real one in
-    sort_multikey_nulls's global row_number until this round). Every op
-    whose plan contains one must be on this allowlist with a reason; the
-    allowed cases are 1-row scalar aggregates or <=n_parts metadata
-    frames, never data."""
+    one task, the classic 100 TB cliff. Every op whose plan contains one
+    must be on this allowlist with a reason; the allowed cases are 1-row
+    scalar aggregates or small metadata frames, never data. An allowlisted
+    op audited in this tier whose plan has none fails too, so a retired
+    exchange takes its allowance with it."""
     allowed = {
         # op: why its SinglePartition is bounded
         "join_bloom_filtered": "bloom_filter_agg build (one filter value)",
@@ -500,14 +476,11 @@ def test_single_partition_exchanges_are_scalar_or_metadata_only(spark):
         "tag_funnel": "three stage-count scalar aggregates (1 row each)",
         "tag_funnel_windowed": "three stage-count scalar aggregates",
         "scan_partition_pruning": "count+sum scalar aggregate (1 row)",
-        "win_rank_distributed": "prefix-sum over <=32-row partition-count metadata",
-        "sort_multikey_nulls": "prefix-sum over <=32-row partition-count metadata (global_row_number)",
         "tag_lookalike": "seed-centroid scalar aggregate",
         "text_tfidf": "total-docs scalar for IDF",
         "embed_hash_tfidf": "total-docs scalar for IDF (same 1-row crossJoin as text_tfidf)",
         "events_seasonal_decompose": "centered-MA window over the DAILY rollup (<= #calendar-days rows, bounded by time span, not data volume)",
         "dq_feature_psi": "total-count window over the 10-row bucket frame (decile metadata, never data volume)",
-        "doc_pack_sequences": "prefix-sum over <=32-row partition-count metadata (token offsets; data path is pinned range partitions + mapInPandas)",
         "diag_key_skew": "total/mean scalar aggregate (1 row)",
         "dq_expectations": "three 1-row expectation aggregates (fused scan / uniqueness / FK) — map-side partials cross the exchange, never rows",
         "tag_activity_trend": "global week-anchor scalar",
@@ -527,10 +500,9 @@ def test_single_partition_exchanges_are_scalar_or_metadata_only(spark):
         "events_survival_curve": "cumulative window over distinct lifetime values (bounded by the corpus day horizon)",
         "dq_referential_integrity": "per-edge 1-row audit aggregates (#edges = 9)",
         "events_power_analysis": "inherits events_ab_ttest's arm-pivot aggregate over the 2-row arm frame",
-        "tag_revenue_concentration": "customer-total scalar + cumulative window over the 10-row decile frame (rank itself is ranking.global_row_number — no data through one task)",
+        "tag_revenue_concentration": "cumulative and total-share windows over the 10-row decile frame (the rank itself is ranking.exact_prefix, no data through one task)",
         "dq_expect_suite": "per-rule 1-row check aggregates (#rules = 7)",
         "dq_ann_index_health": "1-row corpus-total scalar (share denominator)",
-        "sink_ivf_rebalance": "1-row total/ncells scalar (hot-cell threshold)",
         "events_diff_in_diff": "arm×period pivot over the 4-row cell frame (the ab_ttest allowance widened by the period axis)",
         "scan_cdc_changefeed": "1-row epoch-midpoint scalar (version-1 cutoff)",
         "tag_segment_migration": "1-row epoch-midpoint scalar (period split)",
@@ -553,27 +525,31 @@ def test_single_partition_exchanges_are_scalar_or_metadata_only(spark):
         "text_lm_score": "volume-derived repartition width (1 at test scale only)",
         "text_bm25_keywords": "N-docs + total-token scalar aggregates (1 row each) + volume-derived repartition width (1 at test scale only)",
     }
-    offenders = {}
+    offenders, stale = {}, []
     for name in _audit_ops(("stream_",)):
         plan = _plan_cached(spark, name)
         n = sum(1 for l in plan.splitlines() if "Exchange SinglePartition" in l)
         if n and name not in allowed:
             offenders[name] = n
+        if not n and name in allowed:
+            stale.append(name)
     assert not offenders, (
         f"unaudited Exchange SinglePartition in: {offenders} — "
         "justify in the allowlist only if it is a scalar/metadata frame"
     )
+    assert not stale, f"allowlisted ops with no Exchange SinglePartition: {sorted(stale)}"
 
 
 def test_no_unaudited_broadcast_hints():
-    """Mechanizes the r7/r8 broadcast-hint audit (VERDICT r7 item 4): a
-    hard ``F.broadcast`` hint overrides AQE's size check, so every hint in
-    operator source must name a build side that is BOUNDED by construction
-    — a fixed dim table, a scalar/metadata aggregate, or a constant-k
-    frame. Data-derived frames that merely *tend* small (exclusion lists,
-    vocabularies, eval n-gram sets — all de-hinted in r8) must carry no
-    hint and let AQE decide at measured size. A new hint fails here until
-    consciously allowlisted with its boundedness argument."""
+    """Mechanizes the broadcast-hint audit: a hard ``F.broadcast`` hint
+    overrides AQE's size check, so every hint in operator source must name
+    a build side that is BOUNDED by construction — a fixed dim table, a
+    scalar/metadata aggregate, or a constant-k frame. Data-derived frames
+    that merely *tend* small (exclusion lists, vocabularies, eval n-gram
+    sets) must carry no hint and let AQE decide at measured size. A new
+    hint fails here until consciously allowlisted with its boundedness
+    argument, and an allowlisted line that matches no source line fails
+    too."""
     import pathlib
 
     root = pathlib.Path(__file__).parent.parent / "userportrait"
@@ -653,8 +629,6 @@ def test_no_unaudited_broadcast_hints():
             "k x dim centroid frame (cells are a fixed small k)",
         ("llm_similarity.py", "vc = unit.crossJoin(F.broadcast(cent.df)).select("):
             "k x dim trained-centroid literals (kmeans IVF; k grows sqrt(n), stays a broadcast)",
-        ("llm_similarity.py", "qc = qn.crossJoin(F.broadcast(cent)).select("):
-            "k x dim centroid frame (scan_ivf_probe query-side scoring; same bound as vc above)",
         ("llm_text.py", ".crossJoin(F.broadcast(n))"):
             "1-row scalar (total docs for IDF)",
         ("llm_text.py", 'scores = doc_tg.join(F.broadcast(profile), "tg").groupBy("doc_id", "cand_lang").agg('):
@@ -671,20 +645,12 @@ def test_no_unaudited_broadcast_hints():
             "constant inline rule frame",
         ("portrait.py", "t.customer.join(F.broadcast(t.nation), t.customer.c_nationkey == t.nation.n_nationkey)"):
             "nation dim",
-        ("ranking.py", 'rn = ranked.join(F.broadcast(offsets), "pid").select('):
-            "<= n_partitions-row offset metadata",
-        ("pipeline_ext.py", 'c = prefixed.join(F.broadcast(offsets), "pid").withColumn('):
-            "<= n_partitions-row token-offset metadata (doc_pack_sequences prefix)",
         ("streaming.py", "t.customer.join(F.broadcast(t.nation), t.customer.c_nationkey == t.nation.n_nationkey)"):
             "nation dim",
         ("streaming.py", "joined = src.join(F.broadcast(dim), src.user_id == dim.c_custkey)"):
             "stream-static dim side (must be resident per microbatch)",
-        ("windows.py", 'ranked_local.join(F.broadcast(offsets), "pid")'):
-            "<= n_partitions-row offset metadata",
         ("quality.py", "d.crossJoin(F.broadcast(anchor))"):
             "1-row scalar (max doc_id for the vocab-growth bucket grid)",
-        ("quality.py", "dec = ranked.crossJoin(F.broadcast(tot)).select("):
-            "1-row scalar (customer total for the decile cut)",
     }
     found = set()
     for py in root.rglob("*.py"):
@@ -701,6 +667,8 @@ def test_no_unaudited_broadcast_hints():
                 found.add((py.name, ls))
     unaudited = found - set(allowed)
     assert not unaudited, f"unaudited broadcast hints: {sorted(unaudited)}"
+    stale = set(allowed) - found
+    assert not stale, f"allowlisted hints that match no source line: {sorted(stale)}"
 
 
 def test_width_and_session_confs_have_one_owner():

@@ -76,15 +76,18 @@ def test_union_all_vs_distinct_counts(spark, a, b):
 @settings(**SETTINGS)
 @pytest.mark.slow
 def test_exact_ntile_scores_matches_window_ntile(spark, rows, k):
-    """The distributed exact-ntile decomposition (userportrait/ranking.py)
-    must be bitwise-equal to ntile(k) OVER (ORDER BY v, uid) for ANY data —
-    heavy ties, n < k, skewed values — not just the certified fixtures."""
+    """The distributed exact-prefix decomposition (userportrait/ranking.py)
+    must be bitwise-equal to the single-partition window for ANY data —
+    heavy ties, n < k, skewed values — not just the certified fixtures:
+    ntile(k) OVER (ORDER BY v, uid); the weighted running sum
+    sum(w) OVER (ORDER BY v, uid ROWS UNBOUNDED PRECEDING); and
+    row_number() over a two-key order whose lead g has heavy ties."""
     from pyspark.sql import Window
 
-    from userportrait.ranking import exact_ntile_scores
+    from userportrait.ranking import exact_ntile_scores, exact_prefix
 
-    uniq = [(i, v) for i, (_, v) in enumerate(rows)]
-    df = spark.createDataFrame(uniq, "uid int, v int")
+    uniq = [(i, g, v) for i, (g, v) in enumerate(rows)]
+    df = spark.createDataFrame(uniq, "uid int, g int, v int")
     got = {
         (r.uid, r.score)
         for r in exact_ntile_scores(df, [(F.col("v"), "uid", "score")], k=k, npart=4).collect()
@@ -95,6 +98,22 @@ def test_exact_ntile_scores_matches_window_ntile(spark, rows, k):
         for r in df.select("uid", F.ntile(k).over(w).alias("score")).collect()
     }
     assert got == want
+
+    by_v = [F.col("v").asc(), F.col("uid").asc()]
+    summed, total = exact_prefix(df, [(F.col("v"), by_v, "cum")], weight="g", npart=4)
+    w_sum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    want = {(r.uid, r.cum) for r in df.select("uid", F.sum("g").over(w_sum).alias("cum")).collect()}
+    assert {(r.uid, r.cum) for r in summed.collect()} == want
+    assert total == sum(g for g, _ in rows)
+
+    two_key = [F.col("g").asc(), F.col("v").desc(), F.col("uid").asc()]
+    ranked, total = exact_prefix(df, [(F.col("g"), two_key, "rn")], npart=4)
+    want = {
+        (r.uid, r.rn)
+        for r in df.select("uid", F.row_number().over(Window.orderBy(*two_key)).alias("rn")).collect()
+    }
+    assert {(r.uid, r.rn) for r in ranked.collect()} == want
+    assert total == len(rows)
 
 
 @given(

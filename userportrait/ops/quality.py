@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load, pin
+from ..ranking import exact_prefix
 from ..registry import OPS, op
 
 # ---------------------------------------------------------------------------
@@ -1112,39 +1113,26 @@ def tag_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     whale-dependency stat behind every "top 10% of customers drive X%"
     readout, and the portrait feature that prices retention spend.
 
-    The global rank uses ranking.global_row_number (range-repartition +
-    partition-offset prefix sum) — NO Exchange SinglePartition over data;
-    the decile is pure arithmetic on (rank, total), sidestepping
-    ntile()'s remainder-distribution convention entirely (both engines
-    compute 1 + (rn-1)*10 div N). Revenue is decimal-exact; the share is
-    a decimal/decimal double division over the 10-row decile frame."""
-    from ..ranking import global_row_number
-
+    The global rank uses ranking.exact_prefix (literal range buckets,
+    offset + row_number() per bucket) with NO Exchange SinglePartition
+    over data; the total comes back as a driver integer. The decile is
+    pure arithmetic on (rank, total), sidestepping ntile()'s
+    remainder-distribution convention entirely (both engines compute
+    1 + (rn-1)*10 div N). Revenue is decimal-exact; the share is a
+    decimal/decimal double division over the 10-row decile frame."""
     o = load(spark, sf_dir).orders
-    # cached: global_row_number consumes rev twice (the range-partitioned
-    # rank pass and the final rank join-back); one columnar cache stops the
-    # revenue groupBy from running twice. Deterministic input -> persist,
-    # not checkpoint (the LPA sizing lesson).
     rev = o.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(38,4)")).alias("rev")
-    ).persist()
-    ranked = global_row_number(
-        rev, [F.col("rev").desc(), F.col("o_custkey").asc()], "o_custkey"
     )
-    tot = ranked.agg(F.count("*").cast("bigint").alias("total"))
-    dec = ranked.crossJoin(F.broadcast(tot)).select(
-        (1 + F.expr("((rn - 1) * 10) div total")).cast("int").alias("decile"), "rev"
+    order = [F.col("rev").desc(), F.col("o_custkey").asc()]
+    ranked, total = exact_prefix(rev, [(-F.col("rev"), order, "rn")])
+    dec = ranked.select(
+        (1 + F.expr(f"((rn - 1) * 10) div {total}")).cast("int").alias("decile"), "rev"
     )
-    # pin the 10-row decile aggregate, then release the revenue cache —
-    # the cumulative-share windows below only need these 10 rows, and the
-    # cache would otherwise outlive the op (ADVICE r8).
-    agg = pin(
-        dec.groupBy("decile").agg(
-            F.count("*").cast("bigint").alias("n_customers"),
-            F.sum("rev").alias("decile_rev"),
-        )
+    agg = dec.groupBy("decile").agg(
+        F.count("*").cast("bigint").alias("n_customers"),
+        F.sum("rev").alias("decile_rev"),
     )
-    rev.unpersist()
     w_cum = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
     w_all = Window.partitionBy().rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing

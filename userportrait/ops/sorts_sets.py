@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..ranking import exact_prefix
 from ..registry import op
 
 
@@ -30,20 +31,17 @@ from ..registry import op
 def sort_multikey_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key sort with explicit NULLS LAST (Spark's ASC default is NULLS
     FIRST, DuckDB's is NULLS LAST — always spelled out, SURVEY §7-M2).
-    Ordering made hashable via a global row_number — computed DISTRIBUTED
-    (ranking.global_row_number): the r6 form used a no-partition window,
-    which plans as Exchange SinglePartition and pushes the whole table
-    through one task at 100 TB. The range exchange + per-partition
-    counting decomposition is bitwise-equal to the window (the oracle
-    still uses the plain window form to prove it)."""
-    from ..ranking import global_row_number
-
+    Ordering made hashable via a global row_number, computed distributed
+    by ``ranking.exact_prefix``: a no-partition window plans as Exchange
+    SinglePartition and pushes the whole table through one task at
+    100 TB. The lead is c_nationkey, so there are at most 25 range buckets.
+    The decomposition is bitwise-equal to the window (the oracle still uses
+    the plain window form to prove it)."""
     c = load(spark, sf_dir).customer
     bal = F.when(F.col("c_acctbal") < 0, F.lit(None).cast("double")).otherwise(F.col("c_acctbal"))
     keys = [F.asc("c_nationkey"), F.desc_nulls_last("bal"), F.asc("c_custkey")]
-    return global_row_number(
-        c.select("c_custkey", "c_nationkey", bal.alias("bal")), keys, "c_custkey"
-    ).orderBy(*keys)
+    cb = c.select("c_custkey", "c_nationkey", bal.alias("bal"))
+    return exact_prefix(cb, [(F.col("c_nationkey"), keys, "rn")])[0].orderBy(*keys)
 
 
 @op(

@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load, pin
+from ..catalog import load
+from ..ranking import exact_prefix, ntile
 from ..registry import op
 
 
@@ -216,70 +217,15 @@ def win_rank_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact global rank + ntile WITHOUT the single-partition window.
 
     ``row_number() OVER (ORDER BY ...)`` with no PARTITION BY plans as an
-    Exchange SinglePartition — every row through one task, the classic
-    100 TB scale cliff (tag_rfm's ntile(5) pays it too; tolerable there only
-    because its input is one row per customer). This op demonstrates the
-    scalable equivalent, exact to the last tie:
-
-      1. range-repartition on the full sort key (global order across
-         partitions, ties split consistently by the unique tie-break),
-      2. sortWithinPartitions (local order, no global shuffle),
-      3. per-partition row counts (32-row metadata aggregate) -> prefix-sum
-         offsets via a window over that tiny frame -> broadcast join back,
-      4. mapInPandas running counter adds the partition offset to the local
-         position; ntile(k) is then pure arithmetic on (rank, total).
-
-    No row ever passes through a single reducer; the only whole-data moves are
-    the range exchange and the local sorts. Oracle: the ordinary window —
-    bitwise-equal output proves the decomposition is exact.
+    Exchange SinglePartition: every row through one task, the classic
+    100 TB scale cliff. This op computes the scalable equivalent, exact to
+    the last tie, with ``ranking.exact_prefix`` (literal range buckets on
+    the negated price, a collected bucket-count frame, and offset +
+    row_number() per bucket); ntile(5) is then integral arithmetic on
+    (rank, total). No row passes through a single reducer. Oracle: the
+    ordinary window; bitwise-equal output proves the decomposition exact.
     """
     o = load(spark, sf_dir).orders.select("o_orderkey", "o_totalprice")
-    parted = o.repartitionByRange(32, F.col("o_totalprice").desc(), F.col("o_orderkey")).sortWithinPartitions(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    # Pin ONE physical evaluation of the range exchange before branching.
-    # RangePartitioner boundaries come from nondeterministic sampling; without
-    # this, the counts branch and the mapInPandas branch would each evaluate
-    # the exchange and correctness would hinge on Spark's exchange-reuse
-    # collapsing the two identical shuffles. localCheckpoint (eager) truncates
-    # lineage so both branches read the SAME materialized partitioning.
-    with_pid = pin(parted.withColumn("pid", F.spark_partition_id()))
-
-    counts = with_pid.groupBy("pid").agg(F.count("*").alias("cnt"))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid",
-        F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("offset"),
-        F.sum("cnt").over(Window.orderBy(F.lit(1)).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).alias("total"),
-    )
-
-    def local_rank(batches):
-        import pandas as pd
-
-        pos = 0
-        for pdf in batches:
-            n = len(pdf)
-            pdf = pdf.copy()
-            pdf["local_rank"] = range(pos + 1, pos + n + 1)
-            pos += n
-            yield pdf
-
-    ranked_local = with_pid.mapInPandas(
-        local_rank, "o_orderkey bigint, o_totalprice double, pid int, local_rank bigint"
-    )
-    # exact ntile(k): first (total % k) buckets get (total//k + 1) rows.
-    # All bucket arithmetic is integral (`div`) — float division truncates the
-    # wrong way once products approach 2^53, which a 100 TB rank can reach.
-    joined = (
-        ranked_local.join(F.broadcast(offsets), "pid")
-        .withColumn("rnk", (F.col("offset") + F.col("local_rank")).cast("bigint"))
-        .withColumn("base", F.expr("total div 5"))
-        .withColumn("rem", F.col("total") % 5)
-        .withColumn("big", (F.col("base") + 1) * F.col("rem"))
-    )
-    bucket = F.when(
-        F.col("rnk") <= F.col("big"), F.expr("(rnk - 1) div (base + 1)") + 1
-    ).otherwise(F.col("rem") + F.expr("(rnk - big - 1) div greatest(base, 1)") + 1)
-    return joined.select(
-        "o_orderkey", "o_totalprice", "rnk", bucket.cast("int").alias("bucket5")
-    )
+    order = [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()]
+    ranked, total = exact_prefix(o, [(-F.col("o_totalprice"), order, "rnk")])
+    return ranked.select("o_orderkey", "o_totalprice", "rnk", ntile("rnk", total, 5).alias("bucket5"))

@@ -1,39 +1,126 @@
-"""Distributed exact ranking primitives.
+"""Distributed exact global ranks and running sums.
 
-``exact_ntile_scores`` computes exact global ``ntile(k)`` buckets for one or
-more orderings of the same DataFrame WITHOUT any single-partition exchange —
-the scalable replacement for ``ntile(k) OVER (ORDER BY ...)``, which plans as
-``Exchange SinglePartition`` and funnels every row through one task.
+``row_number() OVER (ORDER BY ...)`` and ``sum(w) OVER (ORDER BY ...)`` with
+no PARTITION BY plan as ``Exchange SinglePartition`` and funnel every row
+through one task. ``exact_prefix`` computes the same values with no
+single-partition exchange over data, for one or more orderings of one frame:
 
-Decomposition (all JVM-side, no Python workers):
+  1. one quantile-sketch pass splits each ordering's lead value into ~npart
+     range buckets, turned into literal bucket columns. The bounds only need
+     to RESPECT the global order (rows in bucket i sort before rows in bucket
+     i+1; equal lead values share a bucket): their accuracy affects balance,
+     never correctness.
+  2. one counting pass over the bucket columns, collected to the driver
+     (``count()``, or ``sum(weight)``): <= npart^len(orderings) combo rows, a
+     metadata aggregate, not data.
+  3. exact global rank = literal prefix offset of the bucket + row_number()
+     within the bucket (or the running ``sum(weight)``), hash-partitioned by
+     bucket id and fully parallel; the in-bucket order ends in the unique
+     tie-break, so the total order is strict.
 
-  1. approxQuantile boundaries split the sort value into ~npart range buckets.
-     The boundaries only need to RESPECT the global order (rows in bucket i
-     sort before rows in bucket i+1; equal sort values share a bucket) — their
-     accuracy affects balance, never correctness.
-  2. one counting pass over the bucket columns (collected to the driver:
-     ≤ npart^len(orderings) combo rows — a metadata aggregate, not data).
-  3. exact global rank = driver-computed prefix-sum offset of the bucket
-     + row_number() within the bucket (hash-partitioned by bucket id, fully
-     parallel; the in-bucket ordering carries the unique tie-break).
-  4. ntile(k) is then pure integral arithmetic on (rank, total): the first
-     (total % k) buckets get (total // k + 1) rows. `div`, not float
-     division — float quotients truncate the wrong way near 2^53.
+``ntile`` turns a rank into an exact ``ntile(k)`` score with integral
+arithmetic. The ops' DuckDB oracles keep the plain ``OVER (ORDER BY ...)``
+forms, so the equivalence is re-proven on every differential run.
 
-Every ordering must end in a unique tie-break column so the total order is
-strict; that is what makes the decomposition bitwise-equal to the
-single-partition window (the ops' DuckDB oracles keep the plain
-``ntile() OVER`` form, so the equivalence is re-proven on every run).
-
-Skew note: a single sort value dominating the distribution degenerates to one
-hot bucket (ntile over a near-constant column is inherently serial in the tie
-region); the unique tie-break bounds the damage to one bucket's row_number.
+Skew note: a single lead value dominating the distribution degenerates to
+one hot bucket (a rank over a near-constant lead is inherently serial in the
+tie region); the unique tie-break bounds the damage to one bucket's window.
+The same holds for a lead with few distinct values: ``sort_multikey_nulls``
+buckets on ``c_nationkey``, so it gets at most 25 buckets, whatever
+``npart`` asks for.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def ntile(rank_col: str, total: int, k: int) -> Column:
+    """Exact ``ntile(k)`` (1..k, int) of the 1-based rank column ``rank_col``
+    out of ``total`` rows: the first ``total % k`` buckets get
+    ``total // k + 1`` rows. ``div``, not float division: float quotients
+    truncate the wrong way near 2^53."""
+    base, rem = divmod(total, k)
+    big = (base + 1) * rem  # rows covered by the oversized buckets
+    return (
+        F.when(F.col(rank_col) <= big, F.expr(f"({rank_col} - 1) div {base + 1}") + 1)
+        .otherwise(F.lit(rem) + F.expr(f"({rank_col} - {big} - 1) div {max(base, 1)}") + 1)
+        .cast("int")
+    )
+
+
+def exact_prefix(
+    df: DataFrame,
+    orderings: list[tuple[Column, list[Column], str]],
+    weight: str | None = None,
+    npart: int = 32,
+    k: int | None = None,
+) -> tuple[DataFrame, int]:
+    """Append one exact global prefix column per ordering; return it with
+    the total (row count, or ``sum(weight)``) as a driver integer.
+
+    ``orderings``: (lead, order, out) triples. ``order`` is the full sort
+    list and ends in a unique tie-break. ``lead`` is a non-null numeric
+    Column in ASCENDING orientation that ``order`` sorts by first (negate a
+    DESC key); it is materialized as the double column ``_s_<out>``, which
+    ``order`` may name. ``out`` is the bigint column appended:
+    ``row_number()`` in that order, or with ``weight`` (a column name) the
+    inclusive running ``sum(weight)``. With ``k``, ``out`` is instead the
+    exact ``ntile(k)`` of the rank, added right after the ordering's window,
+    so the next ordering's shuffle carries the score, not the rank.
+
+    Exact because the bucket bounds are literals and the input is
+    deterministic: the collected counts and the executed rows see the same
+    buckets, so no pin is needed. The frame is persisted for the two driver
+    actions only; the returned lazy plan recomputes the input.
+    """
+    work = df
+    for lead, _order, out in orderings:
+        work = work.withColumn(f"_s_{out}", lead.cast("double"))
+    s_cols = [f"_s_{out}" for _, _, out in orderings]
+
+    cached = work.persist()
+    work = cached
+    try:
+        probs = [i / npart for i in range(1, npart)]
+        all_bounds = work.approxQuantile(s_cols, probs, 1.0 / (4 * npart))
+        for (_, _, out), s_col, bounds in zip(orderings, s_cols, all_bounds):
+            bkt = F.lit(0)
+            for b in sorted(set(bounds)):
+                bkt = bkt + (F.col(s_col) > F.lit(float(b))).cast("int")
+            work = work.withColumn(f"_b_{out}", bkt)
+
+        b_cols = [f"_b_{out}" for _, _, out in orderings]
+        grouped = work.groupBy(*b_cols)
+        counted = grouped.count() if weight is None else grouped.agg(F.sum(weight).alias("count"))
+        combos = counted.collect()
+        total = sum(r["count"] for r in combos)
+
+        helper = s_cols + b_cols
+        for _, order, out in orderings:
+            marg: dict[int, int] = {}
+            for r in combos:
+                marg[r[f"_b_{out}"]] = marg.get(r[f"_b_{out}"], 0) + r["count"]
+            offset = 0
+            off_expr = F.lit(None).cast("bigint")
+            for b in sorted(marg):
+                off_expr = F.when(F.col(f"_b_{out}") == b, F.lit(offset)).otherwise(off_expr)
+                offset += marg[b]
+
+            w = Window.partitionBy(f"_b_{out}").orderBy(*order)
+            if weight is None:
+                step = F.row_number().over(w)
+            else:
+                step = F.sum(weight).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+            rank = out if k is None else f"_r_{out}"
+            work = work.withColumn(rank, (off_expr + step).cast("bigint"))
+            if k is not None:
+                work = work.withColumn(out, ntile(rank, total, k))
+                helper.append(rank)
+        return work.drop(*helper), total
+    finally:
+        cached.unpersist(blocking=False)
 
 
 def exact_ntile_scores(
@@ -48,107 +135,8 @@ def exact_ntile_scores(
     a Column in ASCENDING orientation (negate for DESC); ``tie_col`` a unique
     column name; ``out_name`` the int score column (1..k) to append.
     """
-    work = df
-    for sort_value, _tie, out in orderings:
-        work = work.withColumn(f"_s_{out}", sort_value.cast("double"))
-    s_cols = [f"_s_{out}" for _, _, out in orderings]
-
-    # Persist spans only the two driver actions below (boundary sampling and
-    # the combo count); the returned lazy plan recomputes deterministically.
-    cached = work.persist()
-    work = cached
-    try:
-        probs = [i / npart for i in range(1, npart)]
-        all_bounds = work.approxQuantile(s_cols, probs, 1.0 / (4 * npart))
-        for (_, _, out), s_col, bounds in zip(orderings, s_cols, all_bounds):
-            uniq = sorted(set(bounds))
-            bkt = F.lit(0)
-            for b in uniq:
-                bkt = bkt + (F.col(s_col) > F.lit(float(b))).cast("int")
-            work = work.withColumn(f"_b_{out}", bkt)
-
-        b_cols = [f"_b_{out}" for _, _, out in orderings]
-        combos = work.groupBy(*b_cols).count().collect()
-        total = sum(r["count"] for r in combos)
-
-        for _, tie, out in orderings:
-            marg: dict[int, int] = {}
-            for r in combos:
-                marg[r[f"_b_{out}"]] = marg.get(r[f"_b_{out}"], 0) + r["count"]
-            offset = 0
-            off_expr = F.lit(None).cast("bigint")
-            for b in sorted(marg):
-                off_expr = F.when(F.col(f"_b_{out}") == b, F.lit(offset)).otherwise(off_expr)
-                offset += marg[b]
-
-            w = Window.partitionBy(f"_b_{out}").orderBy(
-                F.col(f"_s_{out}").asc(), F.col(tie).asc()
-            )
-            work = work.withColumn(
-                f"_r_{out}", (off_expr + F.row_number().over(w)).cast("bigint")
-            )
-            base, rem = divmod(total, k)
-            big = (base + 1) * rem  # rows covered by the oversized buckets
-            bucket = F.when(
-                F.col(f"_r_{out}") <= big,
-                F.expr(f"(_r_{out} - 1) div {base + 1}") + 1,
-            ).otherwise(
-                F.lit(rem) + F.expr(f"(_r_{out} - {big} - 1) div {max(base, 1)}") + 1
-            )
-            work = work.withColumn(out, bucket.cast("int"))
-
-        helper = [c for out in (o[2] for o in orderings) for c in (f"_s_{out}", f"_b_{out}", f"_r_{out}")]
-        return work.drop(*helper)
-    finally:
-        cached.unpersist(blocking=False)
-
-
-def global_row_number(
-    df: DataFrame, sort_exprs: list[Column], key_col: str, n_parts: int = 32
-) -> DataFrame:
-    """``df`` + a ``rn`` column = exact global ``row_number() OVER (ORDER BY
-    sort_exprs)`` with NO ``Exchange SinglePartition`` — the reusable form
-    of win_rank_distributed's decomposition (windows.py), for any frame
-    with a unique ``key_col``:
-
-      1. range-repartition + sortWithinPartitions on the full sort key
-         (ties split consistently by the unique tie-break inside
-         sort_exprs),
-      2. pin() the partitioned frame (RangePartitioner samples
-         nondeterministically; both consumers must read ONE materialized
-         partitioning),
-      3. per-partition counts -> prefix-sum offsets over the n_parts-row
-         metadata frame (the only SinglePartition-ish step, bounded by
-         partition count, never data),
-      4. a mapInPandas running counter over (key, pid) ONLY — non-key
-         columns never round-trip through Arrow, because pandas folds NaN
-         and NULL together for float columns — then offset + local
-         position joins back to ``df`` on the unique key.
-    """
-    from .catalog import pin
-
-    key_type = dict(df.dtypes)[key_col]
-    parted = df.repartitionByRange(n_parts, *sort_exprs).sortWithinPartitions(*sort_exprs)
-    with_pid = pin(parted.select(key_col).withColumn("pid", F.spark_partition_id()))
-    counts = with_pid.groupBy("pid").agg(F.count("*").alias("cnt"))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("offset")
-    )
-
-    def local_rank(batches):
-        pos = 0
-        for pdf in batches:
-            n = len(pdf)
-            pdf = pdf.copy()
-            pdf["local_rank"] = range(pos + 1, pos + n + 1)
-            pos += n
-            yield pdf
-
-    ranked = with_pid.mapInPandas(
-        local_rank, f"{key_col} {key_type}, pid int, local_rank bigint"
-    )
-    rn = ranked.join(F.broadcast(offsets), "pid").select(
-        key_col, (F.col("offset") + F.col("local_rank")).cast("bigint").alias("rn")
-    )
-    return df.join(rn, key_col)
+    prefix = [
+        (value, [F.col(f"_s_{out}").asc(), F.col(tie).asc()], out)
+        for value, tie, out in orderings
+    ]
+    return exact_prefix(df, prefix, npart=npart, k=k)[0]

@@ -124,16 +124,21 @@ GRADE_FIRST: tuple[str, ...] = (
     "sim_knn_pq",
     "scan_pq_probe",
     "scan_ivfpq_probe",
+    # the ops on ranking.exact_prefix, one per way of calling it: exact
+    # ntile scores over three orderings, a rank plus ntile, a multi-key
+    # order on a low-cardinality lead, the token-weighted running sum, and
+    # a rank whose total feeds a decile cut. A change to that primitive is
+    # then graded in the window, not in the slow tier only:
+    "tag_rfm",
+    "win_rank_distributed",
+    "sort_multikey_nulls",
+    "doc_pack_sequences",
+    "tag_revenue_concentration",
     # filler: the oldest-evidence greens:
     "join_interval",
     "agg_groupby_basic",
     "agg_filter_clause",
     "tag_funnel_windowed",
-    "events_attribution",
-    "tag_decay_score",
-    "events_ab_ttest",
-    "agg_cms_topk",
-    "fn_higher_order",
 )
 
 
