@@ -4,6 +4,8 @@ regression even when values match (VERDICT r1 standing rules)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from userportrait.registry import load_all_ops
@@ -160,11 +162,23 @@ def test_exact_prefix_plans_are_bucketed_without_single_partition(spark, name):
     literal bucket id. A global window would plan Exchange SinglePartition
     and funnel every row through one task at 100 TB, and the offsets come
     back as literals, so no SinglePartition may appear at all; nor may a
-    Python-worker counter."""
+    Python-worker counter. Each offset is one array lookup, so the only
+    CASE WHENs left are the ntile arithmetic, at most one per ordering."""
     plan = _plan(spark, name)
     assert "Exchange SinglePartition" not in plan, f"{name}: {plan[:800]}"
     assert "hashpartitioning(_b_" in plan, f"{name}: {plan[:800]}"
     assert "MapInPandas" not in plan, f"{name}: {plan[:800]}"
+    assert plan.count("CASE WHEN") <= 3, f"{name}: per-bucket CASE WHEN chain in {plan[:800]}"
+
+
+def test_lookalike_splits_seed_by_filter_not_join(spark):
+    """tag_lookalike takes its seed and its candidates from one filter on
+    the scored RFM frame: the only join is the centroid scalar's broadcast,
+    never a semi or anti join of the frame against a filter of itself."""
+    plan = _plan(spark, "tag_lookalike")
+    assert "LeftAnti" not in plan, plan[:800]
+    joins = [ln for ln in plan.splitlines() if re.search(r"(HashJoin|SortMergeJoin|NestedLoopJoin) ", ln)]
+    assert len(joins) == 1 and "BroadcastNestedLoopJoin" in joins[0], joins
 
 
 def test_clean_pipeline_neardup_drop_is_anti_join(spark):

@@ -116,6 +116,44 @@ def test_exact_ntile_scores_matches_window_ntile(spark, rows, k):
     assert total == len(rows)
 
 
+def test_exact_prefix_renders_extreme_double_bounds(spark):
+    """The bucket bounds reach the plan as SQL literals, so the lead's
+    extreme doubles must survive the rendering: +-inf (both bounds of this
+    lead are infinite), -0.0 next to 0.0, the smallest subnormal, +-1e300,
+    negatives and heavy ties. row_number, ntile(5) and an integer-weight
+    running sum must equal the plain single-partition windows."""
+    import math
+
+    from pyspark.sql import Window
+
+    from userportrait.ranking import exact_ntile_scores, exact_prefix
+
+    inf = float("inf")
+    middle = [-0.0, 0.0, 5e-324, -5e-324, 1e300, -1e300, -3.5, -3.5, -3.5, 2.0]
+    values = [-inf] * 80 + middle * 8 + [inf] * 80
+    rows = [(i, (i * 37) % 11, v) for i, v in enumerate(values)]
+    df = spark.createDataFrame(rows, "uid int, g int, v double").repartition(3)
+    probs = [0.25, 0.5, 0.75]  # what npart=4 asks for
+    assert not all(map(math.isfinite, df.approxQuantile("v", probs, 1 / 16)))
+
+    by_v = [F.col("v").asc(), F.col("uid").asc()]
+    w = Window.orderBy(*by_v)
+    ranked, total = exact_prefix(df, [(F.col("v"), by_v, "rn")], npart=4)
+    want = {(r.uid, r.rn) for r in df.select("uid", F.row_number().over(w).alias("rn")).collect()}
+    assert {(r.uid, r.rn) for r in ranked.collect()} == want
+    assert total == len(rows)
+
+    scored = exact_ntile_scores(df, [(F.col("v"), "uid", "score")], k=5, npart=4)
+    want = {(r.uid, r.score) for r in df.select("uid", F.ntile(5).over(w).alias("score")).collect()}
+    assert {(r.uid, r.score) for r in scored.collect()} == want
+
+    summed, total = exact_prefix(df, [(F.col("v"), by_v, "cum")], weight="g", npart=4)
+    w_sum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    want = {(r.uid, r.cum) for r in df.select("uid", F.sum("g").over(w_sum).alias("cum")).collect()}
+    assert {(r.uid, r.cum) for r in summed.collect()} == want
+    assert total == sum(g for _, g, _ in rows)
+
+
 @given(
     base=st.text(alphabet="abcdef ", min_size=40, max_size=80),
     mutations=st.integers(min_value=0, max_value=3),

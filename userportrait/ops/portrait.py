@@ -506,14 +506,18 @@ def tag_audience_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tag_crowd_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crowd selection — the reference's end-product operation [R]: boolean
     algebra over tag outputs. Crowd = (monetary quintile ≥ 4) ∩ (ASIA
-    customers) ∖ (users with ≥3 error events), composed as semi/anti joins
-    over the RFM tag frame. Dim joins broadcast; the error-user exclusion
-    list is DATA-DERIVED (it scales with how noisy the corpus is), so it
-    carries no hard broadcast hint — AQE broadcasts it when the measured
-    build side is small and falls back to a shuffled anti join when it
-    isn't."""
+    customers) ∖ (users with ≥3 error events), composed as joins over the
+    RFM aggregate. Only the monetary ordering is scored: the recency and
+    frequency quintiles of ``rfm_scored`` are never read, and each scored
+    ordering costs a bucket column and a window. Dim joins broadcast; the
+    error-user exclusion list is DATA-DERIVED (it scales with how noisy the
+    corpus is), so it carries no hard broadcast hint — AQE broadcasts it
+    when the measured build side is small and falls back to a shuffled anti
+    join when it isn't."""
     t = load(spark, sf_dir)
-    rfm = rfm_scored(spark, sf_dir).where(F.col("m_score") >= 4)
+    rfm = exact_ntile_scores(
+        rfm_base(spark, sf_dir), [(F.col("monetary"), "c_custkey", "m_score")]
+    ).where(F.col("m_score") >= 4)
     asia = (
         t.customer.join(F.broadcast(t.nation), t.customer.c_nationkey == t.nation.n_nationkey)
         .join(
@@ -563,13 +567,16 @@ def tag_lookalike(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rfm_score = 555, the best quintile triple) ranks all non-seed
     customers by scale-normalized squared distance; top-20 become the
     expansion audience. The marketing twin of ANN: find-me-more-like-these
-    over behavioral features. Centroid is a broadcast scalar (decimal-exact
-    means cast to double); scoring is one narrow map over the RFM frame +
-    a top-k — no pairwise joins anywhere."""
+    over behavioral features. Seed and candidates are the two sides of one
+    filter on ``rfm_score``: ``c_custkey`` is unique in the RFM frame and
+    ``rfm_score`` is never null, so this equals a join and an anti join
+    against the seed, with one scored subtree per side. Centroid is a
+    broadcast scalar (decimal-exact means cast to double); scoring is one
+    narrow map over the RFM frame + a top-k — no pairwise joins anywhere."""
     rfm = rfm_scored(spark, sf_dir)
-    seed = rfm.where(F.col("rfm_score") >= 555).select("c_custkey")
+    is_seed = F.col("rfm_score") >= 555
     cen = (
-        rfm.join(seed, "c_custkey")
+        rfm.where(is_seed)
         .agg(
             (F.sum(F.col("recency_days").cast("decimal(38,4)")).cast("double") / F.count("*")).alias("cr"),
             (F.sum(F.col("frequency").cast("decimal(38,4)")).cast("double") / F.count("*")).alias("cf"),
@@ -585,7 +592,7 @@ def tag_lookalike(spark: SparkSession, sf_dir: str) -> DataFrame:
         6,
     )
     return (
-        rfm.join(seed, "c_custkey", "left_anti")
+        rfm.where(~is_seed)
         .crossJoin(F.broadcast(cen))
         .select("c_custkey", dist2.alias("dist2"))
         .orderBy(F.asc("dist2"), F.asc("c_custkey"))

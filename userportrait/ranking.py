@@ -28,12 +28,35 @@ tie region); the unique tie-break bounds the damage to one bucket's window.
 The same holds for a lead with few distinct values: ``sort_multikey_nulls``
 buckets on ``c_nationkey``, so it gets at most 25 buckets, whatever
 ``npart`` asks for.
+
+Every literal reaches the plan inside one SQL string per column: the bucket
+column ``_b_<out>`` is ``0 + CAST(_s_<out> > <bound>D AS INT) + ...`` and its
+prefix offset one ``element_at`` lookup into a ``bigint`` array literal.
+Building the same expressions from ``Column`` nodes costs one py4j round trip
+per node, about 300 nodes per ordering, which would dominate declaration
+time, and an offset chain of one ``CASE WHEN`` branch per bucket would stay
+in the executed plan.
+Finite bounds are rendered with ``repr`` (shortest round-trip form), the
+non-finite ones with an explicit cast, since ``infD`` does not parse. How a
+bound is rendered never affects exactness: the counting pass and the ranking
+pass evaluate the same monotone bucket expression.
 """
 
 from __future__ import annotations
 
+import math
+from itertools import accumulate
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _double_sql(x: float) -> str:
+    """A SQL literal equal to the double ``x``, non-finite values included."""
+    if math.isfinite(x):
+        return f"{x!r}D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
 
 
 def ntile(rank_col: str, total: int, k: int) -> Column:
@@ -43,10 +66,9 @@ def ntile(rank_col: str, total: int, k: int) -> Column:
     truncate the wrong way near 2^53."""
     base, rem = divmod(total, k)
     big = (base + 1) * rem  # rows covered by the oversized buckets
-    return (
-        F.when(F.col(rank_col) <= big, F.expr(f"({rank_col} - 1) div {base + 1}") + 1)
-        .otherwise(F.lit(rem) + F.expr(f"({rank_col} - {big} - 1) div {max(base, 1)}") + 1)
-        .cast("int")
+    return F.expr(
+        f"CAST(CASE WHEN `{rank_col}` <= {big} THEN (`{rank_col}` - 1) div {base + 1} + 1"
+        f" ELSE {rem} + (`{rank_col}` - {big} - 1) div {max(base, 1)} + 1 END AS INT)"
     )
 
 
@@ -75,40 +97,35 @@ def exact_prefix(
     buckets, so no pin is needed. The frame is persisted for the two driver
     actions only; the returned lazy plan recomputes the input.
     """
-    work = df
-    for lead, _order, out in orderings:
-        work = work.withColumn(f"_s_{out}", lead.cast("double"))
     s_cols = [f"_s_{out}" for _, _, out in orderings]
+    work = df.withColumns({s: lead.cast("double") for s, (lead, _, _) in zip(s_cols, orderings)})
 
     cached = work.persist()
     work = cached
     try:
         probs = [i / npart for i in range(1, npart)]
         all_bounds = work.approxQuantile(s_cols, probs, 1.0 / (4 * npart))
-        for (_, _, out), s_col, bounds in zip(orderings, s_cols, all_bounds):
-            bkt = F.lit(0)
-            for b in sorted(set(bounds)):
-                bkt = bkt + (F.col(s_col) > F.lit(float(b))).cast("int")
-            work = work.withColumn(f"_b_{out}", bkt)
-
+        cuts = [sorted(set(bounds)) for bounds in all_bounds]
         b_cols = [f"_b_{out}" for _, _, out in orderings]
+        work = work.withColumns({
+            b_col: F.expr(" + ".join(["0"] + [f"CAST(`{s_col}` > {_double_sql(c)} AS INT)" for c in cut]))
+            for b_col, s_col, cut in zip(b_cols, s_cols, cuts)
+        })
+
         grouped = work.groupBy(*b_cols)
         counted = grouped.count() if weight is None else grouped.agg(F.sum(weight).alias("count"))
         combos = counted.collect()
         total = sum(r["count"] for r in combos)
 
         helper = s_cols + b_cols
-        for _, order, out in orderings:
-            marg: dict[int, int] = {}
+        for (_, order, out), b_col, cut in zip(orderings, b_cols, cuts):
+            sizes = [0] * (len(cut) + 1)
             for r in combos:
-                marg[r[f"_b_{out}"]] = marg.get(r[f"_b_{out}"], 0) + r["count"]
-            offset = 0
-            off_expr = F.lit(None).cast("bigint")
-            for b in sorted(marg):
-                off_expr = F.when(F.col(f"_b_{out}") == b, F.lit(offset)).otherwise(off_expr)
-                offset += marg[b]
+                sizes[r[b_col]] += r["count"]
+            starts = ", ".join(f"{o}L" for o in [0, *accumulate(sizes[:-1])])
+            off_expr = F.expr(f"element_at(array({starts}), `{b_col}` + 1)")
 
-            w = Window.partitionBy(f"_b_{out}").orderBy(*order)
+            w = Window.partitionBy(b_col).orderBy(*order)
             if weight is None:
                 step = F.row_number().over(w)
             else:

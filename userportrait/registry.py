@@ -134,9 +134,13 @@ GRADE_FIRST: tuple[str, ...] = (
     "sort_multikey_nulls",
     "doc_pack_sequences",
     "tag_revenue_concentration",
+    # the audience queries that read the scored RFM frame in their own way:
+    # a single scored ordering, and the seed/candidate split by one filter
+    # on rfm_score. A change to either is then graded in the window, not in
+    # the slow tier only:
+    "tag_crowd_select",
+    "tag_lookalike",
     # filler: the oldest-evidence greens:
-    "join_interval",
-    "agg_groupby_basic",
     "agg_filter_clause",
     "tag_funnel_windowed",
 )
