@@ -171,6 +171,34 @@ def test_exact_prefix_plans_are_bucketed_without_single_partition(spark, name):
     assert plan.count("CASE WHEN") <= 3, f"{name}: per-bucket CASE WHEN chain in {plan[:800]}"
 
 
+def test_exact_prefix_declares_with_one_collect_and_no_cache(spark):
+    """Declaring an exact-prefix op runs one driver action, the collect of
+    the grid-cell counts in ranking.py, and caches nothing: no quantile
+    sketch, no cache fill, no second collect, and so no cached input that
+    could be released before the returned plan runs."""
+    import pathlib
+
+    src = (pathlib.Path(__file__).parent.parent / "userportrait" / "ranking.py").read_text().splitlines()
+    lines = [i + 1 for i, ln in enumerate(src) if ".collect()" in ln]
+    assert len(lines) == 1, lines
+    site = f"collect at {pathlib.Path(__file__).parent.parent / 'userportrait' / 'ranking.py'}:{lines[0]}"
+
+    sc = spark.sparkContext
+    cached = set(sc._jsc.getPersistentRDDs().keySet())
+    group = "declare-tag_rfm-one-collect"
+    sc.setJobGroup(group, group)
+    try:
+        OPS["tag_rfm"].fn(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    names = {sc._jsc.sc().statusStore().job(j).name() for j in jobs}
+    assert jobs and names == {site}, names
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= cached
+
+
 def test_lookalike_splits_seed_by_filter_not_join(spark):
     """tag_lookalike takes its seed and its candidates from one filter on
     the scored RFM frame: the only join is the centroid scalar's broadcast,
@@ -357,8 +385,8 @@ def test_no_unaudited_driver_side_pulls():
             "scalar: Σ C(deg,2) wedge-volume estimate sizing the wedge-stage partition width",
         ("scans.py", 'cutoff = int(e.agg(F.expr("percentile(event_id, 0.8)")).collect()[0][0])'):
             "scalar: incremental-agg batch split point",
-        ("ranking.py", "combos = counted.collect()"):
-            "bounded: <= npart^len(orderings)-row bucket-count metadata frame (32^3 for tag_rfm)",
+        ("ranking.py", "hist = sorted(tuple(r) for r in counted.collect())"):
+            "bounded: <= len(orderings) * min(n, S * binades spanned) grid-cell count rows (<= 4,500 for rfm_scored at perfbench scale)",
         ("llm_similarity.py", "parts = pf.collect()"):
             "bounded: <= #partitions PCA moment rows (d + d^2 doubles each)",
         ("llm_similarity.py", 'fully = [r.cell for r in touched.join(survivors.select("cell").distinct(), "cell", "left_anti").collect()]  # <= cell-count rows (quantizer metadata)'):

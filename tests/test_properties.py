@@ -116,25 +116,87 @@ def test_exact_ntile_scores_matches_window_ntile(spark, rows, k):
     assert total == len(rows)
 
 
-def test_exact_prefix_renders_extreme_double_bounds(spark):
-    """The bucket bounds reach the plan as SQL literals, so the lead's
-    extreme doubles must survive the rendering: +-inf (both bounds of this
-    lead are infinite), -0.0 next to 0.0, the smallest subnormal, +-1e300,
-    negatives and heavy ties. row_number, ntile(5) and an integer-weight
-    running sum must equal the plain single-partition windows."""
-    import math
+def _cells(df, col):
+    """{row uid: grid cell of ``col``} as ranking.exact_prefix computes it."""
+    from userportrait.ranking import _cell_sql
 
+    return {r.uid: r.cell for r in df.selectExpr("uid", f"{_cell_sql(col)} AS cell").collect()}
+
+
+def _buckets(cells, npart):
+    """{uid: bucket} after exact_prefix's merge of the cell counts, with the
+    number of rows in the largest cell."""
+    from bisect import bisect_left
+    from collections import Counter
+
+    from userportrait.ranking import _merge_cells
+
+    per_cell = Counter(cells.values())
+    cuts, _ = _merge_cells([(c, n, n) for c, n in sorted(per_cell.items())], npart)
+    return {uid: bisect_left(cuts, c) for uid, c in cells.items()}, max(per_cell.values())
+
+
+def test_exact_prefix_cell_grid_is_monotone_at_binade_edges(spark):
+    """The bucket of a row is a function of its lead's grid cell, so ranks
+    are exact only if the cell never decreases along Spark's double order
+    (-0.0 == 0.0, NaN above +inf). log2 only picks the binade, and may be
+    off by one exactly at an edge: probe every edge class (subnormals, the
+    normal boundary, 2^k and its one-ulp neighbours, the largest finite
+    double, the infinities, NaN) and both evaluation paths, whole-stage
+    codegen on and off."""
+    import math
+    import sys
+
+    tiny = 5e-324
+    probes = [0.0, -0.0, tiny, -tiny, math.ldexp(1.0, -1022) - tiny, -(math.ldexp(1.0, -1022) - tiny)]
+    for k in (-1022, -1, 0, 1, 52, 53, 1023):
+        p = math.ldexp(1.0, k)
+        for x in (p, math.nextafter(p, 0.0), math.nextafter(p, math.inf)):
+            probes += [x, -x]
+    inf = math.inf
+    probes += [sys.float_info.max, -sys.float_info.max, inf, -inf, math.nan]
+    rows = [(i, v) for i, v in enumerate(probes)]
+
+    def cells_in_spark_order(session):
+        df = session.createDataFrame(rows, "uid int, v double")
+        cells = _cells(df, "v")
+        return [(r.uid, cells[r.uid]) for r in df.orderBy("v", "uid").collect()]
+
+    ordered = cells_in_spark_order(spark)
+    value = dict(rows)
+    cells = [c for _, c in ordered]
+    assert cells == sorted(cells), [(value[u], c) for u, c in ordered]
+    assert {c for u, c in ordered if value[u] == 0.0} == {0}  # -0.0 and 0.0 share cell 0
+    assert value[ordered[0][0]] == -inf and cells[0] < cells[1]
+    assert math.isnan(value[ordered[-1][0]]) and cells[-1] == cells[-2] > cells[-3]  # NaN joins +inf
+
+    interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    assert cells_in_spark_order(interpreted) == ordered
+
+
+def test_exact_prefix_renders_extreme_double_bounds(spark):
+    """The lead's extreme doubles must rank exactly: +-inf, NaN (which
+    Spark sorts above +inf), -0.0 next to 0.0, the smallest subnormal,
+    +-1e300, negatives and heavy ties. The infinities sit in the outermost
+    grid cells, so their rows fall in the outermost buckets (NaN with +inf);
+    row_number, ntile(5) and an integer-weight running sum must equal the
+    plain single-partition windows."""
     from pyspark.sql import Window
 
     from userportrait.ranking import exact_ntile_scores, exact_prefix
 
-    inf = float("inf")
+    inf, nan = float("inf"), float("nan")
     middle = [-0.0, 0.0, 5e-324, -5e-324, 1e300, -1e300, -3.5, -3.5, -3.5, 2.0]
-    values = [-inf] * 80 + middle * 8 + [inf] * 80
+    values = [-inf] * 80 + middle * 8 + [inf] * 80 + [nan] * 8
     rows = [(i, (i * 37) % 11, v) for i, v in enumerate(values)]
     df = spark.createDataFrame(rows, "uid int, g int, v double").repartition(3)
-    probs = [0.25, 0.5, 0.75]  # what npart=4 asks for
-    assert not all(map(math.isfinite, df.approxQuantile("v", probs, 1 / 16)))
+
+    bucket, _ = _buckets(_cells(df, "v"), 4)
+    top = max(bucket.values())
+    assert top > 0
+    assert {bucket[uid] for uid, _, v in rows if v == -inf} == {0}
+    assert {bucket[uid] for uid, _, v in rows if v != v or v == inf} == {top}
 
     by_v = [F.col("v").asc(), F.col("uid").asc()]
     w = Window.orderBy(*by_v)
@@ -152,6 +214,42 @@ def test_exact_prefix_renders_extreme_double_bounds(spark):
     want = {(r.uid, r.cum) for r in df.select("uid", F.sum("g").over(w_sum).alias("cum")).collect()}
     assert {(r.uid, r.cum) for r in summed.collect()} == want
     assert total == sum(g for _, g, _ in rows)
+
+
+def test_exact_prefix_buckets_balance_and_narrow_band_stays_exact(spark):
+    """The merged buckets are balanced whatever the lead's shape: at most
+    npart of them, none above max(2n/npart, largest cell) rows, for uniform
+    ids, lognormal money and small integers. A lead whose rows all share
+    one relative band (one day of epoch seconds: a cell near 1.7e9 is 2^20 s
+    wide) gets one hot bucket, and its ranks are still exact."""
+    import random
+
+    from collections import Counter
+
+    from pyspark.sql import Window
+
+    from userportrait.ranking import exact_prefix
+
+    rnd = random.Random(7)
+    n, npart = 2000, 32
+    rows = [
+        (i, float(i), round(rnd.lognormvariate(5, 1.5), 2), float(rnd.randint(0, 9)), 1.7e9 + rnd.randrange(86400))
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(rows, "uid int, id double, money double, small double, ts double")
+    for col in ("id", "money", "small"):
+        bucket, largest = _buckets(_cells(df, col), npart)
+        sizes = Counter(bucket.values())
+        assert len(sizes) <= npart, (col, sizes)
+        assert max(sizes.values()) <= max(2 * n / npart, largest), (col, sizes, largest)
+
+    bucket, largest = _buckets(_cells(df, "ts"), npart)
+    assert largest == n and set(bucket.values()) == {0}
+    by_ts = [F.col("ts").asc(), F.col("uid").asc()]
+    ranked, total = exact_prefix(df, [(F.col("ts"), by_ts, "rn")], npart=npart)
+    want = {(r.uid, r.rn) for r in df.select("uid", F.row_number().over(Window.orderBy(*by_ts)).alias("rn")).collect()}
+    assert {(r.uid, r.rn) for r in ranked.collect()} == want
+    assert total == n
 
 
 @given(

@@ -9,9 +9,9 @@ hash-partitioned multi-join rendered to a canonical sorted tag string —
 raw map columns hash unstably, SURVEY §2.0).
 
 Scale note: the ntile(5) scoring is the distributed exact decomposition
-(userportrait/ranking.py): approx-quantile range buckets for parallelism,
-exact bucket counts + prefix-sum offsets + per-bucket row_number for bit-
-stable 1..5 scores — no ``Exchange SinglePartition`` in the scored plan,
+(userportrait/ranking.py): range buckets merged from exact grid-cell
+counts (one collect) for parallelism, prefix-sum offsets + per-bucket
+row_number for bit-stable 1..5 scores — no ``Exchange SinglePartition`` in the scored plan,
 while the oracle keeps the plain global ``ntile(5) OVER`` form, so the
 equivalence is re-proven on every differential run.
 """

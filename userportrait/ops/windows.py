@@ -219,9 +219,9 @@ def win_rank_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``row_number() OVER (ORDER BY ...)`` with no PARTITION BY plans as an
     Exchange SinglePartition: every row through one task, the classic
     100 TB scale cliff. This op computes the scalable equivalent, exact to
-    the last tie, with ``ranking.exact_prefix`` (literal range buckets on
-    the negated price, a collected bucket-count frame, and offset +
-    row_number() per bucket); ntile(5) is then integral arithmetic on
+    the last tie, with ``ranking.exact_prefix`` (range buckets on the
+    negated price, merged from one collect of exact grid-cell counts, and
+    offset + row_number() per bucket); ntile(5) is then integral arithmetic on
     (rank, total). No row passes through a single reducer. Oracle: the
     ordinary window; bitwise-equal output proves the decomposition exact.
     """

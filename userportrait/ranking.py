@@ -3,60 +3,108 @@
 ``row_number() OVER (ORDER BY ...)`` and ``sum(w) OVER (ORDER BY ...)`` with
 no PARTITION BY plan as ``Exchange SinglePartition`` and funnel every row
 through one task. ``exact_prefix`` computes the same values with no
-single-partition exchange over data, for one or more orderings of one frame:
+single-partition exchange over data, for one or more orderings of one frame,
+with one driver action per call:
 
-  1. one quantile-sketch pass splits each ordering's lead value into ~npart
-     range buckets, turned into literal bucket columns. The bounds only need
-     to RESPECT the global order (rows in bucket i sort before rows in bucket
-     i+1; equal lead values share a bucket): their accuracy affects balance,
-     never correctness.
-  2. one counting pass over the bucket columns, collected to the driver
-     (``count()``, or ``sum(weight)``): <= npart^len(orderings) combo rows, a
-     metadata aggregate, not data.
+  1. each ordering's lead value gets a fixed integer cell ``_f_<out>`` on a
+     data-independent grid of ``S`` cells per binade (a power-of-two range
+     ``[2^e, 2^(e+1))``), and one ``stack``/``groupBy(ordering, cell)``
+     aggregate, collected to the driver, returns every ordering's exact cell
+     counts (and ``sum(weight)``): at most
+     ``len(orderings) * min(n, S * binades spanned)`` rows, metadata, not data.
+  2. the driver merges adjacent cells into <= npart range buckets of
+     balanced row counts; the bucket column ``_b_<out>`` is
+     ``0 + CAST(_f_<out> > <cut> AS INT) + ...`` over the bigint cell cuts,
+     and each bucket's exact prefix offset and the total follow from the
+     same counts.
   3. exact global rank = literal prefix offset of the bucket + row_number()
      within the bucket (or the running ``sum(weight)``), hash-partitioned by
      bucket id and fully parallel; the in-bucket order ends in the unique
      tie-break, so the total order is strict.
 
+Exactness rests on one property: the cell is a deterministic, monotone
+non-decreasing function of the lead in Spark's double order (``-0.0 ==
+0.0``, NaN sorts above ``+inf``). Rows in bucket i then sort before rows in
+bucket i+1, equal leads share a bucket, and the counting pass and the
+ranking pass put every row in the same bucket. The cell uses exact
+operations only: ``log2`` may be off by an ulp and may differ between
+code paths, so it only picks the binade exponent ``e``; the mantissa step
+``floor(a / pow(2, e) * S)`` is exact, and clamping it to ``2S`` makes an
+exponent that is one too small or too large at a binade edge land on the
+same cell (``2S`` at ``e - 1`` is ``S`` at ``e``; ``S - 1`` at ``e + 1`` is
+``2S - 1`` at ``e``). Zero maps to cell 0, +-inf to the outermost cells,
+NaN to the +inf cell. Nothing is cached: the input must be deterministic,
+and the returned lazy plan evaluates it again.
+
 ``ntile`` turns a rank into an exact ``ntile(k)`` score with integral
 arithmetic. The ops' DuckDB oracles keep the plain ``OVER (ORDER BY ...)``
 forms, so the equivalence is re-proven on every differential run.
 
-Skew note: a single lead value dominating the distribution degenerates to
-one hot bucket (a rank over a near-constant lead is inherently serial in the
-tie region); the unique tie-break bounds the damage to one bucket's window.
-The same holds for a lead with few distinct values: ``sort_multikey_nulls``
-buckets on ``c_nationkey``, so it gets at most 25 buckets, whatever
-``npart`` asks for.
+Skew note: a bucket is a run of whole cells, so a cell holding more than
+1/npart of the rows makes one hot bucket. A single lead value dominating
+the distribution does this (a rank over a near-constant lead is inherently
+serial in the tie region), and so does a lead whose rows crowd into one
+narrow relative band: a cell is 0.05-0.1% of the value wide, so one day of
+epoch-second timestamps sits in a handful of cells. The result stays exact
+and the unique tie-break bounds the damage to one bucket's window. A lead
+with few distinct values gets at most that many buckets:
+``sort_multikey_nulls`` buckets on ``c_nationkey``, so it gets at most 25,
+whatever ``npart`` asks for.
 
-Every literal reaches the plan inside one SQL string per column: the bucket
-column ``_b_<out>`` is ``0 + CAST(_s_<out> > <bound>D AS INT) + ...`` and its
-prefix offset one ``element_at`` lookup into a ``bigint`` array literal.
-Building the same expressions from ``Column`` nodes costs one py4j round trip
-per node, about 300 nodes per ordering, which would dominate declaration
-time, and an offset chain of one ``CASE WHEN`` branch per bucket would stay
-in the executed plan.
-Finite bounds are rendered with ``repr`` (shortest round-trip form), the
-non-finite ones with an explicit cast, since ``infD`` does not parse. How a
-bound is rendered never affects exactness: the counting pass and the ranking
-pass evaluate the same monotone bucket expression.
+Every literal reaches the plan inside one SQL string per column (the cell,
+the bucket sum, the offset as one ``element_at`` lookup into a ``bigint``
+array literal). Building the same expressions from ``Column`` nodes costs
+one py4j round trip per node, about 300 nodes per ordering, which would
+dominate declaration time.
 """
 
 from __future__ import annotations
 
-import math
 from itertools import accumulate
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+S = 1024  # grid cells per binade; a cell is 1/S to 1/(2S) of its value wide
 
-def _double_sql(x: float) -> str:
-    """A SQL literal equal to the double ``x``, non-finite values included."""
-    if math.isfinite(x):
-        return f"{x!r}D"
-    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
-    return f"CAST('{name}' AS DOUBLE)"
+
+def _cell_sql(col: str) -> str:
+    """The grid cell of the double column ``col`` as a bigint SQL expression:
+    monotone in Spark's double order, exact at every binade edge."""
+    t = f"nanvl(`{col}`, CAST('Infinity' AS DOUBLE))"
+    e = f"least(greatest(floor(log2(abs({t}))), -1074), 1023)"
+    m = f"least(floor(abs({t}) / pow(2, {e}) * {S}), {2 * S})"
+    return f"CAST(signum({t}) * ({m} + ({e} + 1074) * {S}) AS BIGINT)"
+
+
+def _merge_cells(hist: list[tuple[int, int, int]], npart: int) -> tuple[list[int], list[int]]:
+    """Merge adjacent ``(cell, rows, weight)`` entries, sorted by cell, into
+    <= npart range buckets; return the cut cells (each bucket's last cell,
+    the top bucket's omitted) and every bucket's weight sum.
+
+    A bucket closes once it holds n/npart rows, or before a cell that would
+    take it past 2n/npart: no bucket holds more than
+    ``max(2n/npart, largest cell)`` rows, and all but the last hold n/npart
+    rows or, with their successor, more than 2n/npart, so there are at most
+    npart buckets."""
+    lo = sum(rows for _, rows, _ in hist) / npart
+    cuts, sums, held, last = [], [0], 0, None
+    for cell, rows, weight in hist:
+        if held and held + rows > 2 * lo:
+            cuts.append(last)
+            sums.append(0)
+            held = 0
+        held += rows
+        sums[-1] += weight
+        last = cell
+        if held >= lo:
+            cuts.append(cell)
+            sums.append(0)
+            held = 0
+    if cuts and cuts[-1] == last:  # the last cell closed a bucket: no top bucket
+        cuts.pop()
+        sums.pop()
+    return cuts, sums
 
 
 def ntile(rank_col: str, total: int, k: int) -> Column:
@@ -92,52 +140,44 @@ def exact_prefix(
     exact ``ntile(k)`` of the rank, added right after the ordering's window,
     so the next ordering's shuffle carries the score, not the rank.
 
-    Exact because the bucket bounds are literals and the input is
-    deterministic: the collected counts and the executed rows see the same
-    buckets, so no pin is needed. The frame is persisted for the two driver
-    actions only; the returned lazy plan recomputes the input.
+    One driver action: the collect of the cells' exact counts. Nothing is
+    cached, so ``df`` must be deterministic; the returned lazy plan
+    evaluates it again.
     """
     s_cols = [f"_s_{out}" for _, _, out in orderings]
+    f_cols = [f"_f_{out}" for _, _, out in orderings]
+    b_cols = [f"_b_{out}" for _, _, out in orderings]
     work = df.withColumns({s: lead.cast("double") for s, (lead, _, _) in zip(s_cols, orderings)})
+    work = work.withColumns({f: F.expr(_cell_sql(s)) for f, s in zip(f_cols, s_cols)})
 
-    cached = work.persist()
-    work = cached
-    try:
-        probs = [i / npart for i in range(1, npart)]
-        all_bounds = work.approxQuantile(s_cols, probs, 1.0 / (4 * npart))
-        cuts = [sorted(set(bounds)) for bounds in all_bounds]
-        b_cols = [f"_b_{out}" for _, _, out in orderings]
-        work = work.withColumns({
-            b_col: F.expr(" + ".join(["0"] + [f"CAST(`{s_col}` > {_double_sql(c)} AS INT)" for c in cut]))
-            for b_col, s_col, cut in zip(b_cols, s_cols, cuts)
-        })
+    pairs = ", ".join(f"{i}, `{f}`" for i, f in enumerate(f_cols))
+    cells = work.selectExpr(f"stack({len(f_cols)}, {pairs}) AS (o, cell)", f"`{weight}` AS w" if weight else "1L AS w")
+    counted = cells.groupBy("o", "cell").agg(F.count("*").alias("n"), F.sum("w").alias("w"))
+    hist = sorted(tuple(r) for r in counted.collect())
 
-        grouped = work.groupBy(*b_cols)
-        counted = grouped.count() if weight is None else grouped.agg(F.sum(weight).alias("count"))
-        combos = counted.collect()
-        total = sum(r["count"] for r in combos)
+    merged = [_merge_cells([(c, n, w) for o, c, n, w in hist if o == i], npart) for i in range(len(orderings))]
+    total = sum(merged[0][1])
+    work = work.withColumns({
+        b_col: F.expr(" + ".join(["0"] + [f"CAST(`{f_col}` > {c}L AS INT)" for c in cuts]))
+        for b_col, f_col, (cuts, _) in zip(b_cols, f_cols, merged)
+    }).drop(*f_cols)
 
-        helper = s_cols + b_cols
-        for (_, order, out), b_col, cut in zip(orderings, b_cols, cuts):
-            sizes = [0] * (len(cut) + 1)
-            for r in combos:
-                sizes[r[b_col]] += r["count"]
-            starts = ", ".join(f"{o}L" for o in [0, *accumulate(sizes[:-1])])
-            off_expr = F.expr(f"element_at(array({starts}), `{b_col}` + 1)")
+    helper = s_cols + b_cols
+    for (_, order, out), b_col, (_, sums) in zip(orderings, b_cols, merged):
+        starts = ", ".join(f"{o}L" for o in [0, *accumulate(sums[:-1])])
+        off_expr = F.expr(f"element_at(array({starts}), `{b_col}` + 1)")
 
-            w = Window.partitionBy(b_col).orderBy(*order)
-            if weight is None:
-                step = F.row_number().over(w)
-            else:
-                step = F.sum(weight).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            rank = out if k is None else f"_r_{out}"
-            work = work.withColumn(rank, (off_expr + step).cast("bigint"))
-            if k is not None:
-                work = work.withColumn(out, ntile(rank, total, k))
-                helper.append(rank)
-        return work.drop(*helper), total
-    finally:
-        cached.unpersist(blocking=False)
+        w = Window.partitionBy(b_col).orderBy(*order)
+        if weight is None:
+            step = F.row_number().over(w)
+        else:
+            step = F.sum(weight).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        rank = out if k is None else f"_r_{out}"
+        work = work.withColumn(rank, (off_expr + step).cast("bigint"))
+        if k is not None:
+            work = work.withColumn(out, ntile(rank, total, k))
+            helper.append(rank)
+    return work.drop(*helper), total
 
 
 def exact_ntile_scores(
