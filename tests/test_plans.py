@@ -176,12 +176,12 @@ def test_exact_prefix_declares_with_one_collect_and_no_cache(spark):
     the grid-cell counts in ranking.py, and caches nothing: no quantile
     sketch, no cache fill, no second collect, and so no cached input that
     could be released before the returned plan runs."""
-    import pathlib
+    from userportrait import ranking
 
-    src = (pathlib.Path(__file__).parent.parent / "userportrait" / "ranking.py").read_text().splitlines()
-    lines = [i + 1 for i, ln in enumerate(src) if ".collect()" in ln]
+    with open(ranking.__file__) as f:
+        lines = [i for i, ln in enumerate(f, 1) if ".collect()" in ln]
     assert len(lines) == 1, lines
-    site = f"collect at {pathlib.Path(__file__).parent.parent / 'userportrait' / 'ranking.py'}:{lines[0]}"
+    site = f"collect at {ranking.__file__}:{lines[0]}"
 
     sc = spark.sparkContext
     cached = set(sc._jsc.getPersistentRDDs().keySet())
