@@ -163,12 +163,15 @@ def test_exact_prefix_plans_are_bucketed_without_single_partition(spark, name):
     and funnel every row through one task at 100 TB, and the offsets come
     back as literals, so no SinglePartition may appear at all; nor may a
     Python-worker counter. Each offset is one array lookup, so the only
-    CASE WHENs left are the ntile arithmetic, at most one per ordering."""
+    CASE WHENs left are the ntile arithmetic, at most one per ordering.
+    The grid cell's binade exponent is a column of its own, so each
+    ordering's cell computes one LOG2."""
     plan = _plan(spark, name)
     assert "Exchange SinglePartition" not in plan, f"{name}: {plan[:800]}"
     assert "hashpartitioning(_b_" in plan, f"{name}: {plan[:800]}"
     assert "MapInPandas" not in plan, f"{name}: {plan[:800]}"
     assert plan.count("CASE WHEN") <= 3, f"{name}: per-bucket CASE WHEN chain in {plan[:800]}"
+    assert plan.upper().count("LOG2(") <= 3, f"{name}: grid exponent computed per reference in {plan[:800]}"
 
 
 def test_exact_prefix_declares_with_one_collect_and_no_cache(spark):
@@ -345,11 +348,21 @@ def test_fn_regex_is_pure_map(spark):
 
 
 def test_refresh_delta_keyed_on_custkey_throughout(spark):
-    """tag_refresh_delta: both snapshots and the diff join stay on the
-    o_custkey/c_custkey key — no SinglePartition funnel anywhere."""
+    """tag_refresh_delta: both anchors' cycles come from one aggregate on
+    the o_custkey key, and the diff is a filter on that row — one scan, no
+    join, no SinglePartition funnel."""
     plan = _plan(spark, "tag_refresh_delta")
     assert "Exchange SinglePartition" not in plan
-    assert "CartesianProduct" not in plan
+    assert plan.count("Scan parquet") == 1, plan[:800]
+    assert "Join" not in plan, plan[:800]
+
+
+def test_profile_assemble_reads_each_table_once(spark):
+    """profile_assemble: the customer row (segment and tier tags) and the
+    scored RFM row (rfm_score and the cycle from recency_days) each read
+    their table once — two scans, not one per tag."""
+    plan = _plan(spark, "profile_assemble")
+    assert plan.count("Scan parquet") == 2, plan[:800]
 
 
 def test_funnel_windowed_pushes_stage_filters_to_scan(spark):
@@ -683,7 +696,7 @@ def test_no_unaudited_broadcast_hints():
             "filtered region dim (1 row)",
         ("portrait.py", ".crossJoin(F.broadcast(cen))"):
             "1-row seed-centroid scalar",
-        ("portrait.py", "t.customer.join(F.broadcast(rules), t.customer.c_mktsegment == rules.seg)"):
+        ("portrait.py", 'return customer.join(F.broadcast(rules), customer.c_mktsegment == rules.seg, "left").drop("seg")'):
             "constant inline rule frame",
         ("portrait.py", "t.customer.join(F.broadcast(t.nation), t.customer.c_nationkey == t.nation.n_nationkey)"):
             "nation dim",

@@ -118,9 +118,9 @@ def test_exact_ntile_scores_matches_window_ntile(spark, rows, k):
 
 def _cells(df, col):
     """{row uid: grid cell of ``col``} as ranking.exact_prefix computes it."""
-    from userportrait.ranking import _cell_sql
+    from userportrait.ranking import _with_cells
 
-    return {r.uid: r.cell for r in df.selectExpr("uid", f"{_cell_sql(col)} AS cell").collect()}
+    return {r.uid: r.cell for r in _with_cells(df, {"cell": col}).select("uid", "cell").collect()}
 
 
 def _buckets(cells, npart):

@@ -3,7 +3,7 @@
 One declarative plan answering the reference's core question ("who is this
 customer, by region/segment, and what are their RFM numbers" — the
 match+statistical tag families, SURVEY §0.1): dims (nation, region) broadcast,
-facts aggregate on one shuffle key (o_custkey), decimal-exact money math.
+facts aggregate on one shuffle key (o_custkey) in ``rfm_base``, decimal-exact.
 """
 
 from __future__ import annotations
@@ -12,22 +12,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load
-
-ANCHOR = "2001-09-01"  # just past max(o_orderdate); SURVEY §2.I
+from .ops.portrait import rfm_base
 
 
 def flagship_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir)
-    per_cust = t.orders.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.col("o_totalprice").cast("decimal(38,4)")).cast("double").alias("monetary"),
-        F.datediff(F.lit(ANCHOR).cast("date"), F.max(F.col("o_orderdate")).cast("date")).alias("recency_days"),
-    )
     geo = t.customer.join(
         F.broadcast(t.nation), t.customer.c_nationkey == t.nation.n_nationkey
     ).join(F.broadcast(t.region), F.col("n_regionkey") == F.col("r_regionkey"))
     return (
-        geo.join(per_cust, geo.c_custkey == per_cust.o_custkey, "left")
+        geo.join(rfm_base(spark, sf_dir), "c_custkey", "left")
         .select(
             "c_custkey",
             "c_name",

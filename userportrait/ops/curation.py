@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load, pin
 from ..registry import op
+from .portrait import ANCHOR, consumption_cycle, days_since
 
 HEX = "0123456789abcdef"
 
@@ -1101,34 +1102,14 @@ def tag_refresh_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the delta is what keeps the nightly job O(changed), and this
     op is the query that produces it.
 
-    Both snapshots aggregate on the same o_custkey key from the same scan
-    shape; the diff is an equi-join on that key with an inequality filter —
-    one reusable partitioning end to end.
+    Both anchors' cycles come from one aggregate on o_custkey, so the diff
+    is a filter on that row: one scan, one shuffle, no join.
     """
-    o = load(spark, sf_dir).orders
-
-    def snapshot(anchor: str, col: str):
-        days = F.datediff(
-            F.lit(anchor).cast("date"), F.max("o_orderdate").cast("date")
-        ).cast("int")
-        bucket = (
-            F.when(F.col("d") <= 30, "active_30d")
-            .when(F.col("d") <= 90, "active_quarter")
-            .when(F.col("d") <= 180, "active_half_year")
-            .when(F.col("d") <= 365, "active_year")
-            .otherwise("dormant")
-        )
-        return (
-            o.groupBy(F.col("o_custkey").alias("c_custkey"))
-            .agg(days.alias("d"))
-            .select("c_custkey", bucket.alias(col))
-        )
-
-    old = snapshot("2001-08-02", "old_cycle")
-    new = snapshot("2001-09-01", "new_cycle")
-    return old.join(new, "c_custkey").where(
-        F.col("old_cycle") != F.col("new_cycle")
-    ).select("c_custkey", "old_cycle", "new_cycle")
+    per = load(spark, sf_dir).orders.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
+        consumption_cycle(days_since("2001-08-02")).alias("old_cycle"),
+        consumption_cycle(days_since(ANCHOR)).alias("new_cycle"),
+    )
+    return per.where(F.col("old_cycle") != F.col("new_cycle"))
 
 
 @op(

@@ -4,9 +4,10 @@ composable DataFrame functions over the driver star schema.
 
 Tag families: match/rule tags (broadcast join against an inline rules dim),
 statistical tags (recency buckets, top-1 preference, RFM/RFE/PSM scoring),
-and the profile assembly (the reference's HBase full-outer merge, here a
-hash-partitioned multi-join rendered to a canonical sorted tag string —
-raw map columns hash unstably, SURVEY §2.0).
+and the profile assembly (the reference's HBase full-outer merge, here one
+keyed left join of the customer row onto the scored RFM row, rendered to a
+canonical sorted tag string — raw map columns hash unstably, SURVEY §2.0).
+Each tag rule and the days-since-anchor aggregate is defined once here.
 
 Scale note: the ntile(5) scoring is the distributed exact decomposition
 (userportrait/ranking.py): range buckets merged from exact grid-cell
@@ -18,7 +19,7 @@ equivalence is re-proven on every differential run.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load, pin
@@ -39,6 +40,41 @@ SEGMENT_RULES = [
 _SEGMENT_RULES_SQL = "(VALUES " + ", ".join(f"('{k}', '{v}')" for k, v in SEGMENT_RULES) + ") AS rules(seg, tag)"
 
 
+def with_segment_tag(spark: SparkSession, customer: DataFrame) -> DataFrame:
+    """``customer`` plus its ``segment_tag`` from SEGMENT_RULES (null when no
+    rule matches), through a broadcast join against the inline rules frame."""
+    rules = spark.createDataFrame(SEGMENT_RULES, "seg string, segment_tag string")
+    return customer.join(F.broadcast(rules), customer.c_mktsegment == rules.seg, "left").drop("seg")
+
+
+def balance_tier(acctbal: Column) -> Column:
+    """The balance-tier rule over an account balance."""
+    return (
+        F.when(acctbal >= 8000, "tier_1_premium")
+        .when(acctbal >= 5000, "tier_2_high")
+        .when(acctbal >= 2000, "tier_3_mid")
+        .when(acctbal >= 0, "tier_4_low")
+        .otherwise("tier_5_negative")
+    )
+
+
+def days_since(anchor: str) -> Column:
+    """Aggregate over orders: whole days from the last ``o_orderdate`` to
+    the ``anchor`` date, as int."""
+    return F.datediff(F.lit(anchor).cast("date"), F.max("o_orderdate").cast("date")).cast("int")
+
+
+def consumption_cycle(days: Column) -> Column:
+    """The consumption-cycle rule over days since the last order."""
+    return (
+        F.when(days <= 30, "active_30d")
+        .when(days <= 90, "active_quarter")
+        .when(days <= 180, "active_half_year")
+        .when(days <= 365, "active_year")
+        .otherwise("dormant")
+    )
+
+
 @op(
     "tag_match_rule",
     oracle=f"""
@@ -52,12 +88,8 @@ def tag_match_rule(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference parses `key=value##...` rule strings from MySQL per tag
     [R]; here the rules are an inline DataFrame — same join shape, and the
     broadcast keeps it shuffle-free at any fact size."""
-    t = load(spark, sf_dir)
-    rules = spark.createDataFrame(SEGMENT_RULES, "seg string, tag string")
-    return (
-        t.customer.join(F.broadcast(rules), t.customer.c_mktsegment == rules.seg)
-        .select("c_custkey", "c_mktsegment", F.col("tag").alias("segment_tag"))
-    )
+    tagged = with_segment_tag(spark, load(spark, sf_dir).customer)
+    return tagged.where(F.col("segment_tag").isNotNull()).select("c_custkey", "c_mktsegment", "segment_tag")
 
 
 _AGE_BUCKET_CASE = """
@@ -77,14 +109,7 @@ def tag_age_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range-bucket tag (the reference's age-bracket-from-birthday-ranges
     analog [R], over acctbal in the driver schema)."""
     c = load(spark, sf_dir).customer
-    tier = (
-        F.when(F.col("c_acctbal") >= 8000, "tier_1_premium")
-        .when(F.col("c_acctbal") >= 5000, "tier_2_high")
-        .when(F.col("c_acctbal") >= 2000, "tier_3_mid")
-        .when(F.col("c_acctbal") >= 0, "tier_4_low")
-        .otherwise("tier_5_negative")
-    )
-    return c.select("c_custkey", "c_acctbal", tier.alias("balance_tier"))
+    return c.select("c_custkey", "c_acctbal", balance_tier(F.col("c_acctbal")).alias("balance_tier"))
 
 
 _CYCLE_SQL = f"""
@@ -101,18 +126,10 @@ _CYCLE_SQL = f"""
 
 @op("tag_consumption_cycle", oracle=_CYCLE_SQL)
 def tag_consumption_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consumption-cycle tag: datediff(anchor, max(order_time)) bucketed [R]."""
-    o = load(spark, sf_dir).orders
-    days = F.datediff(F.lit(ANCHOR).cast("date"), F.max("o_orderdate").cast("date")).cast("int")
-    per = o.groupBy(F.col("o_custkey").alias("c_custkey")).agg(days.alias("days_since"))
-    cycle = (
-        F.when(F.col("days_since") <= 30, "active_30d")
-        .when(F.col("days_since") <= 90, "active_quarter")
-        .when(F.col("days_since") <= 180, "active_half_year")
-        .when(F.col("days_since") <= 365, "active_year")
-        .otherwise("dormant")
-    )
-    return per.select("c_custkey", "days_since", cycle.alias("cycle"))
+    """Consumption-cycle tag: datediff(anchor, max(order_time)) bucketed [R],
+    i.e. ``rfm_base``'s recency (Catalyst prunes its unread F and M)."""
+    days = rfm_base(spark, sf_dir).select("c_custkey", F.col("recency_days").alias("days_since"))
+    return days.select("*", consumption_cycle(F.col("days_since")).alias("cycle"))
 
 
 @op(
@@ -159,10 +176,11 @@ _RFM_SQL = f"""
 
 
 def rfm_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared R/F/M aggregate (also feeds the ML ops and bench)."""
+    """The one per-customer orders aggregate (R/F/M): feeds the scored RFM
+    frame, the cycle tag, the profile, the flagship query and the ML ops."""
     o = load(spark, sf_dir).orders
     return o.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
-        F.datediff(F.lit(ANCHOR).cast("date"), F.max("o_orderdate").cast("date")).cast("int").alias("recency_days"),
+        days_since(ANCHOR).alias("recency_days"),
         F.count(F.lit(1)).alias("frequency"),
         F.sum(F.col("o_totalprice").cast("decimal(38,4)")).cast("double").alias("monetary"),
     )
@@ -173,9 +191,8 @@ def rfm_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     (userportrait/ranking.py) — no ``Exchange SinglePartition`` anywhere in
     the scored plan (regression-guarded by tests/test_plans.py), yet
     bitwise-equal to the oracle's plain ``ntile(5) OVER (ORDER BY ...)``."""
-    base = rfm_base(spark, sf_dir)
     scored = exact_ntile_scores(
-        base,
+        rfm_base(spark, sf_dir),
         [
             (-F.col("recency_days"), "c_custkey", "r_score"),
             (F.col("frequency"), "c_custkey", "f_score"),
@@ -183,18 +200,8 @@ def rfm_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         k=5,
     )
-    return scored.select(
-        "c_custkey",
-        "recency_days",
-        "frequency",
-        "monetary",
-        "r_score",
-        "f_score",
-        "m_score",
-        (F.col("r_score") * 100 + F.col("f_score") * 10 + F.col("m_score"))
-        .cast("int")
-        .alias("rfm_score"),
-    )
+    rfm_score = F.col("r_score") * 100 + F.col("f_score") * 10 + F.col("m_score")
+    return scored.withColumn("rfm_score", rfm_score.cast("int"))
 
 
 @op("tag_rfm", oracle=_RFM_SQL)
@@ -304,21 +311,18 @@ def profile_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide profile: one row per customer, all tags merged.
 
     The reference full-outer-joins each new tag into an HBase profile row via
-    a string-merge UDF [R]; here it is a hash-partitioned multi-join on
-    c_custkey (every tag output is already keyed and pre-aggregated, so each
-    join is a same-key shuffle — AQE coalesces them) rendered to a canonical
-    sorted `k=v;...` string, because raw map columns hash unstably."""
-    t = load(spark, sf_dir)
-    seg = tag_match_rule(spark, sf_dir).select("c_custkey", "segment_tag")
-    tier = tag_age_bucket(spark, sf_dir).select("c_custkey", "balance_tier")
-    cyc = tag_consumption_cycle(spark, sf_dir).select("c_custkey", "cycle")
-    rfm = rfm_scored(spark, sf_dir).select("c_custkey", "rfm_score")
-    prof = (
-        t.customer.select("c_custkey")
-        .join(seg, "c_custkey", "left")
-        .join(tier, "c_custkey", "left")
-        .join(cyc, "c_custkey", "left")
-        .join(rfm, "c_custkey", "left")
+    a string-merge UDF [R]. Here every tag comes from one of two keyed rows:
+    the customer projection (segment tag through the broadcast rules join,
+    balance tier) and the scored RFM row (``rfm_score``, and the cycle
+    bucketed from ``recency_days``, which is the cycle tag's days since the
+    last order). One left join on c_custkey merges them, rendered to a
+    canonical sorted ``k=v;...`` string, because raw map columns hash
+    unstably."""
+    cust = with_segment_tag(spark, load(spark, sf_dir).customer).select(
+        "c_custkey", "segment_tag", balance_tier(F.col("c_acctbal")).alias("balance_tier")
+    )
+    rfm = rfm_scored(spark, sf_dir).select(
+        "c_custkey", "rfm_score", consumption_cycle(F.col("recency_days")).alias("cycle")
     )
     render = F.concat(
         F.lit("cycle="), F.coalesce(F.col("cycle"), F.lit("none")),
@@ -326,7 +330,7 @@ def profile_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(";segment="), F.coalesce(F.col("segment_tag"), F.lit("none")),
         F.lit(";tier="), F.coalesce(F.col("balance_tier"), F.lit("none")),
     )
-    return prof.select("c_custkey", render.alias("profile"))
+    return cust.join(rfm, "c_custkey", "left").select("c_custkey", render.alias("profile"))
 
 
 _US_PER_WEEK = 7 * 86_400 * 1_000_000

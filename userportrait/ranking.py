@@ -51,11 +51,11 @@ with few distinct values gets at most that many buckets:
 ``sort_multikey_nulls`` buckets on ``c_nationkey``, so it gets at most 25,
 whatever ``npart`` asks for.
 
-Every literal reaches the plan inside one SQL string per column (the cell,
-the bucket sum, the offset as one ``element_at`` lookup into a ``bigint``
-array literal). Building the same expressions from ``Column`` nodes costs
-one py4j round trip per node, about 300 nodes per ordering, which would
-dominate declaration time.
+Every literal reaches the plan inside one SQL string per column (the cell
+and its two helper columns, the bucket sum, the offset as one
+``element_at`` lookup into a ``bigint`` array literal). Building the same
+expressions from ``Column`` nodes costs one py4j round trip per node,
+about 300 nodes per ordering, which would dominate declaration time.
 """
 
 from __future__ import annotations
@@ -68,13 +68,19 @@ from pyspark.sql import functions as F
 S = 1024  # grid cells per binade; a cell is 1/S to 1/(2S) of its value wide
 
 
-def _cell_sql(col: str) -> str:
-    """The grid cell of the double column ``col`` as a bigint SQL expression:
-    monotone in Spark's double order, exact at every binade edge."""
-    t = f"nanvl(`{col}`, CAST('Infinity' AS DOUBLE))"
-    e = f"least(greatest(floor(log2(abs({t}))), -1074), 1023)"
-    m = f"least(floor(abs({t}) / pow(2, {e}) * {S}), {2 * S})"
-    return f"CAST(signum({t}) * ({m} + ({e} + 1074) * {S}) AS BIGINT)"
+def _with_cells(df: DataFrame, cells: dict[str, str]) -> DataFrame:
+    """Append the bigint grid cell of each ``{cell: double lead}`` column.
+    The NaN-mapped lead ``_t`` and its binade exponent ``_e`` are helper
+    columns, dropped again: each is read more than once, so Catalyst keeps
+    it a column and the plan computes it once per lead."""
+    df = df.withColumns({f"_t{c}": F.expr(f"nanvl(`{s}`, CAST('Infinity' AS DOUBLE))") for c, s in cells.items()})
+    df = df.withColumns({f"_e{c}": F.expr(f"least(greatest(floor(log2(abs(`_t{c}`))), -1074), 1023)") for c in cells})
+    df = df.withColumns({
+        c: F.expr(f"CAST(signum(`_t{c}`) * (least(floor(abs(`_t{c}`) / pow(2, `_e{c}`) * {S}), {2 * S})"
+                  f" + (`_e{c}` + 1074) * {S}) AS BIGINT)")
+        for c in cells
+    })
+    return df.drop(*(f"_{h}{c}" for c in cells for h in "te"))
 
 
 def _merge_cells(hist: list[tuple[int, int, int]], npart: int) -> tuple[list[int], list[int]]:
@@ -148,7 +154,7 @@ def exact_prefix(
     f_cols = [f"_f_{out}" for _, _, out in orderings]
     b_cols = [f"_b_{out}" for _, _, out in orderings]
     work = df.withColumns({s: lead.cast("double") for s, (lead, _, _) in zip(s_cols, orderings)})
-    work = work.withColumns({f: F.expr(_cell_sql(s)) for f, s in zip(f_cols, s_cols)})
+    work = _with_cells(work, dict(zip(f_cols, s_cols)))
 
     pairs = ", ".join(f"{i}, `{f}`" for i, f in enumerate(f_cols))
     cells = work.selectExpr(f"stack({len(f_cols)}, {pairs}) AS (o, cell)", f"`{weight}` AS w" if weight else "1L AS w")

@@ -140,9 +140,10 @@ GRADE_FIRST: tuple[str, ...] = (
     # the slow tier only:
     "tag_crowd_select",
     "tag_lookalike",
-    # filler: the oldest-evidence greens:
-    "agg_filter_clause",
-    "tag_funnel_windowed",
+    # the refresh pass's tag ops, on the shared tag rules and orders
+    # aggregate, so a change to either is graded in the window:
+    "profile_assemble",
+    "tag_refresh_delta",
 )
 
 
