@@ -1,12 +1,13 @@
 """Measure sink_ivf_compact's claim at scale: after a week of streaming
-triggers the serving view is base ∪ N per-batch dirs, and the fold returns
-probe wall to single-layout cost.
+triggers the index's latest version holds the base file plus one file per
+batch in every touched cell, and the fold returns probe wall to
+single-file-per-cell cost.
 
-Emulates the post-week state directly (N batch dirs written with the same
-assignment the stream ingest performs — the ladder measures fold/probe
-economics, not the stream machinery, which the sf-fixture op already
-grades), then times the SAME serving probe over the fan-out view and over
-the folded base.
+Emulates the post-week state directly (N appended index versions written
+with the same assignment the stream ingest performs — the ladder measures
+fold/probe economics, not the stream machinery, which the sf-fixture op
+already grades), then times the SAME serving probe over the fragmented
+version and over the folded one.
 
 Usage:
     python scripts/ivf_compact_ladder.py [N_BATCHES] [sf_dir]
@@ -15,7 +16,6 @@ Usage:
 
 from __future__ import annotations
 
-import glob
 import os
 import sys
 import time
@@ -32,26 +32,25 @@ def main() -> int:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/userportrait_corpus10"
     spark = get_spark("ivf-compact-ladder")
 
-    from userportrait.catalog import load, release_pins
+    from userportrait.catalog import load
     from userportrait.ops.llm_similarity import (
+        _by_cell,
+        _index_commit,
         _ivf_append_parts,
         _ivf_serve_probe,
         ivf_assign,
     )
-    from userportrait.ops.streaming import ivf_fold_batches
+    from userportrait.ops.scans import _snapshot_in_parts, _snapshot_manifest, _snapshot_read
+    from userportrait.ops.streaming import ivf_fold_fragmented_cells
 
     t0 = time.perf_counter()
-    path, cutoff, cent = _ivf_append_parts(spark, sf_dir)
+    root, cutoff, cent = _ivf_append_parts(spark, sf_dir)
     build_s = time.perf_counter() - t0
 
     e = load(spark, sf_dir).embeddings
     new = e.where(F.col("vec_id") > cutoff)
     lo, hi = new.agg(F.min("vec_id"), F.max("vec_id")).first()
     span = (hi - lo + 1) // n_batches + 1
-    batches_root = path + "_batches"
-    import shutil
-
-    shutil.rmtree(batches_root, ignore_errors=True)
     t0 = time.perf_counter()
     for i in range(n_batches):
         sl = new.where(
@@ -60,29 +59,14 @@ def main() -> int:
         assigned = sl.join(ivf_assign(sl, cent), "vec_id").select(
             "vec_id", "embedding", "cell"
         )
-        (
-            assigned.repartition("cell")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(os.path.join(batches_root, f"batch_id={i}"))
-        )
+        _index_commit(spark, root, "append", {"cells": _by_cell(assigned)})
     ingest_s = time.perf_counter() - t0
-    release_pins()
 
     def nfiles() -> int:
-        return len(glob.glob(os.path.join(path, "cell=*", "*.parquet"))) + len(
-            glob.glob(os.path.join(batches_root, "batch_id=*", "cell=*", "*.parquet"))
-        )
+        return sum(map(_snapshot_in_parts("cells"), _snapshot_manifest(root)["files"]))
 
     files_before = nfiles()
-    view = (
-        spark.read.parquet(path)
-        .select("vec_id", "embedding", "cell")
-        .unionByName(
-            spark.read.parquet(batches_root).select("vec_id", "embedding", "cell")
-        )
-    )
+    view = _snapshot_read(spark, root, part="cells").select("vec_id", "embedding", "cell")
 
     def probe(back) -> tuple[float, int]:
         # warm twice, report the second run (the bench convention)
@@ -105,19 +89,18 @@ def main() -> int:
     probe_fanout_s, n1 = probe(view)
 
     t0 = time.perf_counter()
-    ivf_fold_batches(spark, path, batches_root)
+    ivf_fold_fragmented_cells(spark, root, member_cols=("vec_id", "embedding"))
     fold_s = time.perf_counter() - t0
-    release_pins()
-    files_after = len(glob.glob(os.path.join(path, "cell=*", "*.parquet")))
+    files_after = nfiles()
 
-    folded = spark.read.parquet(path).select("vec_id", "embedding", "cell")
+    folded = _snapshot_read(spark, root, part="cells").select("vec_id", "embedding", "cell")
     scan_base_s = scan_wall(folded)
     probe_base_s, n2 = probe(folded)
 
     print(
         f"\nladder sf={sf_dir} n_batches={n_batches}\n"
         f"  base build            {build_s:8.1f} s\n"
-        f"  ingest {n_batches:3d} batch dirs  {ingest_s:8.1f} s\n"
+        f"  ingest {n_batches:3d} versions    {ingest_s:8.1f} s\n"
         f"  serving files before  {files_before:8d}\n"
         f"  member scan fan-out   {scan_fanout_s:8.2f} s\n"
         f"  probe over fan-out    {probe_fanout_s:8.1f} s   ({n1} rows)\n"

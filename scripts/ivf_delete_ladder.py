@@ -1,12 +1,13 @@
 """Measure sink_ivf_delete_kmeans's claim at scale: with a √n-cell trained
 quantizer, purging a FIXED-SIZE erasure list costs O(touched-cell mass) —
-request-sized — while the index build costs O(corpus). The r12 delete
-ladder showed the ~10-cell label quantizer degenerates (every erasure
-touches every cell); this rung shows where the claim actually binds.
+request-sized — while the index build costs O(corpus). On the ~10-cell
+label quantizer every erasure touches every cell; this rung shows where
+the claim actually binds.
 
-Per rung: build the kmeans index, time it; run the tombstone+purge, time
-its phases; report touched cells / total cells and touched member mass /
-corpus mass. Across rungs (1x vs 10x corpus) the build wall should scale
+Per rung: build the kmeans index, time it; run the purge (one index
+version: the erasure record plus the touched cells' survivors), time it;
+report touched cells / total cells and touched member mass / corpus
+mass. Across rungs (1x vs 10x corpus) the build wall should scale
 with the corpus and the purge wall with the touched mass.
 
 The erasure list is computed OUTSIDE the timed delete window and passed in
@@ -45,13 +46,13 @@ def main() -> int:
         _ivf_kmeans_erasure,
         _write_ivf_kmeans_index,
     )
+    from userportrait.ops.scans import _snapshot_read
 
     t0 = time.time()
     root = _write_ivf_kmeans_index(spark, sf_dir)
     build_wall = time.time() - t0
 
-    cells_path = os.path.join(root, "cells")
-    back = spark.read.parquet(cells_path)
+    back = _snapshot_read(spark, root, part="cells")
     n_corpus = back.count()
     erase = [r.vec_id for r in _ivf_kmeans_erasure(back, erase_n).collect()]
     touched = back.where(F.col("vec_id").isin(erase)).select("cell").distinct()

@@ -20,7 +20,9 @@ from .conftest import SF_DIR
 # window and keep their default-tier cases, the single-tag ops that share
 # their rules with profile_assemble and tag_refresh_delta, and the caller
 # of ranking.exact_prefix outside it, so every caller is graded in the
-# default tier. The rest of the registry is the slow tier
+# default tier, and the ANN index lifecycle ops (deletes, compactions,
+# rebalance, retrains, appends), which share the manifest commit of
+# scans._snapshot_commit. The rest of the registry is the slow tier
 # (UP_SLOW_TESTS=1). The assertion set over the full registry is unchanged.
 _DEFAULT_TIER = set(list(load_all_ops())[:50]) | {
     "events_rolling_distinct_users",
@@ -43,6 +45,16 @@ _DEFAULT_TIER = set(list(load_all_ops())[:50]) | {
     "tag_match_rule",
     "tag_age_bucket",
     "tag_rfe",
+    "sink_ivf_delete",
+    "sink_ivf_delete_kmeans",
+    "sink_pq_delete",
+    "sink_pq_compact",
+    "sink_ivf_retrain",
+    "sink_pq_retrain",
+    "sink_ivf_rebalance",
+    "sink_ivf_append_kmeans",
+    "sink_ivf_compact_kmeans",
+    "sink_ivfpq_append",
 }
 ALL_OPS = [
     n if n in _DEFAULT_TIER else pytest.param(n, marks=pytest.mark.slow)

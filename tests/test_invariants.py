@@ -1416,25 +1416,19 @@ def test_pq_probe_recall_and_roundtrip(spark):
     never retrains), (b) run-stable, 5 real-cosine neighbors per sampled
     query, (c) recall@5 vs the exact kNN on the same md5 sample clears
     the sim_knn_pq floor (measured 0.776; 0.6 gate)."""
-    import numpy as np
     from pyspark.sql import functions as F
 
     from userportrait.ops.curation import HEX
     from userportrait.ops.llm_similarity import (
-        PQ_K,
-        PQ_M,
-        PQ_SUBDIM,
         _pq_codebooks,
+        _read_codebooks,
         _unit_embeddings,
         _write_pq_index,
     )
     from userportrait.ops.pipeline_ext import _recall_histogram
 
     root = _write_pq_index(spark, SF_DIR)
-    bk = spark.read.parquet(root + "/codebooks").collect()
-    stored = np.zeros((PQ_M, PQ_K, PQ_SUBDIM))
-    for r in bk:
-        stored[r.sub, r.cent, r.dim] = r.w
+    stored = _read_codebooks(spark, root)
     trained = _pq_codebooks(_unit_embeddings(load(spark, SF_DIR).embeddings))
     assert (stored == trained).all(), "codebook roundtrip must be bit-exact"
 
@@ -1484,26 +1478,48 @@ def test_filtered_probe_maintains_k_and_respects_predicate(spark):
     )
 
 
-@pytest.mark.slow
+def _latest_files(root, part):
+    """The latest committed version's files of one index part, as paths."""
+    import os
+
+    from userportrait.ops.scans import _snapshot_in_parts, _snapshot_manifest
+
+    in_part = _snapshot_in_parts(part)
+    return sorted(os.path.join(root, f) for f in _snapshot_manifest(root)["files"] if in_part(f))
+
+
+def _disk_files(root):
+    """Every data file under an index root, committed or not."""
+    import glob
+    import os
+
+    return sorted(glob.glob(os.path.join(root, "data", "**", "part-*.parquet"), recursive=True))
+
+
+def _cell_of(path):
+    return int(path.split("/cell=", 1)[1].split("/", 1)[0])
+
+
 def test_ivf_append_probe_agreement(spark):
-    """sink_ivf_append's serving contract (VERDICT r10 missing #2 'done'
-    bar): appending a crawl batch into existing cells must not change
-    what the base index answers — the merged index restricted to base
-    members reproduces the pre-append probe EXACTLY — and the appended
-    vectors must actually enter serving results. Plus conservation:
-    n_base + n_appended = n_vecs per cell, and the appended total equals
-    the new-vector count."""
+    """sink_ivf_append's serving contract: appending a crawl batch into
+    existing cells must not change what the base index answers — the
+    merged index restricted to base members reproduces the pre-append
+    probe EXACTLY — and the appended vectors must actually enter serving
+    results. Plus conservation: n_base + n_appended = n_vecs per cell,
+    and the appended total equals the new-vector count."""
     from userportrait.ops.llm_similarity import _ivf_append_parts, _ivf_serve_probe
+    from userportrait.ops.scans import _snapshot_read
 
     e = load(spark, SF_DIR).embeddings
-    path, cutoff, cent = _ivf_append_parts(spark, SF_DIR)
-    pre = sorted(map(tuple, _ivf_serve_probe(e, cent, spark.read.parquet(path)).collect()))
+    root, cutoff, cent = _ivf_append_parts(spark, SF_DIR)
+    base = _snapshot_read(spark, root, part="cells")
+    pre = sorted(map(tuple, _ivf_serve_probe(e, cent, base).collect()))
 
     rollup = OPS["sink_ivf_append"].fn(spark, SF_DIR).collect()
     assert all(r.n_base + r.n_appended == r.n_vecs for r in rollup)
     assert sum(r.n_appended for r in rollup) == e.where(F.col("vec_id") > cutoff).count()
 
-    merged = spark.read.parquet(path)
+    merged = _snapshot_read(spark, root, part="cells")
     restricted = sorted(
         map(
             tuple,
@@ -1645,49 +1661,40 @@ def test_index_meta_join_enforces_doc_contract(spark):
         _join_doc_meta_1to1(members, docs_dup, ["lang"]).collect()
 
 
-@pytest.mark.slow
 def test_ivf_compact_collapses_files_and_preserves_probes(spark):
-    """sink_ivf_compact's two non-oracle claims (r11 VERDICT missing #1):
-    (a) FILE COLLAPSE — after the fold every base cell directory holds
-    exactly one file and the per-batch append dirs are retired, so the
-    serving view's file count strictly drops; (b) PROBE AGREEMENT — the
-    serving answers over base ∪ batch dirs before compaction are
-    bit-identical to the answers over the base alone after it."""
-    import glob
-    import os
+    """sink_ivf_compact's two non-oracle claims: (a) FILE COLLAPSE — the
+    streaming ingest commits one version per micro-batch, and after the
+    fold every cell holds exactly one file in the latest version, the
+    file count strictly drops, and expiry leaves no folded file on disk;
+    (b) PROBE AGREEMENT — the serving answers over the streamed version
+    are bit-identical to the answers over the folded one."""
+    from collections import Counter
 
     from userportrait.ops.llm_similarity import _ivf_serve_probe
+    from userportrait.ops.scans import _snapshot_latest, _snapshot_read
     from userportrait.ops.streaming import _run_stream_ivf_ingest
     from userportrait.registry import OPS
 
-    path, _cutoff, cent, batches_root = _run_stream_ivf_ingest(spark, SF_DIR)
-    files_before = glob.glob(os.path.join(path, "cell=*", "*.parquet")) + glob.glob(
-        os.path.join(batches_root, "batch_id=*", "cell=*", "*.parquet")
-    )
-    view = (
-        spark.read.parquet(path)
-        .select("vec_id", "embedding", "cell")
-        .unionByName(spark.read.parquet(batches_root).select("vec_id", "embedding", "cell"))
-    )
+    root, _cutoff, cent = _run_stream_ivf_ingest(spark, SF_DIR)
+    assert _snapshot_latest(root) >= 3, "build + one version per micro-batch (>= 2)"
+    files_before = _latest_files(root, "cells")
+    view = _snapshot_read(spark, root, part="cells").select("vec_id", "embedding", "cell")
     e = load(spark, SF_DIR).embeddings
     before = sorted(map(tuple, _ivf_serve_probe(e, cent, view).collect()))
 
     OPS["sink_ivf_compact"].fn(spark, SF_DIR).collect()
 
-    assert not os.path.exists(batches_root), "batch dirs must be retired by the fold"
-    files_after = glob.glob(os.path.join(path, "cell=*", "*.parquet"))
+    files_after = _latest_files(root, "cells")
     assert len(files_after) < len(files_before)
-    from collections import Counter
-
-    per_cell = Counter(os.path.basename(os.path.dirname(f)) for f in files_after)
+    per_cell = Counter(_cell_of(f) for f in files_after)
     assert all(n == 1 for n in per_cell.values()), per_cell
+    assert _disk_files(root) == sorted(files_after)
 
-    base_view = spark.read.parquet(path).select("vec_id", "embedding", "cell")
+    base_view = _snapshot_read(spark, root, part="cells").select("vec_id", "embedding", "cell")
     after = sorted(map(tuple, _ivf_serve_probe(e, cent, base_view).collect()))
     assert after == before
 
 
-@pytest.mark.slow
 def test_pq_append_frozen_books_and_reachability(spark):
     """sink_pq_append's model-side claims, which the EXACT count rollup
     cannot see: (a) the append leaves the BASE code rows and the
@@ -1707,27 +1714,20 @@ def test_pq_append_frozen_books_and_reachability(spark):
         PQ_M,
         PQ_SUBDIM,
     )
+    from userportrait.ops.scans import _snapshot_read
     from userportrait.registry import OPS
-
-    import os as _os
 
     root, cutoff = _pq_append_parts(spark, SF_DIR)
     base_codes = dict(
-        (r.vec_id, r.code)
-        for r in spark.read.parquet(_os.path.join(root, "codes")).collect()
+        (r.vec_id, r.code) for r in _snapshot_read(spark, root, part="codes").collect()
     )
-    books_before = sorted(
-        map(tuple, spark.read.parquet(_os.path.join(root, "codebooks")).collect())
-    )
+    books_before = sorted(map(tuple, _snapshot_read(spark, root, part="codebooks").collect()))
 
     OPS["sink_pq_append"].fn(spark, SF_DIR).collect()
 
-    books_after_rows = spark.read.parquet(_os.path.join(root, "codebooks")).collect()
+    books_after_rows = _snapshot_read(spark, root, part="codebooks").collect()
     assert sorted(map(tuple, books_after_rows)) == books_before
-    merged = {
-        r.vec_id: r.code
-        for r in spark.read.parquet(_os.path.join(root, "codes")).collect()
-    }
+    merged = {r.vec_id: r.code for r in _snapshot_read(spark, root, part="codes").collect()}
     for vid, code in base_codes.items():
         assert merged[vid] == code, f"base code rewritten for vec_id={vid}"
 
@@ -1750,7 +1750,7 @@ def test_pq_append_frozen_books_and_reachability(spark):
     sample = (
         F.instr(F.lit(HEX), F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)) - 1 == 0
     )
-    codes_df = spark.read.parquet(_os.path.join(root, "codes"))
+    codes_df = _snapshot_read(spark, root, part="codes")
     res = _pq_adc_search(spark, e, _unit_embeddings(e.where(sample)), codes_df, books).collect()
     assert any(r.neighbor_id > cutoff for r in res), "appended vectors unreachable"
 
@@ -1834,19 +1834,18 @@ def test_stream_left_outer_nulls_emitted_by_watermark(spark):
     assert nulls[0][1][0] == 1  # the unmatched click
 
 
-@pytest.mark.slow
-def test_ivf_delete_tombstone_purge_agree(spark):
-    """sink_ivf_delete's serving claims: (a) the TOMBSTONE view (members
-    anti-join manifest) and the PURGED index answer the serving probe
-    identically — logical and physical deletion are the same index; (b) no
-    erased vec_id appears in post-delete serving answers, as query or as
-    neighbor; (c) the applied manifest is exactly the deterministic
-    deletion set (the GDPR audit trail)."""
+def test_ivf_delete_purge_agrees_with_logical_view(spark):
+    """sink_ivf_delete's serving claims: (a) the LOGICAL view (members
+    before the delete, minus the erasure record) and the PURGED index
+    answer the serving probe identically — logical and physical deletion
+    are the same index; (b) no erased vec_id appears in post-delete
+    serving answers, as query or as neighbor; (c) the erasure record is
+    exactly the deterministic deletion set (the GDPR audit trail)."""
     import os as _os
 
     from userportrait.ops.curation import HEX
     from userportrait.ops.llm_similarity import _ivf_serve_probe, label_centroids
-    from userportrait.ops.scans import SCRATCH
+    from userportrait.ops.scans import SCRATCH, _snapshot_read
     from userportrait.registry import OPS
 
     e = load(spark, SF_DIR).embeddings
@@ -1857,14 +1856,12 @@ def test_ivf_delete_tombstone_purge_agree(spark):
     assert deleted_ids, "fixture must hit the deletion nibble"
 
     OPS["sink_ivf_delete"].fn(spark, SF_DIR).collect()
-    path = _os.path.join(SCRATCH, "embeddings_ivf_del")  # NOT _scratch(): that wipes the dir
+    root = _os.path.join(SCRATCH, "embeddings_ivf_del")  # NOT _scratch(): that wipes the dir
+    erased = _snapshot_read(spark, root, part="erased")
 
-    applied = {
-        r.vec_id for r in spark.read.parquet(path + "_applied").select("vec_id").collect()
-    }
-    assert applied == deleted_ids
+    assert {r.vec_id for r in erased.select("vec_id").collect()} == deleted_ids
 
-    purged = spark.read.parquet(path).select("vec_id", "embedding", "cell")
+    purged = _snapshot_read(spark, root, part="cells").select("vec_id", "embedding", "cell")
     assert purged.where(F.col("vec_id").isin(list(deleted_ids))).count() == 0
 
     cent = label_centroids(e)
@@ -1872,14 +1869,10 @@ def test_ivf_delete_tombstone_purge_agree(spark):
     got_purged = sorted(map(tuple, _ivf_serve_probe(qs, cent, purged).collect()))
     # the logical view: rebuild the pre-purge members and anti-join the set
     full = e.join(
-        purged.select("vec_id", "cell").unionByName(
-            spark.read.parquet(path + "_applied").select("vec_id", "cell")
-        ),
+        purged.select("vec_id", "cell").unionByName(erased.select("vec_id", "cell")),
         "vec_id",
     ).select("vec_id", "embedding", "cell")
-    logical = full.join(
-        spark.read.parquet(path + "_applied").select("vec_id"), "vec_id", "left_anti"
-    )
+    logical = full.join(erased.select("vec_id"), "vec_id", "left_anti")
     got_logical = sorted(map(tuple, _ivf_serve_probe(qs, cent, logical).collect()))
     assert got_purged == got_logical
     ids_in_answers = {r[0] for r in got_purged} | {r[1] for r in got_purged}
@@ -1951,7 +1944,6 @@ def test_pq_compact_restores_range_layout(spark):
     the code table lands as the 8-file build layout; (c) per-file vec_id
     ranges are DISJOINT (the property the ADC range fetch relies on —
     fragmented appends interleave ranges, compaction separates them)."""
-    import glob
     import os as _os
 
     import pyarrow.parquet as _pq
@@ -1960,9 +1952,11 @@ def test_pq_compact_restores_range_layout(spark):
     from userportrait.registry import OPS
 
     OPS["sink_pq_compact"].fn(spark, SF_DIR).collect()
-    codes_dir = _os.path.join(SCRATCH, "embeddings_pq_incr", "codes")
-    files = sorted(glob.glob(_os.path.join(codes_dir, "part-*.parquet")))
+    root = _os.path.join(SCRATCH, "embeddings_pq_incr")
+    files = _latest_files(root, "codes")
     assert len(files) == 8, files
+    # expiry removed the fragmented pre-compaction code files
+    assert [f for f in _disk_files(root) if "/codes/" in f] == files
 
     ranges = []
     rows = {}
@@ -1979,12 +1973,10 @@ def test_pq_compact_restores_range_layout(spark):
 
     # losslessness vs an independently rebuilt fragmented table
     from userportrait.ops.llm_similarity import _pq_append_parts
+    from userportrait.ops.scans import _snapshot_read
 
     root, cutoff = _pq_append_parts(spark, SF_DIR)
-    base_rows = {
-        r.vec_id: r.code
-        for r in spark.read.parquet(_os.path.join(root, "codes")).collect()
-    }
+    base_rows = {r.vec_id: r.code for r in _snapshot_read(spark, root, part="codes").collect()}
     for vid, code in base_rows.items():
         assert rows[vid] == code, f"compaction changed code for vec_id={vid}"
     # and every post-cutoff vector is present exactly once
@@ -2121,33 +2113,31 @@ def test_scd2_vacuum_retention_contract(spark):
     assert asof_rows(instants[-1]) == pre[instants[-1]]
 
 
-@pytest.mark.slow
 def test_ivf_kmeans_delete_touches_only_erased_cells(spark):
     """The deployment delete's O(touched cells) claim, made physical:
     purging a fixed-size erasure list from the kmeans-quantized index
-    must (1) serve exactly the tombstone view (survivor row-set
-    equality), (2) physically drop every erased id, and (3) leave every
-    cell with no erased member BYTE-IDENTICAL — untouched means unread
-    and unwritten, which is what makes the purge request-sized instead
-    of corpus-sized."""
-    import glob
+    must (1) serve exactly the logical view (survivor row-set equality),
+    (2) physically drop every erased id — the touched cells' old files
+    are gone from disk, (3) carry every cell with no erased member
+    BYTE-IDENTICAL into the new version — untouched means unread and
+    unwritten, which is what makes the purge request-sized instead of
+    corpus-sized — and (4) record exactly the erasure list."""
     import hashlib
-    import os
 
     from userportrait.ops.llm_similarity import (
         _ivf_kmeans_delete,
         _ivf_kmeans_erasure,
         _write_ivf_kmeans_index,
     )
+    from userportrait.ops.scans import _snapshot_read
 
     root = _write_ivf_kmeans_index(spark, SF_DIR)
-    cells_path = os.path.join(root, "cells")
-    back = spark.read.parquet(cells_path)
+    back = _snapshot_read(spark, root, part="cells")
     # The request is an INPUT in deployment (_ivf_kmeans_delete docstring);
     # this test passes an explicit 4-id request so the fixture leaves some
     # cells untouched whatever the trained quantizer does — the default
-    # 8-id fixture list can land one id per cell (it did under the r14
-    # driver-side trainer), which makes assertion (3) vacuous.
+    # 8-id fixture list can land one id per cell, which makes assertion
+    # (3) vacuous.
     erase = {r.vec_id for r in _ivf_kmeans_erasure(back, 4).collect()}
     assert len(erase) == 4
     touched = {
@@ -2156,32 +2146,34 @@ def test_ivf_kmeans_delete_touches_only_erased_cells(spark):
     all_cells = {r.cell for r in back.select("cell").distinct().collect()}
     assert touched and touched < all_cells, (touched, all_cells)
 
-    def dir_hash(cell):
+    def cell_hash(cell):
         h = hashlib.md5()
-        for f in sorted(glob.glob(os.path.join(cells_path, f"cell={cell}", "*.parquet"))):
-            with open(f, "rb") as fh:
-                h.update(fh.read())
+        for f in _latest_files(root, "cells"):
+            if _cell_of(f) == cell:
+                h.update(f.encode())
+                with open(f, "rb") as fh:
+                    h.update(fh.read())
         return h.hexdigest()
 
-    untouched_pre = {c: dir_hash(c) for c in all_cells - touched}
-    # the tombstone VIEW a serving anti-join would answer from
+    untouched_pre = {c: cell_hash(c) for c in all_cells - touched}
+    # the logical view: members minus the erasure list
     view = sorted(
         map(tuple, back.where(~F.col("vec_id").isin(list(erase))).select("vec_id", "cell").collect())
     )
 
     _ivf_kmeans_delete(spark, root, erase_ids=sorted(erase))
 
-    post = spark.read.parquet(cells_path)
-    # (1) purged index == tombstone view, row for row
+    post = _snapshot_read(spark, root, part="cells")
+    # (1) purged index == logical view, row for row
     assert sorted(map(tuple, post.select("vec_id", "cell").collect())) == view
-    # (2) every erased id is physically gone
+    # (2) every erased id is physically gone: only live files on disk
     assert post.where(F.col("vec_id").isin(list(erase))).count() == 0
-    # (3) untouched cells byte-identical
+    assert [f for f in _disk_files(root) if "/cells/" in f] == _latest_files(root, "cells")
+    # (3) untouched cells carried byte-identical, same files
     for c, pre_h in untouched_pre.items():
-        assert dir_hash(c) == pre_h, c
-    # the retired manifest records exactly the erasure list
-    applied = spark.read.parquet(os.path.join(root, "tombstones_applied"))
-    assert {r.vec_id for r in applied.collect()} == erase
+        assert cell_hash(c) == pre_h, c
+    # (4) the erasure record holds exactly the erasure list
+    assert {r.vec_id for r in _snapshot_read(spark, root, part="erased").collect()} == erase
 
 
 @pytest.mark.slow
@@ -2257,11 +2249,8 @@ def test_pq_delete_survivors_bit_identical(spark):
     BIT-identical (vec_id, code, lang) to the pre-delete table minus the
     erasure list, erased ids are physically gone, the range layout the
     ADC fetch pushes down on survives the purge (8 files, disjoint
-    vec_id ranges), and the applied manifest preserves the erased CODES
+    vec_id ranges), and the erasure record preserves the erased CODES
     for the compliance audit trail."""
-    import glob
-    import os
-
     import pyarrow.parquet as pq
 
     from userportrait.ops.llm_similarity import (
@@ -2269,10 +2258,10 @@ def test_pq_delete_survivors_bit_identical(spark):
         _write_pq_meta_index,
         sink_pq_delete,
     )
+    from userportrait.ops.scans import _snapshot_read
 
     root = _write_pq_meta_index(spark, SF_DIR)
-    codes_dir = os.path.join(root, "codes")
-    back = spark.read.parquet(codes_dir)
+    back = _snapshot_read(spark, root, part="codes")
     erase = {r.vec_id for r in _ivf_kmeans_erasure(back).collect()}
     pre = {r.vec_id: (r.code, r.lang) for r in back.collect()}
     assert erase <= set(pre)
@@ -2281,10 +2270,14 @@ def test_pq_delete_survivors_bit_identical(spark):
     # partitioning), then purges — drive it end to end
     sink_pq_delete(spark, SF_DIR)
 
-    post = {r.vec_id: (r.code, r.lang) for r in spark.read.parquet(codes_dir).collect()}
+    post = {
+        r.vec_id: (r.code, r.lang) for r in _snapshot_read(spark, root, part="codes").collect()
+    }
     assert post == {v: c for v, c in pre.items() if v not in erase}
-    files = sorted(glob.glob(os.path.join(codes_dir, "*.parquet")))
+    files = _latest_files(root, "codes")
     assert len(files) == 8
+    # expiry removed the pre-purge code files: no erased row left on disk
+    assert [f for f in _disk_files(root) if "/codes/" in f] == files
     ranges = []
     for f in files:
         t = pq.read_table(f, columns=["vec_id"])
@@ -2294,116 +2287,19 @@ def test_pq_delete_survivors_bit_identical(spark):
     ranges.sort()
     for (l1, h1), (l2, h2) in zip(ranges, ranges[1:]):
         assert h1 < l2, (ranges,)
-    applied = spark.read.parquet(os.path.join(root, "tombstones_applied"))
-    assert {r.vec_id: r.code for r in applied.collect()} == {
+    erased = _snapshot_read(spark, root, part="erased")
+    assert {r.vec_id: r.code for r in erased.collect()} == {
         v: pre[v][0] for v in erase
     }
 
 
-@pytest.mark.slow
-def test_ivf_kmeans_delete_rerun_resumes_manifest(spark):
-    """The crash-recovery contract of the deployment delete: a re-run
-    that finds a COMMITTED un-retired tombstone manifest must resume THAT
-    request — never regenerate the erasure list (rank-based selection
-    over a half-purged index names different ids) and never honor a new
-    input list while one is in flight."""
-    import os
-
-    from userportrait.ops.llm_similarity import (
-        _ivf_kmeans_delete,
-        _ivf_kmeans_erasure,
-        _write_ivf_kmeans_index,
-    )
-
-    root = _write_ivf_kmeans_index(spark, SF_DIR)
-    cells_path = os.path.join(root, "cells")
-    back = spark.read.parquet(cells_path)
-    ranked = [r.vec_id for r in _ivf_kmeans_erasure(back, 16).collect()]
-    in_flight, competing = set(ranked[:8]), ranked[8:16]
-
-    # simulate the crash window: phase 1 committed (manifest on disk with
-    # _SUCCESS), purge never ran
-    ts_path = os.path.join(root, "tombstones")
-    back.where(F.col("vec_id").isin(list(in_flight))).select("vec_id", "cell").write.mode(
-        "overwrite"
-    ).parquet(ts_path)
-    assert os.path.exists(os.path.join(ts_path, "_SUCCESS"))
-
-    # the re-run passes a DIFFERENT list — it must be ignored in favor of
-    # the in-flight manifest
-    _ivf_kmeans_delete(spark, root, erase_ids=competing)
-
-    post = spark.read.parquet(cells_path)
-    assert post.where(F.col("vec_id").isin(list(in_flight))).count() == 0
-    assert post.where(F.col("vec_id").isin(competing)).count() == len(competing)
-    applied = spark.read.parquet(os.path.join(root, "tombstones_applied"))
-    assert {r.vec_id for r in applied.collect()} == in_flight
-    assert not os.path.exists(ts_path)
-
-
-def test_pq_swap_recover_rolls_forward_and_back(spark):
-    """The staging + rename-swap crash window: with the serving path
-    empty, recovery must prefer the COMPLETED staged rewrite (_next with
-    _SUCCESS → roll forward) and otherwise restore the pre-swap table
-    (_prev → roll back), bit-identically in both directions."""
-    import glob
-    import hashlib
-    import os
-    import shutil
-
-    from userportrait.ops.llm_similarity import _pq_swap_recover, _write_pq_meta_index
-
-    root = _write_pq_meta_index(spark, SF_DIR)
-    codes_dir = os.path.join(root, "codes")
-
-    def dir_hash():
-        h = hashlib.md5()
-        for f in sorted(glob.glob(os.path.join(codes_dir, "*.parquet"))):
-            with open(f, "rb") as fh:
-                h.update(fh.read())
-        return h.hexdigest()
-
-    pre = dir_hash()
-    # no-op when the serving path is present
-    _pq_swap_recover(codes_dir)
-    assert dir_hash() == pre
-
-    # roll back: crash after rename(codes -> prev), rewrite incomplete
-    os.rename(codes_dir, codes_dir + "_prev")
-    _pq_swap_recover(codes_dir)
-    assert dir_hash() == pre
-
-    # roll forward: crash after rename(codes -> prev) with a COMPLETE _next.
-    # The stale _prev (pre-purge, still holding erased rows) must be GONE
-    # after the roll-forward (ADVICE r13 #2): were it left recoverable, a
-    # later loss of the serving dir would silently roll BACK to pre-purge
-    # data — resurrecting erased rows after the manifest retired.
-    shutil.copytree(codes_dir, codes_dir + "_next")
-    os.rename(codes_dir, codes_dir + "_prev")
-    _pq_swap_recover(codes_dir)
-    assert dir_hash() == pre
-    assert not os.path.exists(codes_dir + "_prev")
-
-    # neither state: loud failure, not silent re-creation
-    os.rename(codes_dir, codes_dir + "_gone")
-    try:
-        _pq_swap_recover(codes_dir)
-        raise AssertionError("expected FileNotFoundError")
-    except FileNotFoundError:
-        pass
-    finally:
-        os.rename(codes_dir + "_gone", codes_dir)
-
-
-@pytest.mark.slow
 def test_ivf_kmeans_append_frozen_quantizer(spark):
     """The kmeans append's contract: base files are never rewritten
-    (byte-identical), every appended vector is reachable in the merged
-    index, and its cell equals the nearest-centroid assignment under the
-    SHIPPED (frozen) quantizer — never a retrained one."""
-    import glob
+    (carried byte-identical into the new version), every appended vector
+    is reachable in the merged index, and its cell equals the
+    nearest-centroid assignment under the SHIPPED (frozen) quantizer —
+    never a retrained one."""
     import hashlib
-    import os
 
     from userportrait.ops.llm_similarity import (
         _ivf_kmeans_append,
@@ -2411,23 +2307,23 @@ def test_ivf_kmeans_append_frozen_quantizer(spark):
         _unit_embeddings,
         _write_ivf_kmeans_index,
     )
+    from userportrait.ops.scans import _snapshot_read
 
     e = load(spark, SF_DIR).embeddings
     cutoff = int(e.agg(F.floor(F.lit(0.8) * F.max("vec_id"))).first()[0])
     root = _write_ivf_kmeans_index(
         spark, SF_DIR, max_vec_id=cutoff, root_name="embeddings_ivf_kmeans_incr"
     )
-    cells_path = os.path.join(root, "cells")
 
     def file_hashes():
         out = {}
-        for f in glob.glob(os.path.join(cells_path, "cell=*", "*.parquet")):
+        for f in _latest_files(root, "cells"):
             with open(f, "rb") as fh:
                 out[f] = hashlib.md5(fh.read()).hexdigest()
         return out
 
     base_files = file_hashes()
-    cent = spark.read.parquet(os.path.join(root, "centroids"))
+    cent = _snapshot_read(spark, root, part="centroids")
     new = e.where(F.col("vec_id") > cutoff)
     expected = {
         r.vec_id: r.cell for r in _kmeans_assign(_unit_embeddings(new), cent).collect()
@@ -2441,111 +2337,47 @@ def test_ivf_kmeans_append_frozen_quantizer(spark):
     for f, h in base_files.items():
         assert post.get(f) == h, f
     # every appended vector reachable, in its frozen-quantizer cell
-    back = spark.read.parquet(cells_path).where(F.col("vec_id") > cutoff)
+    back = _snapshot_read(spark, root, part="cells").where(F.col("vec_id") > cutoff)
     got = {r.vec_id: r.cell for r in back.select("vec_id", "cell").collect()}
     assert got == expected
 
 
-@pytest.mark.slow
 def test_stream_ivf_kmeans_fold_lossless(spark):
     """The kmeans compact's claims, physically: after the streaming
-    ingest (per-batch overwrite dirs), the fold must preserve EVERY
-    member row bit-for-bit (vec_id, u, lang, cell) while collapsing the
-    serving view to a single layout and retiring the batch dirs."""
-    import os
+    ingest (one committed version per micro-batch), the fold must
+    preserve EVERY member row bit-for-bit (vec_id, u, lang, cell) while
+    collapsing each cell to one file."""
+    from collections import Counter
 
-    from userportrait.ops.streaming import _run_stream_ivf_kmeans_ingest, ivf_fold_batches
+    from userportrait.ops.scans import _snapshot_latest, _snapshot_read
+    from userportrait.ops.streaming import _run_stream_ivf_kmeans_ingest, ivf_fold_fragmented_cells
 
-    root, cutoff, batches_root = _run_stream_ivf_kmeans_ingest(spark, SF_DIR)
-    cells_path = os.path.join(root, "cells")
-    cols = ["vec_id", "u", "lang", "cell"]
-    base = spark.read.parquet(cells_path).select(*cols)
-    batches = spark.read.parquet(batches_root).select(*cols)
-    pre = sorted(
-        (r["vec_id"], tuple(r["u"]), r["lang"], r["cell"])
-        for r in base.unionByName(batches).collect()
-    )
-    n_batches = len([d for d in os.listdir(batches_root) if d.startswith("batch_id=")])
-    assert n_batches >= 2, "staging must replay multiple micro-batches"
+    root, cutoff = _run_stream_ivf_kmeans_ingest(spark, SF_DIR)
+    assert _snapshot_latest(root) >= 3, "staging must replay multiple micro-batches"
+
+    def members():
+        return sorted(
+            (r["vec_id"], tuple(r["u"]), r["lang"], r["cell"])
+            for r in _snapshot_read(spark, root, part="cells").select("vec_id", "u", "lang", "cell").collect()
+        )
+
+    pre = members()
     # the stream delivered real appended vectors
-    assert batches.count() > 0
+    assert any(m[0] > cutoff for m in pre)
 
-    ivf_fold_batches(spark, cells_path, batches_root, member_cols=("vec_id", "u", "lang"))
+    assert ivf_fold_fragmented_cells(spark, root) > 0
 
-    post = sorted(
-        (r["vec_id"], tuple(r["u"]), r["lang"], r["cell"])
-        for r in spark.read.parquet(cells_path).select(*cols).collect()
-    )
-    assert post == pre
-    assert not os.path.exists(batches_root)
-
-
-@pytest.mark.slow
-def test_serving_masks_live_tombstones(spark):
-    """The serving half of the delete family's tombstone contract
-    (ADVICE r13 #1): while an un-retired erasure manifest sits next to an
-    index, BOTH serve paths (kmeans member scan, PQ code scan) must
-    anti-join it — erased vectors stop appearing as neighbors the moment
-    phase 1 commits, before any purge rewrites a byte. Retiring the
-    manifest (the purge's commit point) lifts the mask."""
-    import os
-    import shutil
-
-    from userportrait.ops.llm_similarity import (
-        _kmeans_serve,
-        _pq_probe_from_root,
-        _write_ivf_kmeans_index,
-        _write_pq_meta_index,
-    )
-
-    # --- kmeans index ---
-    root = _write_ivf_kmeans_index(spark, SF_DIR)
-    served = _kmeans_serve(spark, SF_DIR, None, root=root).collect()
-    erase = sorted({r.neighbor_id for r in served})[:4]
-    assert erase, "unmasked serve returned no neighbors"
-    ts_path = os.path.join(root, "tombstones")
-    (
-        spark.read.parquet(os.path.join(root, "cells"))
-        .where(F.col("vec_id").isin(erase))
-        .select("vec_id", "cell")
-        .write.mode("overwrite")
-        .parquet(ts_path)
-    )
-    masked = _kmeans_serve(spark, SF_DIR, None, root=root).collect()
-    assert not ({r.neighbor_id for r in masked} & set(erase))
-    # every query still gets k answers: the mask shrinks the candidate
-    # pool, it must not starve the top-k
-    assert {r.vec_id for r in masked} == {r.vec_id for r in served}
-    # retire the manifest (purge committed) -> mask lifts
-    applied = os.path.join(root, "tombstones_applied")
-    shutil.rmtree(applied, ignore_errors=True)
-    os.rename(ts_path, applied)
-    unmasked = _kmeans_serve(spark, SF_DIR, None, root=root).collect()
-    assert {r.neighbor_id for r in unmasked} & set(erase)
-
-    # --- PQ index ---
-    proot = _write_pq_meta_index(spark, SF_DIR)
-    pserved = _pq_probe_from_root(spark, SF_DIR, proot).collect()
-    perase = sorted({r.neighbor_id for r in pserved})[:4]
-    (
-        spark.read.parquet(os.path.join(proot, "codes"))
-        .where(F.col("vec_id").isin(perase))
-        .select("vec_id", "code")
-        .write.mode("overwrite")
-        .parquet(os.path.join(proot, "tombstones"))
-    )
-    pmasked = _pq_probe_from_root(spark, SF_DIR, proot).collect()
-    assert not ({r.neighbor_id for r in pmasked} & set(perase))
-    assert {r.vec_id for r in pmasked} == {r.vec_id for r in pserved}
+    assert members() == pre
+    assert set(Counter(_cell_of(f) for f in _latest_files(root, "cells")).values()) == {1}
 
 
 def _kmeans_index_fit(spark, root):
     """Mean member→assigned-centroid cosine over the whole index — the
     dq_ann_index_health quantizer-fit metric, computed on a persisted root."""
-    import os
+    from userportrait.ops.scans import _snapshot_read
 
-    cent = spark.read.parquet(os.path.join(root, "centroids"))
-    members = spark.read.parquet(os.path.join(root, "cells"))
+    cent = _snapshot_read(spark, root, part="centroids")
+    members = _snapshot_read(spark, root, part="cells")
     agg_sum = lambda arr: F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
     return (
         members.join(F.broadcast(cent), "cell")
@@ -2560,7 +2392,6 @@ def _kmeans_index_fit(spark, root):
     )
 
 
-@pytest.mark.slow
 def test_ivf_kmeans_retrain_improves_fit_and_preserves_members(spark):
     """The retrain contract on a DRIFTED fixture: appends whose
     distribution the frozen base-trained quantizer fits poorly (negated
@@ -2568,27 +2399,28 @@ def test_ivf_kmeans_retrain_improves_fit_and_preserves_members(spark):
     the dq_ann_index_health fit metric once retrained, (b) preserve the
     member multiset exactly (a retrain reassigns, never adds or drops),
     (c) leave every member's cell equal to its nearest-centroid assignment
-    under the NEW shipped quantizer, and (d) retire the old quantizer to
-    the audit dir."""
+    under the NEW shipped quantizer, and (d) leave only the new
+    generation's files on disk."""
     import os
 
     from userportrait.catalog import load
     from userportrait.ops.llm_similarity import (
+        _by_cell,
+        _index_commit,
         _ivf_kmeans_retrain,
         _kmeans_assign,
         _unit_embeddings,
         _write_ivf_kmeans_index,
     )
+    from userportrait.ops.scans import _snapshot_manifest, _snapshot_read
 
     e = load(spark, SF_DIR).embeddings
     cutoff = e.agg(F.floor(F.lit(0.8) * F.max("vec_id")).cast("bigint")).collect()[0][0]
     root = _write_ivf_kmeans_index(
         spark, SF_DIR, max_vec_id=cutoff, root_name="embeddings_ivf_kmeans_retrain_fixture"
     )
-    cent_frozen = spark.read.parquet(os.path.join(root, "centroids"))
-    old_cent = sorted(
-        (r.cell, tuple(r.c)) for r in cent_frozen.collect()
-    )
+    cent_frozen = _snapshot_read(spark, root, part="centroids")
+    old_cent = sorted((r.cell, tuple(r.c)) for r in cent_frozen.collect())
 
     # drifted appends: post-cutoff vectors NEGATED (unit sphere's far side)
     # — the frozen quantizer trained on the base fits them badly
@@ -2596,19 +2428,14 @@ def test_ivf_kmeans_retrain_improves_fit_and_preserves_members(spark):
         "vec_id", F.transform("u", lambda x: -x).alias("u")
     )
     assigned = _kmeans_assign(drifted, cent_frozen)
-    (
-        assigned.select("vec_id", "u", F.lit("xx").alias("lang"), "cell")
-        .repartition("cell")
-        .sortWithinPartitions("vec_id")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(os.path.join(root, "cells"))
+    _index_commit(
+        spark, root, "append", {"cells": _by_cell(assigned.select("vec_id", "u", F.lit("xx").alias("lang"), "cell"))}
     )
 
     fit_before = _kmeans_index_fit(spark, root)
     pre_members = sorted(
         (r.vec_id, tuple(round(x, 9) for x in r.u), r.lang)
-        for r in spark.read.parquet(os.path.join(root, "cells")).collect()
+        for r in _snapshot_read(spark, root, part="cells").collect()
     )
 
     _ivf_kmeans_retrain(spark, root)
@@ -2616,14 +2443,15 @@ def test_ivf_kmeans_retrain_improves_fit_and_preserves_members(spark):
     fit_after = _kmeans_index_fit(spark, root)
     assert fit_after > fit_before, (fit_before, fit_after)
 
-    post = spark.read.parquet(os.path.join(root, "cells"))
+    post = _snapshot_read(spark, root, part="cells")
     post_members = sorted(
         (r.vec_id, tuple(round(x, 9) for x in r.u), r.lang) for r in post.collect()
     )
     assert post_members == pre_members
 
     # consistency: every member sits in its nearest-NEW-centroid cell
-    cent_new = spark.read.parquet(os.path.join(root, "centroids"))
+    cent_new = _snapshot_read(spark, root, part="centroids")
+    assert sorted((r.cell, tuple(r.c)) for r in cent_new.collect()) != old_cent
     expect = {
         r.vec_id: r.cell
         for r in _kmeans_assign(post.select("vec_id", "u"), cent_new).collect()
@@ -2631,104 +2459,21 @@ def test_ivf_kmeans_retrain_improves_fit_and_preserves_members(spark):
     actual = {r.vec_id: r.cell for r in post.select("vec_id", "cell").collect()}
     assert actual == expect
 
-    # the old quantizer is retired for audit, bit-equal to the pre-retrain one
-    retired = spark.read.parquet(os.path.join(root, "quantizer_retired"))
-    assert sorted((r.cell, tuple(r.c)) for r in retired.collect()) == old_cent
-    assert not os.path.exists(os.path.join(root, "retrain_next"))
-    assert not os.path.exists(os.path.join(root, "cells_old"))
-
-
-@pytest.mark.slow
-def test_ivf_kmeans_retrain_crash_windows(spark):
-    """Every crash window of the retrain cutover rolls FORWARD to the same
-    committed generation (staging completion is the commit point), an
-    INCOMPLETE staging is discarded with the old generation intact, and a
-    serve call from any window answers — the probe-continuity claim."""
-    import glob
-    import hashlib
-    import os
-    import shutil
-
-    from userportrait.ops.llm_similarity import (
-        _kmeans_serve,
-        _retrain_recover,
-        _retrain_stage,
-        _write_ivf_kmeans_index,
-    )
-
-    root = _write_ivf_kmeans_index(
-        spark, SF_DIR, root_name="embeddings_ivf_kmeans_crash_fixture"
-    )
-    _retrain_stage(spark, root)
-
-    def tree_hash(d):
-        h = hashlib.md5()
-        for f in sorted(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)):
-            h.update(os.path.relpath(f, d).encode())
-            with open(f, "rb") as fh:
-                h.update(fh.read())
-        return h.hexdigest()
-
-    backup = root + "_backup"
-    shutil.rmtree(backup, ignore_errors=True)
-    shutil.copytree(root, backup)
-    staged_cells_hash = tree_hash(os.path.join(backup, "retrain_next", "cells"))
-    staged_cent_hash = tree_hash(os.path.join(backup, "retrain_next", "centroids"))
-    old_cent_hash = tree_hash(os.path.join(backup, "centroids"))
-
-    def restore():
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.copytree(backup, root)
-
-    def crash_prefix(n):
-        # the cutover's rename sequence, stopped after n steps
-        steps = [
-            lambda: os.rename(os.path.join(root, "cells"), os.path.join(root, "cells_old")),
-            lambda: os.rename(os.path.join(root, "centroids"), os.path.join(root, "centroids_old")),
-            lambda: os.rename(os.path.join(root, "retrain_next", "centroids"), os.path.join(root, "centroids")),
-            lambda: os.rename(os.path.join(root, "retrain_next", "cells"), os.path.join(root, "cells")),
-        ]
-        for s in steps[:n]:
-            s()
-
-    for n in range(5):
-        restore()
-        crash_prefix(n)
-        _retrain_recover(root)
-        assert tree_hash(os.path.join(root, "cells")) == staged_cells_hash, n
-        assert tree_hash(os.path.join(root, "centroids")) == staged_cent_hash, n
-        assert tree_hash(os.path.join(root, "quantizer_retired")) == old_cent_hash, n
-        assert not os.path.exists(os.path.join(root, "retrain_next")), n
-        assert not os.path.exists(os.path.join(root, "cells_old")), n
-        assert not os.path.exists(os.path.join(root, "centroids_old")), n
-
-    # serve mid-window: the serve preamble itself must roll forward and answer
-    restore()
-    crash_prefix(2)
-    served = _kmeans_serve(spark, SF_DIR, None, root=root).collect()
-    assert served and all(len([x for x in served if x.vec_id == q]) == 5 for q in {r.vec_id for r in served})
-
-    # incomplete staging: discarded, old generation intact
-    restore()
-    os.remove(os.path.join(root, "retrain_next", "cells", "_SUCCESS"))
-    _retrain_recover(root)
-    assert not os.path.exists(os.path.join(root, "retrain_next"))
-    assert tree_hash(os.path.join(root, "centroids")) == old_cent_hash
-    shutil.rmtree(backup)
+    # the retrain is one version; expiry removed the old generation's files
+    m = _snapshot_manifest(root)
+    assert m["op"] == "retrain"
+    assert _disk_files(root) == sorted(os.path.join(root, f) for f in m["files"])
 
 
 def test_stream_pq_append_frozen_books_and_adc_reachability(spark):
     """stream_pq_append's model-side claims, which the EXACT rollup cannot
-    see: (a) the ingest fans out into one overwrite dir per micro-batch
-    (>= 2 — the exactly-once replay unit); (b) streamed codes are
-    BIT-identical to encoding the new vectors directly with the frozen
-    persisted codebooks (the batch append's determinism claim, carried to
-    the stream); (c) base codes and codebooks are untouched; (d) streamed
-    vectors are REACHABLE — the ADC search over the base ∪ batches serving
-    view surfaces post-cutoff neighbors."""
-    import glob
-    import os
-
+    see: (a) the ingest commits one index version per micro-batch (>= 2 —
+    the exactly-once replay unit); (b) streamed codes are BIT-identical to
+    encoding the new vectors directly with the frozen persisted codebooks
+    (the batch append's determinism claim, carried to the stream); (c)
+    base codes and codebooks are untouched; (d) streamed vectors are
+    REACHABLE — the ADC search over the latest version surfaces
+    post-cutoff neighbors."""
     from userportrait.catalog import load
     from userportrait.ops.llm_similarity import (
         _pq_adc_search,
@@ -2736,12 +2481,15 @@ def test_stream_pq_append_frozen_books_and_adc_reachability(spark):
         _read_codebooks,
         _unit_embeddings,
     )
+    from userportrait.ops.scans import _snapshot_read
     from userportrait.ops.streaming import _run_stream_pq_ingest
 
-    root, cutoff, batches_root = _run_stream_pq_ingest(spark, SF_DIR)
+    root, cutoff = _run_stream_pq_ingest(spark, SF_DIR)
 
-    batch_dirs = sorted(glob.glob(os.path.join(batches_root, "batch_id=*")))
-    assert len(batch_dirs) >= 2, batch_dirs
+    files = _latest_files(root, "codes")
+    streamed_files = [f for f in files if "/v=1/" not in f]
+    versions = {f.split("/v=", 1)[1].split("/", 1)[0] for f in streamed_files}
+    assert len(versions) >= 2, files
 
     books = _read_codebooks(spark, root)
     e = load(spark, SF_DIR).embeddings
@@ -2751,32 +2499,24 @@ def test_stream_pq_append_frozen_books_and_adc_reachability(spark):
         .mapInPandas(_pq_encode(books), "vec_id long, code long")
         .collect()
     }
-    streamed = {
-        r.vec_id: r.code for r in spark.read.parquet(batches_root).collect()
-    }
+    streamed = {r.vec_id: r.code for r in spark.read.parquet(*streamed_files).collect()}
     assert streamed == direct
 
     base = {
         r.vec_id: r.code
-        for r in spark.read.parquet(os.path.join(root, "codes")).collect()
+        for r in spark.read.parquet(*[f for f in files if "/v=1/" in f]).collect()
     }
     assert all(v <= cutoff for v in base), "base gained post-cutoff rows"
     assert not (set(base) & set(streamed))
 
-    # ADC reachability over the serving view (base ∪ batch dirs)
+    # ADC reachability over the serving view (the latest version)
     from userportrait.ops.curation import HEX
 
-    union_codes = (
-        spark.read.parquet(os.path.join(root, "codes"))
-        .select("vec_id", "code")
-        .unionByName(spark.read.parquet(batches_root).select("vec_id", "code"))
-    )
+    codes = _snapshot_read(spark, root, part="codes").select("vec_id", "code")
     sample = (
         F.instr(F.lit(HEX), F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)) - 1 == 0
     )
-    res = _pq_adc_search(
-        spark, e, _unit_embeddings(e.where(sample)), union_codes, books
-    ).collect()
+    res = _pq_adc_search(spark, e, _unit_embeddings(e.where(sample)), codes, books).collect()
     assert any(r.neighbor_id > cutoff for r in res), "streamed vectors unreachable"
 
 
@@ -2904,22 +2644,19 @@ spark.stop()
     shutil.rmtree(base)
 
 
-@pytest.mark.slow
 def test_ivf_kmeans_batch_append_fold(spark):
-    """ivf_fold_fragmented_cells' contract on the fragmentation source the
-    batch-dir fold cannot see: a mode('append') batch append leaves >1
-    file in every touched cell directory; the fold must collapse exactly
-    the fragmented cells to one file each, preserve the member multiset
-    bit-level, and leave single-file cells' bytes untouched."""
-    import glob
+    """ivf_fold_fragmented_cells' contract on a batch append: the append
+    commits one more file in every touched cell; the fold must collapse
+    exactly the fragmented cells to one file each, preserve the member
+    multiset bit-level, and carry single-file cells' files untouched."""
     import hashlib
-    import os
 
     from userportrait.catalog import load
     from userportrait.ops.llm_similarity import (
         _ivf_kmeans_append,
         _write_ivf_kmeans_index,
     )
+    from userportrait.ops.scans import _snapshot_read
     from userportrait.ops.streaming import ivf_fold_fragmented_cells
 
     e = load(spark, SF_DIR).embeddings
@@ -2927,45 +2664,43 @@ def test_ivf_kmeans_batch_append_fold(spark):
     root = _write_ivf_kmeans_index(
         spark, SF_DIR, max_vec_id=cutoff, root_name="embeddings_ivf_kmeans_fold_fixture"
     )
-    cells_path = os.path.join(root, "cells")
     _ivf_kmeans_append(spark, SF_DIR, root, cutoff)
 
     def cell_files():
-        return {
-            d: sorted(glob.glob(os.path.join(d, "*.parquet")))
-            for d in glob.glob(os.path.join(cells_path, "cell=*"))
-        }
+        out = {}
+        for f in _latest_files(root, "cells"):
+            out.setdefault(_cell_of(f), []).append(f)
+        return out
 
     def fhash(f):
         with open(f, "rb") as fh:
             return hashlib.md5(fh.read()).hexdigest()
 
-    pre = cell_files()
-    fragmented = {d for d, fs in pre.items() if len(fs) > 1}
-    singles = {d: [fhash(f) for f in fs] for d, fs in pre.items() if len(fs) == 1}
-    assert fragmented, "batch append produced no fragmented cells"
-    pre_members = sorted(
-        (r.vec_id, tuple(round(x, 9) for x in r.u), r.lang, r.cell)
-        for r in spark.read.parquet(cells_path).collect()
-    )
+    def members():
+        return sorted(
+            (r.vec_id, tuple(round(x, 9) for x in r.u), r.lang, r.cell)
+            for r in _snapshot_read(spark, root, part="cells").collect()
+        )
 
-    folded = ivf_fold_fragmented_cells(spark, cells_path)
+    pre = cell_files()
+    fragmented = {c for c, fs in pre.items() if len(fs) > 1}
+    singles = {c: [(f, fhash(f)) for f in fs] for c, fs in pre.items() if len(fs) == 1}
+    assert fragmented, "batch append produced no fragmented cells"
+    pre_members = members()
+
+    folded = ivf_fold_fragmented_cells(spark, root)
     assert folded == len(fragmented)
 
     post = cell_files()
     assert set(post) == set(pre), "fold must not add or drop cells"
     assert all(len(fs) == 1 for fs in post.values()), {
-        d: len(fs) for d, fs in post.items() if len(fs) != 1
+        c: len(fs) for c, fs in post.items() if len(fs) != 1
     }
-    for d, hashes in singles.items():
-        assert [fhash(f) for f in post[d]] == hashes, f"untouched cell rewritten: {d}"
-    post_members = sorted(
-        (r.vec_id, tuple(round(x, 9) for x in r.u), r.lang, r.cell)
-        for r in spark.read.parquet(cells_path).collect()
-    )
-    assert post_members == pre_members
+    for c, files in singles.items():
+        assert [(f, fhash(f)) for f in post[c]] == files, f"untouched cell rewritten: {c}"
+    assert members() == pre_members
     # idempotent: a second pass finds nothing to fold
-    assert ivf_fold_fragmented_cells(spark, cells_path) == 0
+    assert ivf_fold_fragmented_cells(spark, root) == 0
 
 
 def test_pq_retrain_improves_reconstruction_and_preserves_ids(spark):
@@ -2973,7 +2708,8 @@ def test_pq_retrain_improves_reconstruction_and_preserves_ids(spark):
     unit vectors appended with the frozen base-trained books): retraining
     must (a) strictly improve the mean cosine between each held vector and
     its dequantized reconstruction, (b) preserve the held-id set exactly,
-    and (c) retire the old codebooks bit-equal to the audit dir."""
+    and (c) replace the codebooks in one version, leaving only the new
+    generation's files on disk."""
     import os
 
     import numpy as np
@@ -2982,12 +2718,14 @@ def test_pq_retrain_improves_reconstruction_and_preserves_ids(spark):
     from userportrait.ops.llm_similarity import (
         PQ_M,
         PQ_SUBDIM,
+        _index_commit,
         _pq_append_parts,
         _pq_encode,
         _pq_retrain,
         _read_codebooks,
         _unit_embeddings,
     )
+    from userportrait.ops.scans import _snapshot_manifest, _snapshot_read
 
     root, cutoff = _pq_append_parts(spark, SF_DIR)
     e = load(spark, SF_DIR).embeddings
@@ -2998,23 +2736,19 @@ def test_pq_retrain_improves_reconstruction_and_preserves_ids(spark):
     vectors = base_u.unionByName(drifted)
 
     books_frozen = _read_codebooks(spark, root)
-    old_book_rows = sorted(
-        map(tuple, spark.read.parquet(os.path.join(root, "codebooks")).collect())
-    )
+    old_book_rows = sorted(map(tuple, _snapshot_read(spark, root, part="codebooks").collect()))
     # frozen-book append of the drifted vectors — the drift source
-    (
-        drifted.mapInPandas(_pq_encode(books_frozen), "vec_id long, code long")
-        .write.mode("append")
-        .parquet(os.path.join(root, "codes"))
+    _index_commit(
+        spark,
+        root,
+        "append",
+        {"codes": drifted.mapInPandas(_pq_encode(books_frozen), "vec_id long, code long")},
     )
 
     unit_map = {r.vec_id: np.array(r.u) for r in vectors.collect()}
 
     def mean_recon_cos(books):
-        codes = {
-            r.vec_id: r.code
-            for r in spark.read.parquet(os.path.join(root, "codes")).collect()
-        }
+        codes = {r.vec_id: r.code for r in _snapshot_read(spark, root, part="codes").collect()}
         sims = []
         for vid, code in codes.items():
             rec = np.concatenate(
@@ -3032,78 +2766,12 @@ def test_pq_retrain_improves_reconstruction_and_preserves_ids(spark):
     assert fit_after > fit_before, (fit_before, fit_after)
     assert held_after == held_before
 
-    retired = sorted(
-        map(tuple, spark.read.parquet(os.path.join(root, "codebooks_retired")).collect())
-    )
-    assert retired == old_book_rows
-    assert not os.path.exists(os.path.join(root, "retrain_next"))
+    new_book_rows = sorted(map(tuple, _snapshot_read(spark, root, part="codebooks").collect()))
+    assert new_book_rows != old_book_rows
+    m = _snapshot_manifest(root)
+    assert m["op"] == "retrain"
+    assert _disk_files(root) == sorted(os.path.join(root, f) for f in m["files"])
     assert PQ_SUBDIM * PQ_M == len(next(iter(unit_map.values())))
-
-
-def test_pq_retrain_crash_windows_and_serve(spark):
-    """The PQ retrain cutover recovers forward from every crash window
-    through the SAME parameterized _retrain_recover body as the kmeans
-    retrain, and the serve path's preamble makes an ADC probe from inside
-    a window answer from the committed generation."""
-    import glob
-    import hashlib
-    import os
-    import shutil
-
-    from userportrait.ops.llm_similarity import (
-        _pq_append_parts,
-        _pq_probe_from_root,
-        _pq_retrain_stage,
-        _retrain_recover,
-    )
-
-    root, _cutoff = _pq_append_parts(spark, SF_DIR)
-    _pq_retrain_stage(spark, SF_DIR, root)
-
-    def tree_hash(d):
-        h = hashlib.md5()
-        for f in sorted(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)):
-            h.update(os.path.relpath(f, d).encode())
-            with open(f, "rb") as fh:
-                h.update(fh.read())
-        return h.hexdigest()
-
-    backup = root + "_backup"
-    shutil.rmtree(backup, ignore_errors=True)
-    shutil.copytree(root, backup)
-    staged_codes = tree_hash(os.path.join(backup, "retrain_next", "codes"))
-    staged_books = tree_hash(os.path.join(backup, "retrain_next", "codebooks"))
-    old_books = tree_hash(os.path.join(backup, "codebooks"))
-
-    def restore():
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.copytree(backup, root)
-
-    steps = [
-        lambda: os.rename(os.path.join(root, "codes"), os.path.join(root, "codes_old")),
-        lambda: os.rename(os.path.join(root, "codebooks"), os.path.join(root, "codebooks_old")),
-        lambda: os.rename(os.path.join(root, "retrain_next", "codebooks"), os.path.join(root, "codebooks")),
-        lambda: os.rename(os.path.join(root, "retrain_next", "codes"), os.path.join(root, "codes")),
-    ]
-    for n in range(5):
-        restore()
-        for s in steps[:n]:
-            s()
-        _retrain_recover(root, "codebooks", "codes", "codebooks_retired")
-        assert tree_hash(os.path.join(root, "codes")) == staged_codes, n
-        assert tree_hash(os.path.join(root, "codebooks")) == staged_books, n
-        assert tree_hash(os.path.join(root, "codebooks_retired")) == old_books, n
-        assert not os.path.exists(os.path.join(root, "retrain_next")), n
-
-    # a probe from inside a crash window recovers and answers
-    restore()
-    steps[0]()
-    steps[1]()
-    res = _pq_probe_from_root(spark, SF_DIR, root).collect()
-    assert res and all(
-        len([x for x in res if x.vec_id == q]) == 5 for q in {r.vec_id for r in res}
-    )
-    shutil.rmtree(backup)
 
 
 @pytest.mark.slow
@@ -3120,13 +2788,9 @@ def test_ivfpq_probe_matches_in_memory_sibling(spark):
     stream_topic_router discipline)."""
     import hashlib
 
-    import numpy as np
-
     from userportrait.ops.llm_similarity import (
-        PQ_K,
-        PQ_M,
-        PQ_SUBDIM,
         _pq_codebooks,
+        _read_codebooks,
         _unit_embeddings,
         _write_ivfpq_index,
     )
@@ -3141,10 +2805,7 @@ def test_ivfpq_probe_matches_in_memory_sibling(spark):
     assert all(-1.0001 <= r[2] <= 1.0001 for r in a)
 
     root = _write_ivfpq_index(spark, SF_DIR)
-    bk = spark.read.parquet(root + "/codebooks").collect()
-    stored = np.zeros((PQ_M, PQ_K, PQ_SUBDIM))
-    for r in bk:
-        stored[r.sub, r.cent, r.dim] = r.w
+    stored = _read_codebooks(spark, root)
     trained = _pq_codebooks(_unit_embeddings(load(spark, SF_DIR).embeddings))
     assert (stored == trained).all(), "codebook roundtrip must be bit-exact"
 
@@ -3169,16 +2830,18 @@ def test_snapshot_commit_protocol(spark):
     (a) metadata-only rollback — commit 4 writes ZERO data files (its
     manifest is a subset of v3's and no data/v4 dir exists); (b) orphan
     invisibility — data files written without a published manifest change
-    no reader's view and don't advance _latest (the crash-window story:
-    the rename IS the commit); (c) historical immutability — after all
-    later commits, v1 still reads back exactly the source customer table;
-    (d) no tmp artifacts survive a commit."""
+    no reader's view and don't advance the latest version (the crash-window
+    story: the rename IS the commit, and there is no second pointer);
+    (c) historical immutability — after all later commits, v1 still reads
+    back exactly the source customer table; (d) no tmp artifacts survive
+    a commit."""
     import glob
     import os
 
     from userportrait.ops.scans import (
         _SNAPSHOT_COLS,
         _build_snapshot_table,
+        _snapshot_latest,
         _snapshot_manifest,
         _snapshot_read,
     )
@@ -3192,17 +2855,146 @@ def test_snapshot_commit_protocol(spark):
 
     before = sorted(map(tuple, _snapshot_read(spark, root, 2).collect()))
     # orphan: a data dir with no manifest — a crash between file write and
-    # manifest publish. Latest pointer and every version's view unchanged.
+    # manifest publish. Latest version and every version's view unchanged.
     spark.range(3).selectExpr(
         "id AS c_custkey", "'x' AS c_name", "0.0 AS c_acctbal", "'ORPHAN' AS c_mktsegment"
     ).write.parquet(os.path.join(root, "data", "v5"))
-    with open(os.path.join(root, "_latest")) as f:
-        assert f.read() == "4"
+    assert _snapshot_latest(root) == 4
+    assert not os.path.exists(os.path.join(root, "_latest"))
     assert sorted(map(tuple, _snapshot_read(spark, root, 2).collect())) == before
 
     v1 = sorted(map(tuple, _snapshot_read(spark, root, 1).collect()))
     src = sorted(map(tuple, load(spark, SF_DIR).customer.select(*_SNAPSHOT_COLS).collect()))
     assert v1 == src, "v1 must stay bit-faithful after later commits"
+
+
+def test_snapshot_latest_is_the_highest_manifest(spark):
+    """The manifest rename is the only commit point: the latest version is
+    the highest published manifest, never a separate pointer. A commit
+    whose old-style ``_latest`` pointer never advanced (a crash between
+    the two renames of the former protocol) is still read as latest,
+    both by _snapshot_read and by the streaming reader."""
+    import os
+
+    from userportrait.ops.scans import (
+        _build_snapshot_table,
+        _snapshot_commit,
+        _snapshot_latest,
+        _snapshot_manifest,
+        _snapshot_read,
+    )
+
+    root = _build_snapshot_table(spark, SF_DIR)
+    with open(os.path.join(root, "_latest"), "w") as f:
+        f.write("4")  # a pointer that never landed for v5
+    extra = spark.range(3).selectExpr(
+        "id AS c_custkey", "'x' AS c_name", "0.0 AS c_acctbal", "'LATE' AS c_mktsegment"
+    )
+    _snapshot_commit(spark, root, 5, extra, _snapshot_manifest(root, 4)["files"], "append")
+    assert _snapshot_latest(root) == 5
+    latest = sorted(map(tuple, _snapshot_read(spark, root).collect()))
+    assert latest == sorted(map(tuple, _snapshot_read(spark, root, 5).collect()))
+    assert sum(1 for r in latest if r[3] == "LATE") == 3
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("case", ["ivf_kmeans_delete", "pq_compact", "ivf_kmeans_retrain", "pq_retrain"])
+def test_index_mutation_crash_window(spark, monkeypatch, case):
+    """The ANN index family's one recovery rule, checked on a delete, a
+    compact and both retrains: the mutation is stopped after its data
+    write and before its manifest rename. Then (a) serving answers equal
+    the previous version's exactly — the staged files are invisible; (b)
+    expiry removes the crashed commit's orphans; (c) a re-run converges
+    to the same rows, part by part, as an uninterrupted run on a copy of
+    the pre-crash index; (d) afterwards every data file on disk belongs
+    to the latest version and, for the delete, no member file on disk
+    holds an erased id and no served answer names one."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from userportrait.ops import llm_similarity as L
+    from userportrait.ops.scans import (
+        _snapshot_expire,
+        _snapshot_in_parts,
+        _snapshot_latest,
+        _snapshot_manifest,
+        _snapshot_read,
+    )
+
+    if case.startswith("ivf"):
+        root = L._write_ivf_kmeans_index(spark, SF_DIR, root_name="embeddings_ivf_kmeans_crash")
+        serve, member = (lambda r: L._kmeans_serve(spark, SF_DIR, None, root=r)), "cells"
+    else:
+        root, cutoff = L._pq_append_parts(spark, SF_DIR)
+        L._pq_append_codes(spark, SF_DIR, root, cutoff)
+        serve, member = (lambda r: L._pq_probe_from_root(spark, SF_DIR, r)), "codes"
+    mutate = {
+        "ivf_kmeans_delete": lambda r: L._ivf_kmeans_delete(spark, r),
+        "pq_compact": lambda r: L._pq_compact(spark, r),
+        "ivf_kmeans_retrain": lambda r: L._ivf_kmeans_retrain(spark, r),
+        "pq_retrain": lambda r: L._pq_retrain(spark, SF_DIR, r),
+    }[case]
+
+    def rows(r):
+        parts = {f.split("/")[1] for f in _snapshot_manifest(r)["files"]}
+        return {
+            p: sorted(repr(tuple(x)) for x in _snapshot_read(spark, r, part=p).collect()) for p in parts
+        }
+
+    def live(r):
+        return sorted(os.path.join(r, f) for f in _snapshot_manifest(r)["files"])
+
+    version = _snapshot_latest(root)
+    before = sorted(map(tuple, serve(root).collect()))
+    copy = root + "_uninterrupted"
+    shutil.rmtree(copy, ignore_errors=True)
+    shutil.copytree(root, copy)
+
+    rename = os.rename
+
+    def crash_at_commit(src, dst):
+        if os.path.basename(os.path.dirname(dst)) == "manifests":
+            raise _Crash(dst)
+        return rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_at_commit)
+    with pytest.raises(_Crash):
+        mutate(root)
+    monkeypatch.undo()
+
+    # (a) the data write happened, yet nothing changed for readers
+    assert _snapshot_latest(root) == version
+    assert set(_disk_files(root)) > set(live(root))
+    assert sorted(map(tuple, serve(root).collect())) == before
+    # (b) expiry removes the orphans
+    _snapshot_expire(root, keep_from=version)
+    assert _disk_files(root) == live(root)
+
+    # (c) re-run == uninterrupted run
+    mutate(root)
+    mutate(copy)
+    assert _snapshot_latest(root) == _snapshot_latest(copy) == version + 1
+    assert rows(root) == rows(copy)
+    shutil.rmtree(copy)
+
+    # (d) nothing but the latest version on disk; erased ids gone
+    assert _disk_files(root) == live(root)
+    if case == "ivf_kmeans_delete":
+        erased = {r.vec_id for r in _snapshot_read(spark, root, part="erased").collect()}
+        assert erased
+        in_member = _snapshot_in_parts(member)
+        on_disk = set()
+        for f in _disk_files(root):
+            if in_member(os.path.relpath(f, root)):
+                on_disk |= set(pq.read_table(f, columns=["vec_id"])["vec_id"].to_pylist())
+        assert on_disk and not (on_disk & erased)
+        served = serve(root).collect()
+        assert served and not ({r.neighbor_id for r in served} & erased)
 
 
 def test_snapshot_expire_reclaims_files(spark):
@@ -3405,17 +3197,14 @@ def test_markov_attribution_matches_bruteforce(spark):
     assert abs(fx2["B"][0] - 1.0) < 1e-12
 
 
-@pytest.mark.slow
 def test_ivfpq_append_frozen_models(spark):
     """The composed append's contract (sink_ivfpq_append): base files are
-    never rewritten (byte-identical), every appended vector is reachable
-    in the merged code table, its cell equals the nearest-centroid
-    assignment under the SHIPPED quantizer, and its code equals the
-    direct _pq_encode under the SHIPPED codebooks — both frozen, never
-    retrained."""
-    import glob
+    never rewritten (carried byte-identical), every appended vector is
+    reachable in the merged code table, its cell equals the
+    nearest-centroid assignment under the SHIPPED quantizer, and its code
+    equals the direct _pq_encode under the SHIPPED codebooks — both
+    frozen, never retrained."""
     import hashlib
-    import os
 
     from userportrait.ops.llm_similarity import (
         _ivfpq_append,
@@ -3425,21 +3214,21 @@ def test_ivfpq_append_frozen_models(spark):
         _unit_embeddings,
         _write_ivfpq_index,
     )
+    from userportrait.ops.scans import _snapshot_read
 
     e = load(spark, SF_DIR).embeddings
     cutoff = int(e.agg(F.floor(F.lit(0.8) * F.max("vec_id"))).first()[0])
     root = _write_ivfpq_index(spark, SF_DIR, max_vec_id=cutoff)
-    cells_path = os.path.join(root, "cells")
 
     def file_hashes():
         out = {}
-        for f in glob.glob(os.path.join(cells_path, "cell=*", "*.parquet")):
+        for f in _latest_files(root, "cells"):
             with open(f, "rb") as fh:
                 out[f] = hashlib.md5(fh.read()).hexdigest()
         return out
 
     base_files = file_hashes()
-    cent = spark.read.parquet(os.path.join(root, "centroids"))
+    cent = _snapshot_read(spark, root, part="centroids")
     books = _read_codebooks(spark, root)
     unit = _unit_embeddings(e.where(F.col("vec_id") > cutoff))
     want_cell = {r.vec_id: r.cell for r in _kmeans_assign(unit, cent).collect()}
@@ -3454,7 +3243,7 @@ def test_ivfpq_append_frozen_models(spark):
     post = file_hashes()
     for f, h in base_files.items():
         assert post.get(f) == h, f
-    back = spark.read.parquet(cells_path).where(F.col("vec_id") > cutoff)
+    back = _snapshot_read(spark, root, part="cells").where(F.col("vec_id") > cutoff)
     got = {r.vec_id: (r.cell, r.code) for r in back.select("vec_id", "cell", "code").collect()}
     assert got == {v: (want_cell[v], want_code[v]) for v in want_cell}
 

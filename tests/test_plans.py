@@ -402,8 +402,6 @@ def test_no_unaudited_driver_side_pulls():
             "bounded: <= len(orderings) * min(n, S * binades spanned) grid-cell count rows (<= 4,500 for rfm_scored at perfbench scale)",
         ("llm_similarity.py", "parts = pf.collect()"):
             "bounded: <= #partitions PCA moment rows (d + d^2 doubles each)",
-        ("llm_similarity.py", 'fully = [r.cell for r in touched.join(survivors.select("cell").distinct(), "cell", "left_anti").collect()]  # <= cell-count rows (quantizer metadata)'):
-            "bounded: <= quantizer-cell-count ids — the fully-deleted cells dynamic overwrite cannot clear",
         ("llm_similarity.py", 'probed = [r["cell"] for r in probes.select("cell").distinct().collect()]'):
             "bounded: <= k quantizer-cell ids (metadata, never data volume) — the static partition filter of the serving probe",
         ("streaming.py", 'for r in words.collect():'):
@@ -414,20 +412,18 @@ def test_no_unaudited_driver_side_pulls():
             "bounded: <= BPE_VOCAB_CAP word-count rows, deterministic cap (the PQ-codebook bounded-sample convention)",
         ("llm_text.py", 'merges = [(r.left, r.right) for r in text_bpe_train(spark, sf_dir).collect()]  # 24-row merge table (metadata)'):
             "bounded: <= BPE_MERGES merge-table rows (model metadata for the task closure, never data volume)",
-        ("llm_similarity.py", 'bk = spark.read.parquet(os.path.join(root, "codebooks")).collect()  # PQ_M*PQ_K*PQ_SUBDIM rows (model metadata)'):
+        ("llm_similarity.py", 'bk = _snapshot_read(spark, root, version, "codebooks").collect()  # PQ_M*PQ_K*PQ_SUBDIM rows (model metadata)'):
             "bounded: PQ_M*PQ_K*PQ_SUBDIM = 1024 codebook rows (model metadata, never data volume)",
         ("streaming.py", 'for r in batch_df.collect():  # <= changed-keys rows per trigger (dashboard-sized)'):
             "bounded: update-mode emission = changed (day x type) keys per trigger — key cardinality, never stream volume",
         ("llm_similarity.py", 'erase_ids = [r.vec_id for r in _ivf_kmeans_erasure(back).collect()]  # bounded: <= IVF_ERASE_N erasure-request ids'):
             "bounded: the erasure-request list itself (IVF_ERASE_N ids) — request-sized, never corpus-sized",
-        ("llm_similarity.py", 'touched = [r.cell for r in tsr.select("cell").distinct().collect()]  # bounded: <= IVF_ERASE_N touched-cell ids (quantizer metadata)'):
-            "bounded: <= erasure-list-size touched-cell ids — the static partition filter of the purge",
-        ("llm_similarity.py", 'alive = [r.cell for r in survivors.select("cell").distinct().collect()]  # bounded: <= touched-cell count'):
-            "bounded: <= touched-cell count surviving-cell ids — identifies fully-deleted cells dynamic overwrite cannot clear",
+        ("llm_similarity.py", 'touched = [r.cell for r in erased.select("cell").distinct().collect()]  # bounded: <= quantizer-cell-count touched-cell ids'):
+            "bounded: <= quantizer-cell-count touched-cell ids — the static partition filter of the purge and the cells the new version replaces",
+        ("llm_similarity.py", 'hot_cells = [r.cell for r in hot.collect()]  # bounded: <= quantizer-cell-count hot-cell ids'):
+            "bounded: <= quantizer-cell-count hot-cell ids — the cells the rebalance version replaces",
         ("llm_similarity.py", 'erase_ids = [r.vec_id for r in _ivf_kmeans_erasure(back).collect()]  # bounded: <= IVF_ERASE_N erasure-request ids (one request, every index)'):
             "bounded: the erasure-request list itself (IVF_ERASE_N ids) — request-sized, never corpus-sized",
-        ("llm_similarity.py", 'erase_ids = [r.vec_id for r in spark.read.parquet(ts_path).select("vec_id").collect()]  # bounded: the in-flight erasure request'):
-            "bounded: the committed tombstone manifest = one erasure request — request-sized, never corpus-sized",
         ("curation.py", 'tm = steps.unionAll(direct).groupBy("src", "dst").agg(F.count("*").cast("bigint").alias("n")).collect()  # bounded: <= (#event_types+2)^2 transition-matrix cells (state space, never data volume)'):
             "bounded: the Markov transition matrix — (#channels+2)^2 state-space cells, the model input, never data volume",
         ("llm_similarity.py", 'crows = [(r["cell"], r["c"], r["cnrm"]) for r in cent.select("cell", "c", "cnrm").collect()]  # bounded: <= quantizer-cell-count centroid rows (model metadata)'):
@@ -561,8 +557,8 @@ def test_single_partition_exchanges_are_scalar_or_metadata_only(spark):
         "events_diff_in_diff": "arm×period pivot over the 4-row cell frame (the ab_ttest allowance widened by the period axis)",
         "scan_cdc_changefeed": "1-row epoch-midpoint scalar (version-1 cutoff)",
         "tag_segment_migration": "1-row epoch-midpoint scalar (period split)",
-        "sink_ivf_delete_kmeans": "two 1-row provenance rollup aggregates (survivor + applied-manifest scalars) crossJoined",
-        "sink_pq_delete": "two 1-row provenance rollup aggregates (survivor + applied-manifest scalars) crossJoined",
+        "sink_ivf_delete_kmeans": "two 1-row provenance rollup aggregates (survivor + erasure-record scalars) crossJoined",
+        "sink_pq_delete": "two 1-row provenance rollup aggregates (survivor + erasure-record scalars) crossJoined",
         "sink_snapshot_versioned": "four 1-row per-version rollup aggregates (count+sum scalar per snapshot) unioned",
         "sink_snapshot_expire": "two 1-row surviving-version rollup aggregates (count+sum scalar per snapshot) unioned",
         # The text-family fan-out width is volume-derived
@@ -622,12 +618,6 @@ def test_no_unaudited_broadcast_hints():
             "part dim 2-col projection (standard star-join build side)",
         ("curation.py", "d.crossJoin(F.broadcast(q))"):
             "1-row quantile-scalar frame (length outlier bounds)",
-        ("llm_similarity.py", 'back.join(F.broadcast(touched), "cell")'):
-            "distinct tombstoned cells (<= quantizer cell count — metadata, never data volume)",
-        ("llm_similarity.py", 'return df.join(F.broadcast(live), "vec_id", "left_anti")'):
-            "live tombstone manifest (<= IVF_ERASE_N erasure-request rows — fixed request size by contract, never data volume)",
-        ("streaming.py", '.join(F.broadcast(touched), "cell")'):
-            "distinct appended cells (<= quantizer cell count — metadata, never data volume)",
         ("curation.py", 'daily.join(F.broadcast(m), "event_type")'):
             "per-event-type moments (<= #event_types rows)",
         ("curation.py", 'probes.join(F.broadcast(cells), ["seed", "bucket"])'):
@@ -751,7 +741,7 @@ def test_width_and_session_confs_have_one_owner():
     conf_setters = {
         ("session.py", "apply_session_confs"): "runtime conventions for a driver-provided session",
         ("joins.py", "_bloom_session"): "confs of the private newSession(), not the caller's",
-        ("scans.py", "catalog_analyze_cbo"): "CBO confs saved and restored around one query",
+        ("scans.py", "catalog_analyze_cbo"): "confs of the private newSession(), not the caller's",
         ("streaming.py", "stream_funnel_rocksdb"): "state-store provider saved and restored around one query",
         ("streaming.py", "_replay_conf.__enter__"): "replay width set for one streaming run",
         ("streaming.py", "_replay_conf.__exit__"): "caller's width restored after the run",
@@ -1049,6 +1039,16 @@ def test_ivf_layout_probe_prunes_partitions(spark):
     assert len(dirs) == len(rollup)
 
 
+def _cell_dirs(root):
+    """The cell partition directories the latest index version's files sit in."""
+    import os
+
+    from userportrait.ops.scans import _snapshot_in_parts, _snapshot_manifest
+
+    in_cells = _snapshot_in_parts("cells")
+    return {os.path.dirname(f) for f in _snapshot_manifest(root)["files"] if in_cells(f)}
+
+
 def test_ivf_kmeans_probe_prunes_partitions(spark):
     """The kmeans-quantized serving probe's pruning + losslessness proof
     (the zorder-proof pattern applied to the deployment ANN path): the
@@ -1060,19 +1060,18 @@ def test_ivf_kmeans_probe_prunes_partitions(spark):
     from pyspark.sql import functions as F
 
     from userportrait.ops.llm_similarity import _write_ivf_kmeans_index
+    from userportrait.ops.scans import _snapshot_read
 
     root = _write_ivf_kmeans_index(spark, SF_DIR)
-    back = spark.read.parquet(root + "/cells")
+    back = _snapshot_read(spark, root, part="cells")
     cells = [r["cell"] for r in back.select("cell").distinct().limit(2).collect()]
     q = back.where(F.col("cell").isin(cells))
     plan = q._jdf.queryExecution().executedPlan().toString()
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l][0]
     assert "cell" in pf.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     # partition dirs exist per cell; the filtered read touches only probed ones
-    import glob
-
     n_cells = back.select("cell").distinct().count()
-    assert len(glob.glob(root + "/cells/cell=*")) == n_cells
+    assert len(_cell_dirs(root)) == n_cells
     assert q.select("cell").distinct().count() == len(cells)
 
 
@@ -1174,10 +1173,11 @@ def test_pq_filtered_codes_scan_pushes_lang(spark):
     from pyspark.sql import functions as F
 
     from userportrait.ops.llm_similarity import _FILTERED_LANG, _write_pq_meta_index
+    from userportrait.ops.scans import _snapshot_read
 
     root = _write_pq_meta_index(spark, SF_DIR)
     codes = (
-        spark.read.parquet(root + "/codes")
+        _snapshot_read(spark, root, part="codes")
         .where(F.col("lang") == _FILTERED_LANG)
         .select("vec_id", "code")
     )
@@ -1199,9 +1199,10 @@ def test_ivfpq_probe_prunes_partitions(spark):
     from pyspark.sql import functions as F
 
     from userportrait.ops.llm_similarity import _write_ivfpq_index
+    from userportrait.ops.scans import _snapshot_read
 
     root = _write_ivfpq_index(spark, SF_DIR)
-    back = spark.read.parquet(root + "/cells")
+    back = _snapshot_read(spark, root, part="cells")
     cells = [r["cell"] for r in back.select("cell").distinct().limit(2).collect()]
     q = back.where(F.col("cell").isin(cells))
     plan = q._jdf.queryExecution().executedPlan().toString()
@@ -1210,10 +1211,8 @@ def test_ivfpq_probe_prunes_partitions(spark):
     # the code table is one 8-byte long per vector (+ the lang attribute
     # column for predicate pushdown) — no raw vector column
     assert set(back.columns) == {"vec_id", "code", "lang", "cell"}
-    import glob
-
     n_cells = back.select("cell").distinct().count()
-    assert len(glob.glob(root + "/cells/cell=*")) == n_cells
+    assert len(_cell_dirs(root)) == n_cells
     assert q.select("cell").distinct().count() == len(cells)
 
 

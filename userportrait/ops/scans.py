@@ -858,8 +858,11 @@ def catalog_analyze_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cheap standing job (one scan per table per refresh) that buys
     every downstream query CBO join sizing + reordering for free.
 
-    CBO confs are set for this query and restored after — the other 221
-    ops keep planning under the session defaults."""
+    The query runs on a private ``spark.newSession()`` with the two CBO
+    confs set (the joins._bloom_session pattern): the managed tables and
+    their statistics live in the shared catalog, the confs stay out of the
+    caller's session, and the returned frame is optimized under its own
+    session's confs whenever it executes."""
     t = load(spark, sf_dir)
     base = _scratch("cbo_tables")
     for tbl, df in (("up_cbo_orders", t.orders), ("up_cbo_lineitem", t.lineitem)):
@@ -870,31 +873,19 @@ def catalog_analyze_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
         # next process. External + overwrite is restart-safe.
         df.write.mode("overwrite").option("path", os.path.join(base, tbl)).saveAsTable(tbl)
         spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR ALL COLUMNS")
-    prev = {k: spark.conf.get(k, None) for k in ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")}
-    try:
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-        out = spark.sql(
-            """
-            SELECT l.l_returnflag,
-                   CAST(count(*) AS BIGINT) AS n_lines,
-                   CAST(CAST(sum(CAST(l.l_quantity AS DECIMAL(38,4))) AS STRING) AS DOUBLE) AS sum_qty
-            FROM up_cbo_lineitem l JOIN up_cbo_orders o ON l.l_orderkey = o.o_orderkey
-            WHERE o.o_orderpriority = '1-URGENT'
-            GROUP BY l.l_returnflag
-            """
-        )
-        # materialize UNDER the cbo confs; pin() takes the reliable
-        # .checkpoint() path when a checkpoint dir is configured (ADVICE r9:
-        # a raw localCheckpoint is unrecoverable after executor loss)
-        out = pin(out)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return out
+    cbo = spark.newSession()
+    cbo.conf.set("spark.sql.cbo.enabled", "true")
+    cbo.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+    return cbo.sql(
+        """
+        SELECT l.l_returnflag,
+               CAST(count(*) AS BIGINT) AS n_lines,
+               CAST(CAST(sum(CAST(l.l_quantity AS DECIMAL(38,4))) AS STRING) AS DOUBLE) AS sum_qty
+        FROM up_cbo_lineitem l JOIN up_cbo_orders o ON l.l_orderkey = o.o_orderkey
+        WHERE o.o_orderpriority = '1-URGENT'
+        GROUP BY l.l_returnflag
+        """
+    )
 
 
 @op(
@@ -980,16 +971,22 @@ def scan_cdc_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-expressed on plain parquet, public-design-only (the Iceberg/Delta idea:
 # a table IS a sequence of manifests over immutable data files):
 #
-#   <root>/data/v{N}/part-*.parquet   immutable data files, never rewritten
-#   <root>/manifests/v{N}.json        the snapshot: ordered file list + op
-#   <root>/_latest                    current-version pointer
+#   <root>/data/v{N}/part-*.parquet    immutable data files of a one-part table
+#   <root>/data/<part>/v={N}/...       immutable files of one named part of a
+#                                      multi-part table (an ANN index: cells +
+#                                      centroids, codes + codebooks, ...)
+#   <root>/manifests/v{N}.json         the snapshot: ordered file list + op
 #
 # A commit writes NEW files, then publishes the manifest by tmp-write +
-# os.rename — the single atomic commit point (the _pq_swap_recover rename
-# discipline). A crash before the rename leaves orphan data files that no
-# reader can see; the table stays on the parent snapshot. Readers never
-# list directories — they read exactly the manifest's file set, so
-# concurrent commits can never tear a scan.
+# os.rename — the single atomic commit point. The latest version is the
+# highest published manifest; there is no second pointer to fall out of
+# step with it. A crash before the rename leaves orphan data files that no
+# reader can see; the table stays on the parent snapshot, and expiry
+# removes the orphans. Readers never list directories — they read exactly
+# the manifest's file set, so concurrent commits can never tear a scan.
+# A named part's version directory sits BELOW the part as ``v={N}`` so one
+# scan with basePath ``data/<part>`` reads files carried from several
+# versions and still discovers the part's own partition columns (``cell``).
 
 import glob as _glob
 import json as _json
@@ -999,11 +996,24 @@ def _snapshot_root() -> str:
     return _scratch("snapshot_table")
 
 
+def _snapshot_data_dir(root: str, version: int, part: str | None = None) -> str:
+    if part is None:
+        return os.path.join(root, "data", f"v{version}")
+    return os.path.join(root, "data", part, f"v={version}")
+
+
+def _snapshot_in_parts(*parts: str):
+    """Predicate over manifest (root-relative) paths: the file belongs to
+    one of the named ``parts``."""
+    prefixes = tuple(os.path.join("data", p, "") for p in parts)
+    return lambda f: f.startswith(prefixes)
+
+
 def _snapshot_commit(
     spark: SparkSession,
     root: str,
     version: int,
-    new_data: DataFrame | None,
+    new_data,
     carry_files: list[str],
     op_name: str,
     write_mode: str = "error",
@@ -1011,40 +1021,64 @@ def _snapshot_commit(
     """Run one commit: write ``new_data`` (if any) as the version's
     immutable file set, publish manifest = carry_files + new files via
     the atomic rename. Returns the committed file list (root-relative).
-    ``write_mode="overwrite"`` is the streaming-replay form: a retried
-    micro-batch rewrites ITS OWN data dir and re-renames its manifest —
-    both idempotent, which is what makes a foreachBatch commit
-    exactly-once (stream_snapshot_commits)."""
+    ``new_data`` is a DataFrame (a one-part table) or a dict of part name
+    to DataFrame or DataFrameWriter (a multi-part table; a writer carries
+    its own layout, e.g. ``partitionBy("cell")``).
+    ``write_mode="overwrite"`` is the re-run form: a retried commit
+    rewrites ITS OWN data dirs and re-renames its manifest — both
+    idempotent, which is what makes a foreachBatch commit exactly-once
+    (stream_snapshot_commits) and a crashed index mutation re-runnable."""
     files = list(carry_files)
     if new_data is not None:
-        data_dir = os.path.join(root, "data", f"v{version}")
-        new_data.write.mode(write_mode).parquet(data_dir)
-        files += sorted(
-            os.path.relpath(p, root)
-            for p in _glob.glob(os.path.join(data_dir, "part-*.parquet"))
-        )
+        parts = new_data if isinstance(new_data, dict) else {None: new_data}
+        for part, data in parts.items():
+            data_dir = _snapshot_data_dir(root, version, part)
+            writer = data.write if isinstance(data, DataFrame) else data
+            writer.mode(write_mode).parquet(data_dir)
+            files += sorted(
+                os.path.relpath(p, root)
+                for p in _glob.glob(os.path.join(data_dir, "**", "part-*.parquet"), recursive=True)
+            )
     man_dir = os.path.join(root, "manifests")
     os.makedirs(man_dir, exist_ok=True)
     tmp = os.path.join(man_dir, f".v{version}.json.tmp")
     with open(tmp, "w") as f:
         _json.dump({"version": version, "op": op_name, "files": files}, f)
     os.rename(tmp, os.path.join(man_dir, f"v{version}.json"))  # THE commit point
-    ltmp = os.path.join(root, "._latest.tmp")
-    with open(ltmp, "w") as f:
-        f.write(str(version))
-    os.rename(ltmp, os.path.join(root, "_latest"))
     return files
 
 
-def _snapshot_manifest(root: str, version: int) -> dict:
+def _snapshot_latest(root: str) -> int:
+    """The latest committed version: the highest published manifest (0 when
+    the table has none)."""
+    paths = _glob.glob(os.path.join(root, "manifests", "v*.json"))
+    return max((int(os.path.basename(p)[1:-5]) for p in paths), default=0)
+
+
+def _snapshot_manifest(root: str, version: int | None = None) -> dict:
+    """One version's manifest; ``None`` is the latest committed version."""
+    if version is None:
+        version = _snapshot_latest(root)
     with open(os.path.join(root, "manifests", f"v{version}.json")) as f:
         return _json.load(f)
 
 
-def _snapshot_read(spark: SparkSession, root: str, version: int) -> DataFrame:
-    """Time-travel read: exactly the manifest's file set, nothing listed."""
+def _snapshot_read(
+    spark: SparkSession, root: str, version: int | None = None, part: str | None = None
+) -> DataFrame:
+    """Time-travel read: exactly the manifest's file set, nothing listed.
+    ``version=None`` reads the latest committed version; ``part`` reads one
+    named part, with its partition columns (``cell``) discovered from the
+    paths below ``data/<part>`` and the version column dropped."""
     files = _snapshot_manifest(root, version)["files"]
-    return spark.read.parquet(*[os.path.join(root, f) for f in files])
+    if part is None:
+        return spark.read.parquet(*[os.path.join(root, f) for f in files])
+    in_part = _snapshot_in_parts(part)
+    return (
+        spark.read.option("basePath", os.path.join(root, "data", part))
+        .parquet(*[os.path.join(root, f) for f in files if in_part(f)])
+        .drop("v")
+    )
 
 
 _SNAPSHOT_COLS = ("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
@@ -1207,8 +1241,8 @@ def sink_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _snapshot_expire(root: str, keep_from: int) -> list[str]:
     """Expire snapshots below ``keep_from``; delete every data file not
-    referenced by a surviving manifest. Returns the deleted
-    (root-relative) files.
+    referenced by a surviving manifest, then every data directory left
+    with no data file. Returns the deleted (root-relative) files.
 
     The sweep is computed as DISK FILES − LIVE REFERENCES, not from the
     expired manifests' file lists: after a crash between manifest
@@ -1229,13 +1263,17 @@ def _snapshot_expire(root: str, keep_from: int) -> list[str]:
     for path in _glob.glob(os.path.join(man_dir, "v*.json")):
         with open(path) as f:
             live |= set(_json.load(f)["files"])
+    data_root = os.path.join(root, "data")
     on_disk = {
         os.path.relpath(p, root)
-        for p in _glob.glob(os.path.join(root, "data", "*", "part-*.parquet"))
+        for p in _glob.glob(os.path.join(data_root, "**", "part-*.parquet"), recursive=True)
     }
     dropped = sorted(on_disk - live)
     for rel in dropped:
         os.remove(os.path.join(root, rel))
+    for d, _, _ in os.walk(data_root, topdown=False):
+        if d != data_root and not _glob.glob(os.path.join(d, "**", "part-*.parquet"), recursive=True):
+            shutil.rmtree(d)
     return dropped
 
 
@@ -1341,6 +1379,4 @@ def stream_snapshot_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    with open(os.path.join(root, "_latest")) as f:
-        latest = int(f.read())
-    return _snapshot_read(spark, root, latest)
+    return _snapshot_read(spark, root)

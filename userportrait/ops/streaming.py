@@ -41,8 +41,15 @@ from pyspark.sql import functions as F
 
 from ..catalog import SCHEMAS, path_bytes, width
 from ..registry import op
-from .llm_similarity import _IVF_APPEND_ORACLE, _IVF_KMEANS_PART_ORACLE
-from .scans import _SCD2_HIST_CTE
+from .llm_similarity import (
+    _IVF_APPEND_ORACLE,
+    _IVF_KMEANS_PART_ORACLE,
+    _by_cell,
+    _by_range,
+    _cell_files,
+    _index_commit,
+)
+from .scans import _SCD2_HIST_CTE, _snapshot_in_parts, _snapshot_latest, _snapshot_manifest, _snapshot_read
 
 _STAGE_ROOT = "/tmp/userportrait_streaming"
 _NS = 1_000_000_000
@@ -1654,45 +1661,48 @@ def _stage_vector_feed(sf_dir: str) -> tuple[str, int]:
     return out, cut
 
 
-def _run_stream_ivf_ingest(spark: SparkSession, sf_dir: str):
-    """Stage the vector feed, build the base index + FROZEN quantizer
-    (_ivf_append_parts), and replay the feed through the per-batch-dir
-    streaming ingest. Returns (path, cutoff, cent, batches_root). Shared
-    by stream_ivf_append (rollup of the base ∪ batch-dirs serving view)
-    and sink_ivf_compact (the maintenance verb that folds the batch dirs
-    back into the base cell partitions)."""
-    from .llm_similarity import _ivf_append_parts, ivf_assign
-
-    feed_dir, _cut = _stage_vector_feed(sf_dir)
-    path, cutoff, cent = _ivf_append_parts(spark, sf_dir)
-    batches_root = path + "_batches"
-    shutil.rmtree(batches_root, ignore_errors=True)
-    chk = batches_root + "_chk"
-    shutil.rmtree(chk, ignore_errors=True)
+def _ingest_vector_feed(spark: SparkSession, feed_dir: str, root: str, batch_parts) -> None:
+    """Replay the staged vector feed (maxFilesPerTrigger=1) into the index
+    at ``root``: micro-batch ``b`` commits version ``b + 2`` (the build is
+    version 1) holding ``batch_parts(batch_df)`` as new files. A replayed
+    batch whose version is already committed is skipped, and one whose
+    commit crashed re-writes its own version — exactly-once, where a blind
+    ``mode("append")`` would double vectors on retry."""
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        assigned = batch_df.join(ivf_assign(batch_df, cent), "vec_id").select(
-            "vec_id", "embedding", "cell"
-        )
-        (
-            assigned.repartition("cell")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(os.path.join(batches_root, f"batch_id={batch_id}"))
-        )
+        if _snapshot_latest(root) == batch_id + 1:
+            _index_commit(spark, root, "stream-append", batch_parts(batch_df))
 
     src = spark.readStream.schema(SCHEMAS["embeddings"]).option(
         "maxFilesPerTrigger", 1
     ).parquet(feed_dir)
     q = (
         src.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", chk)
+        .option("checkpointLocation", os.path.join(root, "_chk"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return path, cutoff, cent, batches_root
+
+
+def _run_stream_ivf_ingest(spark: SparkSession, sf_dir: str):
+    """Stage the vector feed, build the base index + FROZEN quantizer
+    (_ivf_append_parts), and replay the feed into it, one committed index
+    version per micro-batch. Returns (root, cutoff, cent). Shared by
+    stream_ivf_append (rollup of the latest version) and sink_ivf_compact
+    (the maintenance verb that folds the streamed files into one file per
+    cell)."""
+    from .llm_similarity import _ivf_append_parts, ivf_assign
+
+    feed_dir, _cut = _stage_vector_feed(sf_dir)
+    root, cutoff, cent = _ivf_append_parts(spark, sf_dir)
+    _ingest_vector_feed(
+        spark,
+        feed_dir,
+        root,
+        lambda b: {"cells": _by_cell(b.join(ivf_assign(b, cent), "vec_id").select("vec_id", "embedding", "cell"))},
+    )
+    return root, cutoff, cent
 
 
 @op("stream_ivf_append", oracle=_IVF_APPEND_ORACLE)
@@ -1702,23 +1712,18 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     and its FROZEN quantizer are built once (the _ivf_append_parts
     build), then each micro-batch of new vectors (2 staged chunks,
     maxFilesPerTrigger=1) is assigned to its nearest existing cell and
-    written to a PER-BATCH directory (``append_batches/batch_id=N``,
-    mode overwrite) — per-batch overwrite is what makes micro-batch
-    replay exactly-once where a blind ``mode(append)`` would double
-    vectors on retry. The serving view is base ∪ batch dirs; the final
-    rollup equals sink_ivf_append's batch form (same oracle text):
-    streaming ingest converges to the batch append.
+    committed as one index version (_ingest_vector_feed — exactly-once
+    under replay). Serving reads the latest version; the final rollup
+    equals sink_ivf_append's batch form (same oracle text): streaming
+    ingest converges to the batch append.
 
     At 100 TB this is the online half of the index lifecycle: build
     (sink_ivf_layout) / batch append (sink_ivf_append) / STREAMING
     append (this) / compaction (sink_ivf_compact) / rebalance
     (sink_ivf_rebalance) — each batch costs O(batch × k) assignment work
     against a broadcast quantizer and touches no base data."""
-    path, cutoff, _cent, batches_root = _run_stream_ivf_ingest(spark, sf_dir)
-
-    base = spark.read.parquet(path).select("vec_id", "cell")
-    appended = spark.read.parquet(batches_root).select("vec_id", "cell")
-    back = base.unionByName(appended)
+    root, cutoff, _cent = _run_stream_ivf_ingest(spark, sf_dir)
+    back = _snapshot_read(spark, root, part="cells")
     return back.groupBy(F.col("cell").cast("bigint").alias("cell")).agg(
         F.count("*").cast("bigint").alias("n_vecs"),
         F.sum(F.when(F.col("vec_id") <= cutoff, 1).otherwise(0)).cast("bigint").alias("n_base"),
@@ -1730,14 +1735,13 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _run_stream_ivf_kmeans_ingest(spark: SparkSession, sf_dir: str):
     """The kmeans twin of _run_stream_ivf_ingest: build the base
     DEPLOYMENT index (quantizer trained on the <=cutoff prefix only,
-    shipped next to the cells), then replay the staged vector feed
-    through the per-batch-dir ingest — each micro-batch unit-normalized
-    and assigned through the same _kmeans_assign body the build uses,
-    against centroids read BACK FROM THE INDEX (frozen), with lang
-    riding next to each member (the kmeans cell layout). Per-batch
-    overwrite dirs make replay exactly-once, exactly as on the label
-    index. Returns (root, cutoff, batches_root). Shared by
-    stream_ivf_append_kmeans and sink_ivf_compact_kmeans."""
+    shipped next to the cells), then replay the staged vector feed into
+    it — each micro-batch unit-normalized and assigned through the same
+    _kmeans_assign body the build uses, against centroids read BACK FROM
+    THE INDEX (frozen), with lang riding next to each member (the kmeans
+    cell layout), and committed as one index version. Returns (root,
+    cutoff). Shared by stream_ivf_append_kmeans and
+    sink_ivf_compact_kmeans."""
     from ..catalog import load
     from .llm_similarity import (
         _join_doc_meta_1to1,
@@ -1750,37 +1754,16 @@ def _run_stream_ivf_kmeans_ingest(spark: SparkSession, sf_dir: str):
     root = _write_ivf_kmeans_index(
         spark, sf_dir, max_vec_id=cutoff, root_name="embeddings_ivf_kmeans_stream"
     )
-    cells_path = os.path.join(root, "cells")
-    cent = spark.read.parquet(os.path.join(root, "centroids"))  # frozen: the shipped quantizer
+    cent = _snapshot_read(spark, root, part="centroids")  # frozen: the shipped quantizer
     docs = load(spark, sf_dir).documents
-    batches_root = cells_path + "_batches"
-    shutil.rmtree(batches_root, ignore_errors=True)
-    chk = batches_root + "_chk"
-    shutil.rmtree(chk, ignore_errors=True)
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def batch_cells(batch_df: DataFrame) -> dict:
         assigned = _kmeans_assign(_unit_embeddings(batch_df), cent)
-        (
-            _join_doc_meta_1to1(assigned, docs, ["lang"])
-            .select("vec_id", "u", "lang", "cell")
-            .repartition("cell")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(os.path.join(batches_root, f"batch_id={batch_id}"))
-        )
+        members = _join_doc_meta_1to1(assigned, docs, ["lang"]).select("vec_id", "u", "lang", "cell")
+        return {"cells": _by_cell(members)}
 
-    src = spark.readStream.schema(SCHEMAS["embeddings"]).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(feed_dir)
-    q = (
-        src.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return root, cutoff, batches_root
+    _ingest_vector_feed(spark, feed_dir, root, batch_cells)
+    return root, cutoff
 
 
 @op("stream_ivf_append_kmeans", oracle=_IVF_KMEANS_PART_ORACLE)
@@ -1790,130 +1773,71 @@ def stream_ivf_append_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually runs (label-index sibling: stream_ivf_append): micro-batches
     of new vectors are assigned to EXISTING cells of the frozen
     base-trained quantizer — inside foreachBatch, through the same
-    _kmeans_assign body the build uses — and land in per-batch overwrite
-    directories, exactly-once under replay where blind append would
-    double vectors; the serving view is base ∪ batch dirs.
+    _kmeans_assign body the build uses — and each lands as one committed
+    index version, exactly-once under replay where blind append would
+    double vectors; serving reads the latest version.
 
     Graded EXACT as the quantizer-independent per-part provenance rollup
-    over that serving view (the sink_ivf_append_kmeans oracle verbatim —
+    over that version (the sink_ivf_append_kmeans oracle verbatim —
     streaming ingest converges to the batch append, the same claim the
-    label pair makes with ITS shared oracle). Per-batch-dir layout and
+    label pair makes with ITS shared oracle). One version per batch and
     fold losslessness are pinned by
     tests/test_invariants.py::test_stream_ivf_kmeans_fold_lossless."""
-    root, cutoff, batches_root = _run_stream_ivf_kmeans_ingest(spark, sf_dir)
+    root, cutoff = _run_stream_ivf_kmeans_ingest(spark, sf_dir)
     from .llm_similarity import _ivf_kmeans_part_rollup
 
-    base = spark.read.parquet(os.path.join(root, "cells")).select("vec_id", "cell")
-    appended = spark.read.parquet(batches_root).select("vec_id", "cell")
-    return _ivf_kmeans_part_rollup(base.unionByName(appended), cutoff)
+    return _ivf_kmeans_part_rollup(_snapshot_read(spark, root, part="cells"), cutoff)
 
 
 @op("sink_ivf_compact_kmeans", oracle=_IVF_KMEANS_PART_ORACLE)
 def sink_ivf_compact_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPACTION on the DEPLOYMENT index — folds
-    stream_ivf_append_kmeans's accumulated per-batch overwrite dirs into
-    the base cell partitions through the SAME ivf_fold_batches body the
-    label compact uses (member_cols parameterizes the kmeans layout:
-    vec_id, u, lang), rewriting only touched cells via dynamic partition
-    overwrite and retiring the batch dirs move-aside-first. Completes the
-    kmeans lifecycle: build / serve / filtered-serve / batch append /
+    """COMPACTION on the DEPLOYMENT index — folds the files
+    stream_ivf_append_kmeans's micro-batches committed into one file per
+    cell through the SAME ivf_fold_fragmented_cells body the label compact
+    uses (member_cols parameterizes the payload: vec_id, u, lang),
+    rewriting only fragmented cells as the next index version. Completes
+    the kmeans lifecycle: build / serve / filtered-serve / batch append /
     streaming append / COMPACT / delete.
 
-    Graded EXACT as the post-fold per-part rollup over the BASE ONLY —
-    the fold is lossless, so the single-layout readback must equal the
-    full-corpus split the oracle computes (the sink_ivf_compact
-    discipline: reading only the base against the append oracle IS the
-    losslessness claim). Member-row preservation through the fold is
-    pinned by tests/test_invariants.py::test_stream_ivf_kmeans_fold_lossless.
-
-    The verb runs BOTH fold passes a deployment accumulates fragmentation
-    from: the per-batch overwrite dirs of the streaming ingest
-    (ivf_fold_batches) and the in-place mode("append") files of batch
-    appends (ivf_fold_fragmented_cells — a no-op in this op's
-    streaming-only scenario; the batch-append case is pinned by
-    tests/test_invariants.py::test_ivf_kmeans_batch_append_fold)."""
-    root, cutoff, batches_root = _run_stream_ivf_kmeans_ingest(spark, sf_dir)
-    cells_path = os.path.join(root, "cells")
-    ivf_fold_batches(spark, cells_path, batches_root, member_cols=("vec_id", "u", "lang"))
-    ivf_fold_fragmented_cells(spark, cells_path)
+    Graded EXACT as the post-fold per-part rollup — the fold is lossless,
+    so the folded version must equal the full-corpus split the oracle
+    computes. Member-row preservation through the fold is pinned by
+    tests/test_invariants.py::test_stream_ivf_kmeans_fold_lossless; the
+    batch-append case (one version per append, same fold) by
+    tests/test_invariants.py::test_ivf_kmeans_batch_append_fold."""
+    root, cutoff = _run_stream_ivf_kmeans_ingest(spark, sf_dir)
+    ivf_fold_fragmented_cells(spark, root)
     from .llm_similarity import _ivf_kmeans_part_rollup
 
-    return _ivf_kmeans_part_rollup(spark.read.parquet(cells_path), cutoff)
-
-
-def ivf_fold_batches(
-    spark: SparkSession, path: str, batches_root: str, member_cols: tuple[str, ...] = ("vec_id", "embedding")
-) -> None:
-    """The fold body of sink_ivf_compact, factored so the scale ladder
-    (scripts/ivf_compact_ladder.py) drives it against an arbitrary batch
-    fan-out: rewrite ONLY the touched cells (base ∪ batch members, pinned
-    to break the read-overwrite cycle) via dynamic partition overwrite,
-    then retire the batch dirs move-aside-first. ``member_cols``
-    parameterizes the member payload so the kmeans layout (vec_id, u,
-    lang) folds through the same body as the label layout — the fold
-    discipline lives once."""
-    from ..catalog import pin
-
-    cols = [*member_cols, "cell"]
-    batches = spark.read.parquet(batches_root).select(*cols)
-    touched = batches.select("cell").distinct()
-    base_touched = (
-        spark.read.parquet(path)
-        .join(F.broadcast(touched), "cell")
-        .select(*cols)
-    )
-    merged = pin(base_touched.unionByName(batches))
-
-    (
-        merged.repartition("cell")
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-
-    retired = batches_root + "_retired"
-    shutil.rmtree(retired, ignore_errors=True)
-    os.rename(batches_root, retired)
-    shutil.rmtree(retired)
+    return _ivf_kmeans_part_rollup(_snapshot_read(spark, root, part="cells"), cutoff)
 
 
 def ivf_fold_fragmented_cells(
-    spark: SparkSession, path: str, member_cols: tuple[str, ...] = ("vec_id", "u", "lang")
+    spark: SparkSession, root: str, member_cols: tuple[str, ...] = ("vec_id", "u", "lang")
 ) -> int:
-    """The OTHER small-file fold the compact verb owes: batch appends
-    (sink_ivf_append_kmeans, sink_ivf_append) write ``mode("append")``
-    INSIDE existing cell directories — one new file per append per
-    touched cell, a fragmentation source ivf_fold_batches never
-    sees because it folds per-batch OVERWRITE dirs, not in-place files.
-    This pass lists the cell directories (bounded: ≤ quantizer cell count
-    — metadata, never data volume), picks the FRAGMENTED ones (>1 data
-    file), and rewrites only those via dynamic partition overwrite —
-    O(mass in fragmented cells); single-file cells are never read or
-    rewritten. Returns the number of cells folded."""
-    import glob as _glob
+    """The small-file fold the compact verbs owe: every append — batch
+    (sink_ivf_append_kmeans, sink_ivf_append) or streamed micro-batch —
+    commits one new file per touched cell, so a cell's file count grows
+    with the appends it received. This pass counts each cell's files in
+    the latest manifest (metadata: ≤ quantizer cell count entries, no
+    directory listing), picks the FRAGMENTED cells (>1 data file), and
+    commits one rewritten file per such cell as the next index version —
+    O(mass in fragmented cells); single-file cells' files carry over,
+    never read or rewritten. ``member_cols`` is the member payload, so
+    the label layout (vec_id, embedding) and the kmeans layout (vec_id,
+    u, lang) fold through one body. Returns the number of cells folded.
+    scripts/ivf_compact_ladder.py drives it against an arbitrary batch
+    fan-out."""
+    from collections import Counter
 
-    from ..catalog import pin
-
-    frag = [
-        int(os.path.basename(d).split("=", 1)[1])
-        for d in _glob.glob(os.path.join(path, "cell=*"))
-        if len(_glob.glob(os.path.join(d, "*.parquet"))) > 1
-    ]
+    files = [f for f in _snapshot_manifest(root)["files"] if _snapshot_in_parts("cells")(f)]
+    per_cell = Counter(int(f.split("/cell=", 1)[1].split("/", 1)[0]) for f in files)
+    frag = sorted(c for c, n in per_cell.items() if n > 1)
     if not frag:
         return 0
-    cols = [*member_cols, "cell"]
-    merged = pin(
-        spark.read.parquet(path).where(F.col("cell").isin(frag)).select(*cols)
-    )
-    (
-        merged.repartition("cell")
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(path)
+    merged = _snapshot_read(spark, root, part="cells").where(F.col("cell").isin(frag))
+    _index_commit(
+        spark, root, "fold", {"cells": _by_cell(merged.select(*member_cols, "cell"))}, drop=_cell_files(frag)
     )
     return len(frag)
 
@@ -1921,35 +1845,30 @@ def ivf_fold_fragmented_cells(
 @op("sink_ivf_compact", oracle=_IVF_APPEND_ORACLE)
 def sink_ivf_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN index COMPACTION — the maintenance verb the streaming append
-    creates a need for (r11 VERDICT missing #1): stream_ivf_append writes
-    one overwrite directory per micro-batch for exactly-once replay, so
-    after a week of triggers the serving view is base ∪ N batch dirs — a
-    small-file fan-out on every probe (the vector-index version of the
-    problem sink_compact_small_files solves for plain tables). This op
-    folds the settled batch dirs into the base cell partitions and
-    retires them, returning serving to a single-layout read.
+    creates a need for: stream_ivf_append commits one version per
+    micro-batch, each adding one file per touched cell, so after a week
+    of triggers every probe opens a small-file fan-out (the vector-index
+    version of the problem sink_compact_small_files solves for plain
+    tables). This op folds each fragmented cell back into one file,
+    returning serving to a single-file-per-cell read.
 
     Mechanics: replay the streaming ingest (shared _run_stream_ivf_ingest
-    state), read the batch members, and rewrite ONLY the touched cells
-    via dynamic partition overwrite — each touched cell's new partition
-    is its base members ∪ its batch members, pinned (materialized) before
-    the write so Spark is not overwriting a path it is reading. Untouched
-    cells' files are never rewritten: the pass costs O(mass in touched
-    cells), not O(corpus). Batch dirs are then retired with the SCD2
-    move-aside-then-delete convention. Single-writer topology; a
-    concurrent-reader deployment flips a manifest from 'base ∪ batches'
-    to 'base' at the commit point instead (same fold body).
+    state), then ivf_fold_fragmented_cells: the cells with more than one
+    file in the latest manifest are rewritten, each to one file, and
+    committed as the next index version; every other cell's file carries
+    over, never rewritten — the pass costs O(mass in fragmented cells),
+    not O(corpus), and expiry removes the folded files.
 
-    The rollup reads back the BASE ONLY — equality with the append
-    oracle (same text as sink_ivf_append / stream_ivf_append) IS the
-    claim: after compaction the base alone carries every vector, per
-    cell, with an exact vec_id checksum. File collapse (touched cells
-    end at one file; the batch fan-out is gone) and probe agreement
-    (serving answers bit-identical before/after the fold) are pinned by
+    The rollup reads the folded version — equality with the append oracle
+    (same text as sink_ivf_append / stream_ivf_append) IS the claim:
+    after compaction each cell's single file carries every vector, with
+    an exact vec_id checksum. File collapse (touched cells end at one
+    file) and probe agreement (serving answers bit-identical before/after
+    the fold) are pinned by
     tests/test_invariants.py::test_ivf_compact_collapses_files_and_preserves_probes."""
-    path, cutoff, _cent, batches_root = _run_stream_ivf_ingest(spark, sf_dir)
-    ivf_fold_batches(spark, path, batches_root)
-    back = spark.read.parquet(path)
+    root, cutoff, _cent = _run_stream_ivf_ingest(spark, sf_dir)
+    ivf_fold_fragmented_cells(spark, root, member_cols=("vec_id", "embedding"))
+    back = _snapshot_read(spark, root, part="cells")
     return back.groupBy(F.col("cell").cast("bigint").alias("cell")).agg(
         F.count("*").cast("bigint").alias("n_vecs"),
         F.sum(F.when(F.col("vec_id") <= cutoff, 1).otherwise(0)).cast("bigint").alias("n_base"),
@@ -1961,12 +1880,11 @@ def sink_ivf_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _run_stream_pq_ingest(spark: SparkSession, sf_dir: str):
     """The PQ twin of _run_stream_ivf_ingest: build the BASE PQ index
     (codebooks trained on the <=cutoff prefix — _pq_append_parts), then
-    replay the staged vector feed through foreachBatch — each micro-batch
-    unit-normalized and ENCODED WITH THE FROZEN CODEBOOKS READ BACK FROM
-    THE INDEX (_read_codebooks: the encoder a fresh process runs is the
-    persisted quantizer, never a retrain), landing in per-batch overwrite
-    directories for exactly-once replay. Returns (root, cutoff,
-    batches_root); the serving view is base codes ∪ batch dirs."""
+    replay the staged vector feed into it — each micro-batch
+    unit-normalized, ENCODED WITH THE FROZEN CODEBOOKS READ BACK FROM THE
+    INDEX (_read_codebooks: the encoder a fresh process runs is the
+    persisted quantizer, never a retrain), and committed as one index
+    version. Returns (root, cutoff); serving reads the latest version."""
     from .llm_similarity import (
         _pq_append_parts,
         _pq_encode,
@@ -1977,61 +1895,39 @@ def _run_stream_pq_ingest(spark: SparkSession, sf_dir: str):
     feed_dir, _cut = _stage_vector_feed(sf_dir)
     root, cutoff = _pq_append_parts(spark, sf_dir)
     books = _read_codebooks(spark, root)
-    batches_root = os.path.join(root, "codes_batches")
-    shutil.rmtree(batches_root, ignore_errors=True)
-    chk = batches_root + "_chk"
-    shutil.rmtree(chk, ignore_errors=True)
-
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            _unit_embeddings(batch_df)
-            .mapInPandas(_pq_encode(books), "vec_id long, code long")
-            .repartitionByRange(2, "vec_id")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(batches_root, f"batch_id={batch_id}"))
-        )
-
-    src = spark.readStream.schema(SCHEMAS["embeddings"]).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(feed_dir)
-    q = (
-        src.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
+    _ingest_vector_feed(
+        spark,
+        feed_dir,
+        root,
+        lambda b: {"codes": _by_range(_unit_embeddings(b).mapInPandas(_pq_encode(books), "vec_id long, code long"), 2)},
     )
-    q.awaitTermination()
-    return root, cutoff, batches_root
+    return root, cutoff
 
 
 @op("stream_pq_append", oracle=_IVF_KMEANS_PART_ORACLE)
 def stream_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING encode into the COMPRESSED serving layout — the missing
-    streaming half of the PQ lifecycle (VERDICT r13 missing #2; the IVF
-    index has both append halves, the PQ side had only batch verbs): a
-    crawl that streams embeddings into the 8 B/vector code table encodes
-    each micro-batch with the frozen persisted codebooks inside
-    foreachBatch (one Arrow mapInPandas pass per batch — O(batch), base
-    code files and codebooks never touched) and lands it in a per-batch
-    overwrite directory, exactly-once under micro-batch replay where a
-    blind mode(append) would double codes on retry. Serving is base ∪
-    batch dirs; the append-cadence sink_pq_compact fold returns it to
-    clean range partitions.
+    """STREAMING encode into the COMPRESSED serving layout — the
+    streaming half of the PQ lifecycle (the IVF index has both append
+    halves): a crawl that streams embeddings into the 8 B/vector code
+    table encodes each micro-batch with the frozen persisted codebooks
+    inside foreachBatch (one Arrow mapInPandas pass per batch — O(batch),
+    base code files and codebooks never touched) and commits it as one
+    index version, exactly-once under micro-batch replay where a blind
+    mode(append) would double codes on retry. Serving reads the latest
+    version; the append-cadence sink_pq_compact returns it to clean
+    range partitions.
 
-    Graded EXACT as the per-part provenance rollup over that serving view
-    — the sink_pq_append oracle verbatim (the shared-oracle discipline:
+    Graded EXACT as the per-part provenance rollup over that version —
+    the sink_pq_append oracle verbatim (the shared-oracle discipline:
     streaming ingest converges to the batch append; _IVF_KMEANS_PART_ORACLE
     is that same text, shared across the whole maintenance family).
-    Frozen-book bit-identity of streamed codes, the per-batch-dir layout,
+    Frozen-book bit-identity of streamed codes, one version per batch,
     and ADC reachability of streamed vectors are pinned by
     tests/test_invariants.py::test_stream_pq_append_frozen_books_and_adc_reachability."""
     from .llm_similarity import _ivf_kmeans_part_rollup
 
-    root, cutoff, batches_root = _run_stream_pq_ingest(spark, sf_dir)
-    base = spark.read.parquet(os.path.join(root, "codes")).select("vec_id")
-    streamed = spark.read.parquet(batches_root).select("vec_id")
-    return _ivf_kmeans_part_rollup(base.unionByName(streamed), cutoff)
+    root, cutoff = _run_stream_pq_ingest(spark, sf_dir)
+    return _ivf_kmeans_part_rollup(_snapshot_read(spark, root, part="codes"), cutoff)
 
 
 @op(
